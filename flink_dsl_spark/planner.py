@@ -30,6 +30,7 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from .ast_nodes import (
     Between, BinOp, Case, Cast, Col, CreateSchema, CreateStream, Delete,
@@ -39,7 +40,7 @@ from .ast_nodes import (
     Subscript,
     Select, SelectItem, SetOp, Star, TableRef, UnOp, Update, WindowFunc,
     null_treatment_error,
-    WindowSpec, relation_leaves, walk_expr,
+    WindowSpec, expr_children, relation_leaves, walk_expr,
     visible_leaves,
 )
 from .errors import PlanError, UnsupportedError
@@ -1638,15 +1639,15 @@ class Planner:
                 every=float(spec.every.value),
                 delta_col=spec.size.on_col.name)
             win_col = "trigger"
-        for alias in count_aliases:
-            out = out.withColumn(alias, F.col(alias).cast("long"))
 
         def compile_post(e) -> Column:
             """Compile an item/having expression over the stateful output:
-            agg calls -> their output columns; Cols must be keys."""
+            agg calls -> their output columns (counts cast to long);
+            Cols must be keys."""
             a = call_alias.get(id(e))
             if a is not None:
-                return F.col(a)
+                return F.col(a).cast("long") if a in count_aliases \
+                    else F.col(a)
             if isinstance(e, Col):
                 if e.name not in keys:
                     raise PlanError(
@@ -2419,9 +2420,12 @@ class Planner:
         state: the last row's order key + one scalar per spec),
         PARTITION BY and ascending ORDER BY keys that are plain
         columns OR expressions (r11 — an expression key compiles to a
-        hidden computed column before the stateful pass, dropped
-        after; structurally equal expressions share one hidden column
-        so the one-spec rule still holds).  lag / first_value /
+        hidden computed column before the stateful pass, never
+        projected; structurally equal expressions share one hidden column
+        so the one-spec rule still holds; a TimestampType ORDER BY
+        column travels the same way, as its ``unix_micros`` int64,
+        which orders identically and skips the per-key tz-aware
+        timestamp conversion).  lag / first_value /
         last_value / nth_value accept ``IGNORE NULLS`` (r11): the
         state then tracks non-null values (last k non-nulls / first
         non-null / most recent non-null / first n non-nulls) at the
@@ -2434,7 +2438,12 @@ class Planner:
 
         Scale shape: ONE keyed state shuffle (the applyInPandasWithState
         exchange); state per key is O(1) scalars, independent of
-        stream length.  Substitutions land in ``_stream_wf_cols`` so
+        stream length.  The pass ships only the columns it or the rest
+        of the query reads — keys, order keys, window-function inputs,
+        hidden columns, and the columns the SELECT, QUALIFY and ORDER
+        BY reference outside window functions (all of them under
+        ``SELECT *``): the per-key Arrow round trip grows with every
+        column sent.  Substitutions land in ``_stream_wf_cols`` so
         the normal projection compile picks the computed columns up."""
         from .streaming import running_agg
 
@@ -2456,19 +2465,26 @@ class Planner:
 
         def key_col(x, what):
             """Resolve a PARTITION BY / ORDER BY key: a plain column
-            by name, any other expression via a hidden computed
+            by name, any other expression — and a TimestampType ORDER
+            BY column, as ``unix_micros`` — via a hidden computed
             column.  Structurally equal expressions (dataclass
             equality) share one hidden column, so the same expression
             written in two OVER clauses still resolves to ONE spec —
             the spec-sharing rule compares resolved names."""
+            dedup, expr = x, x
             if isinstance(x, Col):
-                return plain_col(x, what)
+                name = plain_col(x, what)
+                if what != "ORDER BY" or not isinstance(
+                        df.schema[name].dataType, TimestampType):
+                    return name
+                dedup, expr = ("unix_micros", name), \
+                    F.unix_micros(F.col(name))
             for prev, name in expr_keys:
-                if prev == x:
+                if prev == dedup:
                     return name
             name = _fresh(f"__rw_key{len(expr_keys)}")
-            expr_keys.append((x, name))
-            hidden.append((name, x))
+            expr_keys.append((dedup, name))
+            hidden.append((name, expr))
             return name
 
         # the stateful exchange erases the FROM leaves' binding
@@ -2490,8 +2506,7 @@ class Planner:
         ranks: list[tuple] = []      # (kind, alias)
         lasts: list[tuple] = []      # (col, alias) — IGNORE NULLS only
         rownum_casts: list[str] = []        # long outputs -> int
-        hidden: list[tuple] = []            # (name, Expr) inputs to add
-        hidden_keep: set = set()            # hidden cols that ARE outputs
+        hidden: list[tuple] = []  # (name, Expr | Column) inputs to add
         wf_map: dict[int, str] = {}         # installed only on success
 
         # bookkeeping names must not shadow a stream column — a user
@@ -2511,7 +2526,7 @@ class Planner:
 
         def _input_col(arg, what: str, i: int) -> str:
             """Resolve a window function's input: a plain column by
-            name, anything else via a kept-hidden computed column."""
+            name, anything else via a hidden computed column."""
             if isinstance(arg, Col):
                 return plain_col(arg, what)
             name = _fresh(f"__rw_in{i}")
@@ -2674,7 +2689,7 @@ class Planner:
                     continue
                 # over the running ROWS frame, last_value(x) IS the
                 # current row's x — no state needed: map the window
-                # function at the input column (or a kept hidden
+                # function at the input column (or a hidden
                 # column for expressions)
                 if isinstance(args[0], Col):
                     wf_map[id(e)] = plain_col(args[0],
@@ -2682,7 +2697,6 @@ class Planner:
                 else:
                     out_name = _fresh(f"__rw_out{i}")
                     hidden.append((out_name, args[0]))
-                    hidden_keep.add(out_name)
                     wf_map[id(e)] = out_name
                 continue
             if args and isinstance(args[0], Star):
@@ -2698,21 +2712,36 @@ class Planner:
             aggs.append((name, in_col, out_name))
             wf_map[id(e)] = out_name
 
-        for h, expr in hidden:
-            df = df.withColumn(h, self._compile(expr, df))
+        hidden_cols = [(expr if isinstance(expr, Column)
+                        else self._compile(expr, df)).alias(h)
+                       for h, expr in hidden]
         stateful = bool(aggs or offsets or firsts or nths or ranks
                         or lasts)
+        if stateful and not any(isinstance(item.expr, Star)
+                                for item in sel.items):
+            used = {c.lower() for c in _cols_outside_windows(
+                [item.expr for item in sel.items] + [sel.qualify]
+                + [o.expr for o in sel.order_by])}
+            used.update(c.lower() for c in (
+                *spec0[0], *spec0[1], *wf_map.values(),
+                *(c for _f, c, _a in aggs if c is not None),
+                *(x[0] for x in offsets + firsts + nths + lasts)))
+            df = df.select(*[F.col("`" + c.replace("`", "``") + "`")
+                             for c in df.columns if c.lower() in used],
+                           *hidden_cols)
+        elif hidden_cols:
+            df = df.select("*", *hidden_cols)
         if stateful:
             out = running_agg(df, list(spec0[0]), aggs, list(spec0[1]),
                               offsets=offsets, firsts=firsts,
                               nths=nths, ranks=ranks, lasts=lasts)
         else:
             # pure last_value select: every window function compiled
-            # to an existing (or kept-hidden) column — no stateful
+            # to an existing (or hidden) column — no stateful
             # pass at all
             out = df
-        out = out.drop(*[h for h, _ in hidden
-                         if h not in hidden_keep])
+        # hidden columns stay on `out`: the projection names its
+        # columns (star expands the leaf's own), so none leaks out
         for rc in rownum_casts:
             out = out.withColumn(rc, F.col(rc).cast("int"))
         # restore the single leaf's binding so the projection's
@@ -3134,6 +3163,20 @@ def _valid_weight(wv) -> bool:
     (NaN sorts greatest in Spark, least(1.0, NaN) = 1.0); inf
     collapses the feasible total to 0."""
     return wv is not None and math.isfinite(wv) and wv > 0
+
+
+def _cols_outside_windows(exprs):
+    """Names of the columns the expressions reference outside window
+    functions (a window function's own args and keys are consumed by
+    the stateful pass)."""
+    stack = [e for e in exprs if e is not None]
+    while stack:
+        e = stack.pop()
+        if isinstance(e, WindowFunc):
+            continue
+        if isinstance(e, Col):
+            yield e.name
+        stack.extend(expr_children(e))
 
 
 def _plain_literal(e):

@@ -1,4 +1,5 @@
-"""Streaming-native COUNT-axis windows via ``applyInPandasWithState``.
+"""Streaming-native COUNT/DELTA windows and running OVER aggregates via
+``applyInPandasWithState``.
 
 Batch mode emulates FSQL count windows with ``row_number`` (windows.py);
 a streaming DataFrame forbids rank functions, so the streaming path keeps
@@ -23,24 +24,44 @@ from sum/count.  State per (key, agg-col) is a bounded float buffer of
 the last N values (a few KB at typical sizes), kept in the state store
 across micro-batches.
 
-Row order: within a micro-batch rows are processed in arrival order (or
-by ``order_col`` when given — recommended, it pins determinism the same
-way the batch emulation's row_number order does).
+Row order: a key's micro-batch rows may arrive as several Arrow chunks
+(``spark.sql.execution.arrow.maxRecordsPerBatch``); every operator
+concatenates ALL of them and sorts once (one stable ``np.lexsort``) by
+``order_col`` (count windows), the delta column, or the ORDER BY keys
+(running_agg), so chunk boundaries never change the processing order.
+Without an order column rows keep arrival order.
+
+Cost shape: the per-key Arrow round trip grows with the number and type
+of columns shipped, so each operator selects only the columns it reads
+(keys, order/delta column, aggregate inputs) before the keyed exchange,
+and a TimestampType order key travels as its ``unix_micros`` int64
+(same order, no per-key tz-aware conversion in either direction); the
+planner's streaming OVER prunes running_agg's input the same way.  The
+per-key bodies are numpy only: window sums add left to right in the
+order the rows entered the window, so results are bit-identical to a
+sequential per-row loop.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (DoubleType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
+                               LongType, StructField, StructType,
+                               TimestampType)
 
 from ..errors import PlanError
 
 _SUPPORTED = ("sum", "count", "min", "max", "avg")
+
+# window-matrix cells aggregated per numpy call: bounds the per-key
+# working memory however many windows one micro-batch fires
+_BLOCK_CELLS = 1 << 20
 
 
 def count_window_agg(sdf: DataFrame,
@@ -59,9 +80,10 @@ def count_window_agg(sdf: DataFrame,
     aggs : list of ``(fn, col, alias)``, fn in sum/count/min/max/avg
     size : window extent in rows (``[size N]``)
     every : trigger period in rows (``every M``); None = tumbling
-    order_col : intra-batch ordering column(s) (str or list of str) —
+    order_col : processing-order column(s) (str or list of str) —
         recommended: event time plus a unique tiebreaker, which makes
-        window contents fully deterministic
+        window contents fully deterministic; NULLs sort last.  Ignored
+        unless every named column is in ``sdf``.
 
     Returns a streaming DataFrame (append output mode) with schema
     ``key_cols + [window_no] + [alias...]`` for tumbling windows, or
@@ -79,25 +101,27 @@ def count_window_agg(sdf: DataFrame,
         raise PlanError("window size/every must be positive")
     order_cols = ([order_col] if isinstance(order_col, str)
                   else list(order_col or []))
+    if not all(c in sdf.columns for c in order_cols):
+        order_cols = []
 
     agg_cols = [c for _f, c, _a in aggs]
-    gk = _fresh_name("__gk", sdf.columns)
-    keyed = sdf if key_cols else sdf.withColumn(gk, _lit0())
-    group_keys = key_cols if key_cols else [gk]
+    keyed, key_fields = _keyed_input(sdf, key_cols,
+                                     order_cols + agg_cols, order_cols)
 
     sliding = every is not None
     win_name = "trigger" if sliding else "window_no"
-    key_fields = [keyed.schema[k] for k in group_keys]
     out_schema = StructType(
         list(key_fields)
         + [StructField(win_name, LongType())]
         + [StructField(alias, DoubleType()) for _f, _c, alias in aggs])
+    out_names = [f.name for f in out_schema.fields]
+    fns = [f for f, _c, _a in aggs]
 
     # state: rows seen + one bounded value-buffer per agg column, encoded
     # as a fixed-width struct (buffers as array<double>, nulls as NaN)
     state_schema = StructType(
         [StructField("seen", LongType())]
-        + [StructField(f"buf{i}", _arr_double())
+        + [StructField(f"buf{i}", ArrayType(DoubleType()))
            for i in range(len(agg_cols))])
 
     def fn(key, pdf_iter: Iterator[pd.DataFrame],
@@ -105,35 +129,50 @@ def count_window_agg(sdf: DataFrame,
         if state.exists:
             row = state.get
             seen = row[0]
-            bufs = [list(row[1 + i]) for i in range(len(agg_cols))]
+            bufs = [np.asarray(row[1 + i], dtype="float64")
+                    for i in range(len(agg_cols))]
         else:
             seen = 0
-            bufs = [[] for _ in agg_cols]
+            bufs = [np.empty(0) for _ in agg_cols]
+        chunks = list(pdf_iter)
+        if chunks:
+            cols = _columns(chunks, order_cols + agg_cols)
+            n = sum(len(ch) for ch in chunks)
+            perm = (_order([cols[c] for c in order_cols], nulls_first=False)
+                    if order_cols else slice(None))
+            # ext = carried buffer + this batch; row g of the key (1-based
+            # global count) sits at ext index g - base
+            exts = [np.concatenate((b, _as_float(cols[c])[perm]))
+                    for b, c in zip(bufs, agg_cols)]
+            base = seen - min(seen, size) + 1
+            fires = np.arange((seen // m + 1) * m, seen + n + 1, m)
+            if len(fires):
+                # window k ends at ext index fires[k] - base; front-pad
+                # NaN (= NULL) cells so every window is a full-width
+                # row of the padded buffer starting at starts[k]
+                lead = max(0, size - 1 - int(fires[0] - base))
+                starts = fires - base + lead - (size - 1)
+                padded = [np.concatenate((np.full(lead, np.nan), e))
+                          for e in exts]
+                vals = _window_aggs(
+                    fns, len(fires), size,
+                    lambda lo, hi: [np.lib.stride_tricks
+                                    .sliding_window_view(p, size)
+                                    [starts[lo:hi]] for p in padded])
+                win = fires if sliding else fires // m - 1
+                data = {k: [v] * len(fires)
+                        for k, v in zip(out_names, key)}
+                data[win_name] = win
+                data.update(zip(out_names[len(key) + 1:], vals))
+                yield pd.DataFrame(data, copy=False)
+            seen += n
+            bufs = [e[-size:] for e in exts]
+        state.update(tuple([seen] + [b.tolist() for b in bufs]))
 
-        out_rows = []
-        for pdf in pdf_iter:
-            if order_cols and all(c in pdf.columns for c in order_cols):
-                pdf = pdf.sort_values(order_cols, kind="mergesort")
-            cols = [pdf[c].astype("float64").to_numpy() for c in agg_cols]
-            for r in range(len(pdf)):
-                seen += 1
-                for b, arr in zip(bufs, cols):
-                    b.append(float(arr[r]))
-                    if len(b) > size:
-                        del b[0]
-                if seen % m == 0:
-                    win_val = seen if sliding else seen // m - 1
-                    out_rows.append(_emit(key, win_val, bufs, aggs))
-        state.update(tuple([seen] + [list(b) for b in bufs]))
-        if out_rows:
-            yield pd.DataFrame(out_rows,
-                               columns=[f.name for f in out_schema.fields])
-
-    grouped = keyed.groupBy(*group_keys)
-    out = grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.NoTimeout)
-    return out.drop(gk) if not key_cols else out
+    out = keyed.groupBy(*[f.name for f in key_fields]) \
+        .applyInPandasWithState(fn, out_schema, state_schema, "append",
+                                GroupStateTimeout.NoTimeout)
+    return out if key_cols else out.drop(key_fields[0].name)
 
 
 def delta_window_agg(sdf: DataFrame,
@@ -145,14 +184,16 @@ def delta_window_agg(sdf: DataFrame,
     """Sliding DELTA-axis windows on a streaming DataFrame.
 
     ``[size N on col every M on col]``: a trigger fires at every multiple
-    T of ``every`` on the (assumed per-key monotone non-decreasing)
+    T = k·M of ``every`` on the (assumed per-key monotone non-decreasing)
     numeric column; each firing aggregates rows with col in (T-N, T] —
     the same window bounds as the batch exploded-trigger emulation
     (windows.py _explode_triggers).  Trigger T fires when the first row
     with col > T arrives, so — unlike batch end-of-data semantics — a
-    trigger exactly at the maximum seen value stays open.  State per key
-    is the bounded row buffer of the trailing ``size`` units plus the
-    last fired trigger.
+    trigger exactly at the maximum seen value stays open; a trigger
+    whose window holds no row emits nothing; a row whose col is NULL
+    belongs to no window (batch parity).  State per key is the bounded
+    row buffer of the trailing ``size`` units plus the last fired
+    trigger.
 
     Output schema: key_cols + [trigger] + aliases (append mode).
     """
@@ -164,132 +205,236 @@ def delta_window_agg(sdf: DataFrame,
         raise PlanError("window size/every must be positive")
 
     agg_cols = [c for _f, c, _a in aggs]
-    gk = _fresh_name("__gk", sdf.columns)
-    keyed = sdf if key_cols else sdf.withColumn(gk, _lit0())
-    group_keys = key_cols if key_cols else [gk]
-    key_fields = [keyed.schema[k] for k in group_keys]
+    keyed, key_fields = _keyed_input(sdf, key_cols,
+                                     [delta_col] + agg_cols, [])
     out_schema = StructType(
         list(key_fields)
         + [StructField("trigger", DoubleType())]
         + [StructField(alias, DoubleType()) for _f, _c, alias in aggs])
+    out_names = [f.name for f in out_schema.fields]
+    fns = [f for f, _c, _a in aggs]
     # state: last fired trigger, position buffer, one value buffer per agg
     state_schema = StructType(
         [StructField("last_t", DoubleType()),
-         StructField("pos", _arr_double())]
-        + [StructField(f"buf{i}", _arr_double())
+         StructField("pos", ArrayType(DoubleType()))]
+        + [StructField(f"buf{i}", ArrayType(DoubleType()))
            for i in range(len(agg_cols))])
-
-    import math
+    eps = 1e-12
 
     def fn(key, pdf_iter: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             row = state.get
             last_t = row[0]
-            pos = list(row[1])
-            bufs = [list(row[2 + i]) for i in range(len(agg_cols))]
+            pos = np.asarray(row[1], dtype="float64")
+            bufs = [np.asarray(row[2 + i], dtype="float64")
+                    for i in range(len(agg_cols))]
         else:
             last_t = None
-            pos = []
-            bufs = [[] for _ in agg_cols]
-
-        out_rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(delta_col, kind="mergesort")
-            cvals = pdf[delta_col].astype("float64").to_numpy()
-            vcols = [pdf[c].astype("float64").to_numpy() for c in agg_cols]
-            for r in range(len(pdf)):
-                c = float(cvals[r])
-                # fire every trigger T (multiple of `every`) with
-                # last_t < T < c before admitting this row
-                t = math.floor((c - 1e-12) / every) * every
-                first = (math.floor(pos[0] / every) * every
-                         if pos else t) - every
-                start = last_t if last_t is not None else first
-                nxt = math.floor(start / every) * every + every
-                while nxt < c - 1e-12:
-                    emitted = _emit_delta(key, nxt, pos, bufs, aggs, size)
-                    if emitted is not None:   # skip row-less triggers
-                        out_rows.append(emitted)
-                    last_t = nxt
-                    nxt += every
-                pos.append(c)
-                for b, arr in zip(bufs, vcols):
-                    b.append(float(arr[r]))
-                # prune: rows at col <= last_t - size serve no future
-                # trigger (triggers only move forward)
+            pos = np.empty(0)
+            bufs = [np.empty(0) for _ in agg_cols]
+        chunks = list(pdf_iter)
+        if chunks:
+            cols = _columns(chunks, [delta_col] + agg_cols)
+            c = _as_float(cols[delta_col])
+            perm = _order([c], nulls_first=False)
+            perm = perm[~np.isnan(c[perm])]     # NULL: in no window
+            c = c[perm]
+            vcols = [_as_float(cols[a])[perm] for a in agg_cols]
+            if len(c):
+                # the fired triggers are k*every for k in [k_lo, k_hi]:
+                # above the last fired one (or, for a key with none yet,
+                # from its first buffered row), below the largest new
+                # position
+                thr = c - eps
                 if last_t is not None:
-                    cut = last_t - size
-                    drop = 0
-                    while drop < len(pos) and pos[drop] <= cut + 1e-12:
-                        drop += 1
-                    if drop:
-                        del pos[:drop]
-                        for b in bufs:
-                            del b[:drop]
-        state.update(tuple([last_t, list(pos)]
-                           + [list(b) for b in bufs]))
-        if out_rows:
-            yield pd.DataFrame(out_rows,
-                               columns=[f.name for f in out_schema.fields])
+                    k_lo = np.floor(last_t / every) + 1
+                else:
+                    k_lo = np.floor((pos[0] if len(pos) else thr[0])
+                                    / every)
+                k_hi = np.floor(thr[-1] / every)
+                if k_hi * every >= thr[-1]:
+                    k_hi -= 1
+                # only triggers within `size` of some buffered row can
+                # hold a row: enumerate those, not every multiple
+                allp = np.concatenate((pos, c))
+                klo = np.floor((allp - eps) / every)
+                cnt = (np.floor((allp + size) / every) - klo + 1
+                       ).astype("int64")
+                ks = np.repeat(klo, cnt) + (
+                    np.arange(cnt.sum()) - np.repeat(cnt.cumsum() - cnt,
+                                                     cnt))
+                ks = np.unique(ks[(ks >= k_lo) & (ks <= k_hi)])
+                t = ks * every
+                lo_t = (t - size) + eps
+                hi_t = t + eps
+                # rows admitted before trigger t fires: every carried
+                # row, and the new rows before the first with c-eps > t
+                fire = np.searchsorted(thr, t, side="right")
+                a = np.searchsorted(c, lo_t, side="right")
+                b = np.minimum(fire, np.searchsorted(c, hi_t,
+                                                     side="right"))
+                width = np.maximum(b - a, 0)
+                cmask = ((pos[None, :] > lo_t[:, None])
+                         & (pos[None, :] <= hi_t[:, None]))
+                keep = (width > 0) | cmask.any(axis=1)
+                t, a, width, cmask = t[keep], a[keep], width[keep], \
+                    cmask[keep]
+                if len(t):
+                    wmax = int(width.max())
+                    span = np.arange(wmax)
 
-    grouped = keyed.groupBy(*group_keys)
-    out = grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.NoTimeout)
-    return out.drop(gk) if not key_cols else out
+                    def windows(lo, hi):
+                        # carried rows (buffer order) then new rows
+                        # (sorted order): the order they were admitted
+                        idx = a[lo:hi, None] + span
+                        inw = span < width[lo:hi, None]
+                        idx = np.where(inw, idx, 0)
+                        return [np.concatenate(
+                            (np.where(cmask[lo:hi], bf, np.nan),
+                             np.where(inw, vc[idx], np.nan)), axis=1)
+                            for bf, vc in zip(bufs, vcols)]
+                    vals = _window_aggs(fns, len(t), len(pos) + wmax,
+                                        windows)
+                    data = {k: [v] * len(t)
+                            for k, v in zip(out_names, key)}
+                    data["trigger"] = t
+                    data.update(zip(out_names[len(key) + 1:], vals))
+                    yield pd.DataFrame(data, copy=False)
+                if k_hi >= k_lo:
+                    last_t = float(k_hi * every)
+            pos = np.concatenate((pos, c))
+            bufs = [np.concatenate((bf, vc)) for bf, vc in zip(bufs, vcols)]
+            if last_t is not None:
+                # drop the leading rows at col <= last_t - size: they
+                # serve no future trigger (triggers only move forward)
+                stale = pos <= (last_t - size) + eps
+                drop = len(pos) if stale.all() else int(np.argmin(stale))
+                pos = pos[drop:]
+                bufs = [bf[drop:] for bf in bufs]
+        state.update(tuple([last_t, pos.tolist()]
+                           + [bf.tolist() for bf in bufs]))
+
+    out = keyed.groupBy(*[f.name for f in key_fields]) \
+        .applyInPandasWithState(fn, out_schema, state_schema, "append",
+                                GroupStateTimeout.NoTimeout)
+    return out if key_cols else out.drop(key_fields[0].name)
 
 
-def _emit_delta(key, trigger, pos, bufs, aggs, size):
-    import math
-    row = list(key) + [float(trigger)]
-    lo, hi = trigger - size, trigger
-    idx = [i for i, p in enumerate(pos)
-           if lo + 1e-12 < p <= hi + 1e-12]
-    if not idx:
-        # batch parity: a trigger with no co-resident rows produces no
-        # output row (windows.py joins rows TO triggers)
-        return None
-    for (fn, _c, _a), buf in zip(aggs, bufs):
-        vals = [buf[i] for i in idx if not math.isnan(buf[i])]
-        if fn == "count":
-            row.append(float(len(vals)))
-        elif not vals:
-            row.append(None)
-        elif fn == "sum":
-            row.append(float(sum(vals)))
-        elif fn == "min":
-            row.append(float(min(vals)))
-        elif fn == "max":
-            row.append(float(max(vals)))
+def _keyed_input(sdf: DataFrame, key_cols: list[str], read: list[str],
+                 order_cols: list[str]):
+    """The stateful pass's input: only the keys and the columns the
+    per-key body reads (each once), a TimestampType order column
+    replaced by its ``unix_micros`` under the same name; with no key
+    columns, one constant grouping column.  Returns (frame, group-key
+    fields)."""
+    fields = {f.name: f for f in sdf.schema.fields}
+    sel = []
+    for c in dict.fromkeys(key_cols + read):
+        col = F.col("`" + c.replace("`", "``") + "`")
+        if c in order_cols and c not in key_cols \
+                and isinstance(fields[c].dataType, TimestampType):
+            col = F.unix_micros(col).alias(c)
+        sel.append(col)
+    if key_cols:
+        return sdf.select(*sel), [fields[k] for k in key_cols]
+    gk = _fresh_name("__gk", fields)
+    return (sdf.select(*sel, F.lit(0).alias(gk)),
+            [StructField(gk, IntegerType(), False)])
+
+
+def _columns(chunks: list, names: list[str]) -> dict:
+    """A key's Arrow chunks as one numpy array per named column (chunks
+    concatenated in arrival order)."""
+    names = list(dict.fromkeys(names))
+    if len(chunks) == 1:
+        return {c: chunks[0][c].to_numpy() for c in names}
+    return {c: np.concatenate([ch[c].to_numpy() for ch in chunks])
+            for c in names}
+
+
+def _nulls(a: np.ndarray) -> np.ndarray:
+    """NULL mask of a column as pandas hands it over: NaN in float
+    columns (nullable integrals included), NaT in datetimes, None in
+    object columns."""
+    k = a.dtype.kind
+    if k == "f":
+        return np.isnan(a)
+    if k in "mM":
+        return np.isnat(a)
+    if k == "O":
+        return pd.isna(a)
+    return np.zeros(len(a), dtype=bool)
+
+
+def _order(keys: list, nulls_first: bool) -> np.ndarray:
+    """The stable ascending permutation over several key columns (the
+    first key primary): one ``np.lexsort``.  NULLs sort first or last
+    per key; non-numeric keys (strings, dates, decimals) sort by their
+    rank among the key's distinct non-null values."""
+    lex = []
+    for a in keys:
+        null = _nulls(a)
+        if a.dtype.kind == "O":
+            v = np.zeros(len(a), dtype="int64")
+            if not null.all():
+                v[~null] = np.unique(a[~null], return_inverse=True)[1]
+        elif a.dtype.kind in "mM":
+            v = a.view("int64")
+        elif null.any():
+            v = np.where(null, 0, a)
         else:
-            row.append(float(sum(vals)) / len(vals))
-    return row
+            v = a
+        if null.any():
+            lex.append(~null if nulls_first else null)
+        lex.append(v)
+    return np.lexsort(lex[::-1])
 
 
-def _emit(key, win_val, bufs, aggs):
-    import math
-    row = list(key) + [win_val]
-    for (fn, _c, _a), buf in zip(aggs, bufs):
-        vals = [v for v in buf if not math.isnan(v)]
-        if fn == "count":
-            row.append(float(len(vals)))
-        elif not vals:
-            row.append(None)
-        elif fn == "sum":
-            row.append(float(sum(vals)))
-        elif fn == "min":
-            row.append(float(min(vals)))
-        elif fn == "max":
-            row.append(float(max(vals)))
-        else:  # avg
-            row.append(float(sum(vals)) / len(vals))
-    return row
+def _as_float(a: np.ndarray) -> np.ndarray:
+    """A column as float64 with NaN for NULL (pandas' astype for object
+    columns such as decimals)."""
+    if a.dtype.kind == "O":
+        return pd.Series(a).astype("float64").to_numpy()
+    return a.astype("float64", copy=False)
 
 
-def _lit0():
-    from pyspark.sql import functions as F
-    return F.lit(0)
+def _window_aggs(fns: list[str], n: int, width: int, windows) -> list:
+    """Aggregate ``n`` windows per aggregate: ``windows(lo, hi)`` returns
+    one (hi-lo, width) float matrix per aggregate (NaN = NULL or no
+    row), each window's values in the order they entered it.  Matches a
+    sequential per-row loop exactly: sums add left to right from 0.0
+    (np.add.accumulate, never the pairwise add.reduce), min/max return
+    the first extreme value, an all-NULL window's sum/min/max/avg is
+    NULL (NaN), count is the non-NULL count.  Works in blocks of
+    ``_BLOCK_CELLS`` cells."""
+    out = [np.empty(n) for _ in fns]
+    step = max(1, _BLOCK_CELLS // width)
+    for lo in range(0, n, step):
+        hi = min(n, lo + step)
+        for o, fn, w in zip(out, fns, windows(lo, hi)):
+            live = ~np.isnan(w)
+            cnt = live.sum(axis=1)
+            if fn == "count":
+                o[lo:hi] = cnt
+                continue
+            if fn in ("sum", "avg"):
+                z = np.concatenate((np.zeros((hi - lo, 1)),
+                                    np.where(live, w, 0.0)), axis=1)
+                r = np.add.accumulate(z, axis=1)[:, -1]
+                if fn == "avg":
+                    with np.errstate(invalid="ignore", divide="ignore"):
+                        r = r / cnt
+            else:
+                red = np.fmin if fn == "min" else np.fmax
+                r = red.reduce(w, axis=1)
+                # +0.0 and -0.0 tie: keep the first one, as a scan does
+                zero = r == 0
+                if zero.any():
+                    first = np.argmax(w[zero] == 0, axis=1)
+                    r[zero] = w[zero][np.arange(len(first)), first]
+            o[lo:hi] = np.where(cnt > 0, r, np.nan)
+    return out
 
 
 def _fresh_name(base: str, taken) -> str:
@@ -303,11 +448,6 @@ def _fresh_name(base: str, taken) -> str:
         i += 1
         name = f"{base}_{i}"
     return name
-
-
-def _arr_double():
-    from pyspark.sql.types import ArrayType
-    return ArrayType(DoubleType())
 
 
 def running_agg(sdf: DataFrame,
@@ -386,8 +526,9 @@ def running_agg(sdf: DataFrame,
         be atomic and non-decimal when ranks are used (the captured
         last key round-trips through the Arrow state store).
     order_cols : intra-batch processing order (event time + a unique
-        tiebreaker pins determinism); NULL order keys sort FIRST,
-        matching Spark's ascending default in the batch window.
+        tiebreaker pins determinism), one sort over all of a key's
+        Arrow chunks; NULL order keys sort FIRST, matching Spark's
+        ascending default in the batch window.
         Cross-batch order is arrival order — the same documented
         premise as the count windows above (a single-file availableNow
         source is one ordered batch).
@@ -416,8 +557,7 @@ def running_agg(sdf: DataFrame,
     treated as NULL (batch Spark would propagate a true NaN into the
     running sum — the distinction does not survive Arrow).
     """
-    import numpy as np
-    from pyspark.sql.types import (ArrayType, DecimalType, FractionalType,
+    from pyspark.sql.types import (DecimalType, FractionalType,
                                    IntegralType, NumericType)
 
     # normalize the optional trailing ignore_nulls flag on each spec
@@ -616,38 +756,41 @@ def running_agg(sdf: DataFrame,
     lk_base = rank_base + len(ranks)
 
     gk = _fresh_name("__gk", sdf.columns)
-    keyed = sdf if key_cols else sdf.withColumn(gk, _lit0())
+    keyed = sdf if key_cols else sdf.withColumn(gk, F.lit(0))
     group_keys = key_cols if key_cols else [gk]
-    agg_cols = [c for _f, c, _a in aggs]
     out_names = [f.name for f in out_schema.fields]
+    in_names = [f.name for f in in_fields]
 
-    def _obj_values(v: pd.Series, t) -> "object":
-        """A pass-through input column as an object ndarray with None
-        for NULL — the one representation Arrow converts back to the
-        declared column type losslessly for every supported kind
-        (float NaN and int-as-float would otherwise leak through)."""
-        if isinstance(t, IntegralType):
-            return pd.array(v, dtype="Int64").to_numpy(
-                dtype=object, na_value=None)
-        if isinstance(t, FractionalType):
-            a = v.to_numpy(dtype="float64", copy=False)
+    def _obj(a: np.ndarray, t) -> np.ndarray:
+        """Column values as an object ndarray with None for NULL — the
+        one representation Arrow converts back to the declared column
+        type losslessly for every supported kind (float NaN and
+        int-as-float would otherwise leak through).  The elements are
+        plain Python values (datetimes at microsecond precision), so
+        they also go into the state as they are."""
+        null = _nulls(a)
+        if a.dtype.kind == "f" and isinstance(t, IntegralType):
+            out = np.where(null, 0, a).astype("int64").astype(object)
+        elif a.dtype.kind == "M":
+            out = a.astype("datetime64[us]").astype(object)
+        elif a.dtype.kind == "m":
+            out = a.astype("timedelta64[us]").astype(object)
+        else:
             out = a.astype(object)
-            out[np.isnan(a)] = None
-            return out
-        out = v.to_numpy(dtype=object, copy=True)
-        na = pd.isna(out)
-        if na.any():
-            out[na] = None
+        if null.any():
+            out[null] = None
         return out
 
-    def _py(x):
-        if x is None:
-            return None
-        if isinstance(x, np.generic):
-            return x.item()
-        if isinstance(x, pd.Timestamp):
-            return x.to_pydatetime()
-        return x
+    def _nullable(a: np.ndarray, empty: np.ndarray):
+        # int64 results must not upcast to float64 when the
+        # empty-prefix mask applies (precision + a NaN under a
+        # LongType field): a masked IntegerArray.  float64 NaN
+        # converts to an Arrow null (the shared NaN==NULL premise).
+        if not empty.any():
+            return a
+        if a.dtype.kind == "i":
+            return pd.arrays.IntegerArray(a, empty)
+        return np.where(empty, np.nan, a)
 
     def fn(key, pdf_iter: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
@@ -678,42 +821,36 @@ def running_agg(sdf: DataFrame,
             rvals = [0 for _ in ranks]
             lastkey = [[] for _ in order_cols] if ranks else []
 
-        # a key's batch rows may arrive as several chunks; the sort
-        # must be over ALL of them or chunk boundaries would corrupt
-        # the processing order (count_window_agg's windows are
-        # chunk-order-insensitive per emission; running values are not)
         chunks = list(pdf_iter)
         if chunks:
-            pdf = (pd.concat(chunks, ignore_index=True)
-                   if len(chunks) > 1 else chunks[0])
-            # NULLS FIRST: Spark's ascending default, which the
-            # batch window this operator mirrors uses (order_cols
-            # are validated against the input schema up front, so
-            # the sort never silently degrades to arrival order)
-            pdf = pdf.sort_values(order_cols, kind="mergesort",
-                                  na_position="first")
-            pdf = pdf.reset_index(drop=True)
-            n_rows = len(pdf)
-            res = pdf.copy()
+            # one sort over ALL of the key's chunks (a per-chunk sort
+            # would let chunk boundaries reorder the running values);
+            # NULLS FIRST: Spark's ascending default, which the batch
+            # window this operator mirrors uses
+            cols = _columns(chunks, in_names)
+            perm = _order([cols[c] for c in order_cols], nulls_first=True)
+            cols = {c: a[perm] for c, a in cols.items()}
+            n_rows = len(perm)
+            res = dict(cols)
             star = np.arange(1, n_rows + 1, dtype="int64") + seen
             cum_cache: dict = {}
-            for i, (afn, c, _a) in enumerate(aggs):
+            for i, (afn, c, alias) in enumerate(aggs):
                 acc = accs[i]
                 if c is None:                          # count(*)
-                    res[aggs[i][2]] = star
+                    res[alias] = star
                     continue
                 key_c = (c, integral[i])
                 if key_c in cum_cache:
                     nn, rs, rmn, rmx = cum_cache[key_c]
                 else:
-                    v = pdf[c]
-                    mask = v.notna().to_numpy()
-                    nn = mask.cumsum() + acc[0]
-                    if integral[i] and v.dtype.kind == "i":
+                    arr = cols[c]
+                    nanmask = _nulls(arr)
+                    nn = (~nanmask).cumsum() + acc[0]
+                    if integral[i] and arr.dtype.kind == "i":
                         # non-null int64 end to end: exact, and
                         # overflow wraps exactly like the JVM long
                         # adds of the batch window
-                        arr = v.to_numpy()
+                        arr = arr.astype("int64", copy=False)
                         rs = arr.cumsum(dtype="int64") \
                             + np.int64(acc[1] or 0)
                         rmn = np.minimum.accumulate(
@@ -730,8 +867,6 @@ def running_agg(sdf: DataFrame,
                         # in int64 so long sums keep JVM wraparound
                         # parity instead of losing precision once the
                         # total passes 2^53
-                        arr = v.to_numpy(dtype="float64", copy=False)
-                        nanmask = np.isnan(arr)
                         ints = np.where(nanmask, 0, arr).astype("int64")
                         rs = ints.cumsum(dtype="int64") \
                             + np.int64(acc[1] or 0)
@@ -758,62 +893,44 @@ def running_agg(sdf: DataFrame,
                         # addition order (carry+x1)+x2+... — the same
                         # sequence the batch cumulative frame
                         # evaluates; fmin/fmax ignore NaN
-                        arr = v.to_numpy(dtype="float64", copy=False)
-                        filled = np.where(np.isnan(arr), 0.0, arr)
+                        arr = arr.astype("float64", copy=False)
+                        filled = np.where(nanmask, 0.0, arr)
                         rs = np.concatenate(
                             ([acc[1] or 0.0], filled)).cumsum()[1:]
-                        seed2 = np.nan if acc[2] is None else acc[2]
-                        seed3 = np.nan if acc[3] is None else acc[3]
-                        rmn = np.fmin.accumulate(np.fmin(arr, seed2)) \
-                            if not np.isnan(seed2) \
-                            else np.fmin.accumulate(arr)
-                        rmx = np.fmax.accumulate(np.fmax(arr, seed3)) \
-                            if not np.isnan(seed3) \
-                            else np.fmax.accumulate(arr)
+                        rmn = np.fmin.accumulate(
+                            arr if acc[2] is None
+                            else np.fmin(arr, acc[2]))
+                        rmx = np.fmax.accumulate(
+                            arr if acc[3] is None
+                            else np.fmax(arr, acc[3]))
                     cum_cache[key_c] = (nn, rs, rmn, rmx)
                 empty = nn == 0                       # no value yet
-                alias = aggs[i][2]
-
-                def _nullable(a):
-                    # int64 results must not upcast to float64 when
-                    # the empty-prefix mask applies (precision + a
-                    # NaN under a LongType field): use pandas'
-                    # nullable Int64.  float64 NaN converts to an
-                    # Arrow null (the shared NaN==NULL premise).
-                    if a.dtype.kind == "i":
-                        s = pd.array(a, dtype="Int64")
-                        s[empty] = pd.NA
-                        return s
-                    return pd.Series(a).mask(empty, None)
                 if afn == "count":
                     res[alias] = nn
                 elif afn == "avg":
                     with np.errstate(invalid="ignore", divide="ignore"):
-                        av = rs.astype("float64") / nn
-                    res[alias] = _nullable(av)
+                        res[alias] = _nullable(rs.astype("float64") / nn,
+                                               empty)
                 elif afn == "sum":
-                    res[alias] = _nullable(rs)
-                elif afn == "min":
-                    res[alias] = _nullable(rmn)
+                    res[alias] = _nullable(rs, empty)
                 else:
-                    res[alias] = _nullable(rmx)
+                    res[alias] = _nullable(rmn if afn == "min" else rmx,
+                                           empty)
                 # carry the batch-final scalars forward
                 acc[0] = int(nn[-1])
                 if acc[0] > 0:
-                    last = n_rows - 1
-                    cast = (lambda x: int(x)) if integral[i] \
-                        else (lambda x: float(x))
-                    acc[1] = cast(rs[last])
+                    cast = int if integral[i] else float
+                    acc[1] = cast(rs[-1])
                     acc[2] = None if (not integral[i]
-                                      and np.isnan(rmn[last])) \
-                        else cast(rmn[last])
+                                      and np.isnan(rmn[-1])) \
+                        else cast(rmn[-1])
                     acc[3] = None if (not integral[i]
-                                      and np.isnan(rmx[last])) \
-                        else cast(rmx[last])
+                                      and np.isnan(rmx[-1])) \
+                        else cast(rmx[-1])
             for j, (c, k, dflt, alias, ign) in enumerate(offsets):
-                vals = _obj_values(pdf[c], by_name[c].dataType)
+                vals = _obj(cols[c], by_name[c].dataType)
                 if k == 0:                    # lag 0 is the value itself
-                    res[alias] = pd.Series(vals, dtype=object)
+                    res[alias] = vals
                     continue
                 tail = tails[j]
                 if ign:
@@ -822,8 +939,7 @@ def running_agg(sdf: DataFrame,
                     # recent non-null strictly before it — index
                     # (len(tail) + #batch-non-nulls-before-i - k)
                     # into tail+batch-non-nulls, default when negative
-                    m = np.array([v is not None for v in vals],
-                                 dtype=bool)
+                    m = ~_nulls(cols[c])
                     nn = np.concatenate(
                         [np.array(tail, dtype=object), vals[m]])
                     c_excl = np.concatenate(
@@ -834,8 +950,8 @@ def running_agg(sdf: DataFrame,
                     ok = idx >= 0
                     if ok.any():
                         out[ok] = nn[idx[ok]]
-                    res[alias] = pd.Series(out, dtype=object)
-                    tails[j] = [_py(x) for x in nn[max(0, len(nn) - k):]]
+                    res[alias] = out
+                    tails[j] = list(nn[max(0, len(nn) - k):])
                     continue
                 # global row g's lag-k lives at g-k: rows [seen-k,
                 # seen-1] are the carried tail, earlier rows get the
@@ -845,101 +961,82 @@ def running_agg(sdf: DataFrame,
                 pad[:] = dflt
                 ext = np.concatenate(
                     [pad, np.array(tail, dtype=object), vals])
-                res[alias] = pd.Series(ext[:n_rows], dtype=object)
-                tails[j] = [_py(x) for x in ext[len(ext) - k:]]
+                res[alias] = ext[:n_rows]
+                tails[j] = list(ext[len(ext) - k:])
             for j, (c, alias, ign) in enumerate(firsts):
+                out = np.empty(n_rows, dtype=object)
                 if ign and not fvals[j]:
                     # IGNORE NULLS: the capture waits for the key's
                     # first NON-null; rows before it (this batch's
                     # prefix — earlier batches already emitted NULL)
                     # see NULL
-                    vals = _obj_values(pdf[c], by_name[c].dataType)
-                    hit = next((i for i, v in enumerate(vals)
-                                if v is not None), None)
-                    out = np.empty(n_rows, dtype=object)
-                    if hit is None:
-                        out[:] = None
-                    else:
-                        fvals[j] = [_py(vals[hit])]
-                        out[:hit] = None
+                    live = np.flatnonzero(~_nulls(cols[c]))
+                    if len(live):
+                        hit = int(live[0])
+                        fvals[j] = [_obj(cols[c][hit:hit + 1],
+                                         by_name[c].dataType)[0]]
                         out[hit:] = fvals[j][0]
-                    res[alias] = pd.Series(out, dtype=object)
+                    res[alias] = out
                     continue
                 if not fvals[j]:
                     # capture the key's very first row's value —
                     # via the object conversion so NULL/ints survive
-                    fvals[j] = [_py(
-                        _obj_values(pdf[c].iloc[:1],
-                                    by_name[c].dataType)[0])]
-                res[alias] = pd.Series([fvals[j][0]] * n_rows,
-                                       dtype=object)
+                    fvals[j] = [_obj(cols[c][:1], by_name[c].dataType)[0]]
+                out[:] = fvals[j][0]
+                res[alias] = out
             for j, (c, n, alias, ign) in enumerate(nths):
                 buf = nbufs[j]
+                out = np.empty(n_rows, dtype=object)
                 if ign:
                     # IGNORE NULLS: buffer the first n NON-null
                     # values (buffer length = min(non-nulls seen, n),
                     # so it doubles as the carried non-null count); a
                     # row sees the n-th once n non-nulls have arrived
                     # at or before it
-                    vals = _obj_values(pdf[c], by_name[c].dataType)
-                    m = np.array([v is not None for v in vals],
-                                 dtype=bool)
+                    m = ~_nulls(cols[c])
                     before = len(buf)
                     if before < n:
-                        buf.extend(_py(x)
-                                   for x in vals[m][:n - before])
-                    c_incl = m.cumsum() + before
-                    out = np.empty(n_rows, dtype=object)
-                    out[:] = None
+                        live = np.flatnonzero(m)[:n - before]
+                        buf.extend(_obj(cols[c][live], by_name[c].dataType))
                     if len(buf) >= n:
-                        out[c_incl >= n] = buf[n - 1]
-                    res[alias] = pd.Series(out, dtype=object)
+                        out[m.cumsum() + before >= n] = buf[n - 1]
+                    res[alias] = out
                     continue
                 if len(buf) < n:
-                    # slice BEFORE the object conversion: only the
-                    # n - len(buf) leading values are needed, never
-                    # the whole batch column (the first_value slicing
-                    # rationale)
-                    vals = _obj_values(
-                        pdf[c].iloc[:n - len(buf)],
-                        by_name[c].dataType)
-                    buf.extend(_py(x) for x in vals)
+                    # only the n - len(buf) leading values are needed,
+                    # never the whole batch column
+                    buf.extend(_obj(cols[c][:n - len(buf)],
+                                    by_name[c].dataType))
                 # local row i sits at global position seen + i + 1;
                 # rows at or past position n see the captured value
                 # (by then the buffer is complete — it filled from
                 # this batch's own prefix), earlier rows see NULL
-                out = np.empty(n_rows, dtype=object)
                 k = min(n_rows, max(0, n - seen - 1))
-                out[:k] = None
                 out[k:] = buf[n - 1] if len(buf) >= n else None
-                res[alias] = pd.Series(out, dtype=object)
+                res[alias] = out
             for j, (c, alias) in enumerate(lasts):
                 # IGNORE-NULLS last_value: the most recent non-null at
                 # or before each row — vectorized ffill over positions
                 # of non-nulls, seeded with the carried capture
-                vals = _obj_values(pdf[c], by_name[c].dataType)
-                m = np.array([v is not None for v in vals], dtype=bool)
-                pos = np.where(m, np.arange(n_rows), -1)
-                last_pos = np.maximum.accumulate(pos)
+                vals = _obj(cols[c], by_name[c].dataType)
+                m = ~_nulls(cols[c])
+                last_pos = np.maximum.accumulate(
+                    np.where(m, np.arange(n_rows), -1))
                 carry = lvals[j][0] if lvals[j] else None
-                out = np.where(last_pos >= 0,
-                               vals[np.maximum(last_pos, 0)], carry)
-                res[alias] = pd.Series(out, dtype=object)
+                res[alias] = np.where(last_pos >= 0,
+                                      vals[np.maximum(last_pos, 0)], carry)
                 if m.any():
-                    lvals[j] = [_py(vals[last_pos[-1]])]
+                    lvals[j] = [vals[last_pos[-1]]]
             if ranks:
                 # isnew[i]: row i starts a new peer run — it differs
                 # from row i-1 on ANY order column (NULL peers NULL,
                 # matching the NULLS-FIRST sort above; a float NaN is
-                # NA to pandas, the shared NaN==NULL premise)
+                # NULL, the shared NaN==NULL premise)
                 isnew = np.zeros(n_rows, dtype=bool)
                 for oc in order_cols:
-                    a = pdf[oc]
-                    prev = a.shift()
-                    eq = (a == prev) | (a.isna() & prev.isna())
-                    d = (~eq).to_numpy(dtype=bool)
-                    d[0] = False
-                    isnew |= d
+                    a, null = cols[oc], _nulls(cols[oc])
+                    isnew[1:] |= ~((a[1:] == a[:-1])
+                                   | (null[1:] & null[:-1]))
                 if seen == 0:
                     isnew[0] = True
                 else:
@@ -947,8 +1044,7 @@ def running_agg(sdf: DataFrame,
                     # it equals the LAST row's captured order key
                     same = True
                     for m, oc in enumerate(order_cols):
-                        cur = _py(_obj_values(
-                            pdf[oc].iloc[:1], by_name[oc].dataType)[0])
+                        cur = _obj(cols[oc][:1], by_name[oc].dataType)[0]
                         prv = lastkey[m][0] if lastkey[m] else None
                         if not ((cur is None and prv is None)
                                 or (cur is not None and prv is not None
@@ -975,12 +1071,11 @@ def running_agg(sdf: DataFrame,
                     res[alias] = vals
                     rvals[j] = int(vals[-1])
                 lastkey = [
-                    [_py(_obj_values(pdf[oc].iloc[n_rows - 1:],
-                                     by_name[oc].dataType)[0])]
+                    [_obj(cols[oc][-1:], by_name[oc].dataType)[0]]
                     for oc in order_cols]
             seen += n_rows
-            cols = [c for c in out_names if c in res.columns]
-            yield res[cols]
+            yield pd.DataFrame({c: res[c] for c in out_names},
+                               copy=False)
         state.update(tuple(
             [seen] + [x for acc in accs for x in acc]
             + [tails[j] for j in range(len(offsets))]
@@ -990,8 +1085,7 @@ def running_agg(sdf: DataFrame,
             + [rvals[j] for j in range(len(ranks))]
             + (lastkey if ranks else [])))
 
-    grouped = keyed.groupBy(*group_keys)
-    out = grouped.applyInPandasWithState(
+    out = keyed.groupBy(*group_keys).applyInPandasWithState(
         fn, out_schema, state_schema, "append",
         GroupStateTimeout.NoTimeout)
-    return out.drop(gk) if not key_cols else out
+    return out if key_cols else out.drop(group_keys[0])
