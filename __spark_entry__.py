@@ -25,15 +25,6 @@ def _engine(spark: SparkSession, sf_dir: str):
     eng = _ENGINES.get(key)
     if eng is None:
         from flink_dsl_spark import FsqlEngine
-        # Belt-and-braces: the driver supplies its own bare SparkSession;
-        # the engine also sets these in __init__, but a failure here must
-        # not depend on engine internals (round-1 postmortem: unset
-        # nanosAsLong on the driver session failed every parquet load).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled",
-                       "false")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
         eng = FsqlEngine(spark)
         eng.load_dir(sf_dir)
         _ENGINES[key] = eng

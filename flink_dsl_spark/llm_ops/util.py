@@ -33,84 +33,32 @@ def release_caches(tag: str | None = None) -> None:
             prev.unpersist()
 
 
-import re as _re
-
-# logical operators whose presence means the frame's parallelism is
-# already spark.sql.shuffle.partitions (they all compile to an
-# exchange).  Join is deliberately NOT here (r15 review): a broadcast
-# join never shuffles its probe side, so a joined frame can still sit
-# at scan partitioning — it falls through to the size estimate, which
-# repartitions exactly the small (broadcast-candidate) cases the old
-# partition probe would have.  Distinct/Dedup/intersections rewrite to
-# Aggregate/Join by the optimizer, so the list covers the catalog.
-_SHUFFLING_NODES = {"Aggregate", "Sort", "Window", "Repartition",
-                    "RepartitionByExpression", "RebalancePartitions"}
-
-# the operator NAME is the first identifier after the tree-drawing
-# prefix — matching anywhere in the line would false-hit expression
-# text (r15 review: 'sum((id - 1))' contains '- ' and broke a
-# suffix-split parse)
-_NODE_NAME_RE = _re.compile(r"^[\s:+|-]*([A-Za-z][A-Za-z0-9]*)")
-
-
-def _looks_pre_shuffled(plan_text: str) -> bool:
-    for line in plan_text.splitlines():
-        m = _NODE_NAME_RE.match(line)
-        if m and m.group(1) in _SHUFFLING_NODES:
-            return True
-    return False
-
-
 def spread_for_compute(df: DataFrame) -> DataFrame:
     """Repartition a coarsely-partitioned input up to cluster parallelism
     before a compute-heavy projection (minhash permutations, simhash
     folds, per-row hyperplane dot products).
 
-    A scan of a few small (or few huge gzip) files yields fewer splits
-    than the cluster has cores, and everything downstream of it runs on
-    those few tasks.  For cheap JVM expressions that is fine; for
-    operators whose per-row cost dwarfs the exchange cost, one
-    round-robin shuffle of the raw input buys full-cluster parallelism.
-    Inputs that are already as parallel as the cluster pass through
-    untouched, so at 100 TB (thousands of splits) this is a no-op.
-
-    The parallelism check is driver-cheap (r15, VERDICT r14 item 7):
-    the old ``df.rdd.getNumPartitions()`` probe forced full physical
-    planning plus an RDD conversion on EVERY operator call (~70 ms
-    each, measured).  Now: a frame whose optimized logical plan
-    already contains a shuffle-producing operator is at
-    spark.sql.shuffle.partitions by construction — pass through; a
-    narrow frame (scan + project/filter) estimates its scan splits
-    from the optimizer's size statistics against
-    ``spark.sql.files.maxPartitionBytes`` (~2-18 ms, no physical
-    planning, no RDD).  The stats are column-pruned so the estimate
-    biases LOW, i.e. toward repartitioning — harmless where it
-    matters: at 100 TB any corpus-wide input dwarfs cores x 128 MB
-    even pruned, so the spread stays a no-op at scale.
+    Rule: round-robin to ``defaultParallelism`` when the optimizer's
+    size estimate spans fewer splits than that
+    (``ceil(sizeInBytes / filesMaxPartitionBytes) < defaultParallelism``),
+    otherwise return ``df`` unchanged.  A scan of a few small files
+    yields fewer tasks than the cluster has cores, and per-row cost here
+    dwarfs one exchange of the raw input.  At scale every corpus-wide
+    input spans thousands of splits, so the spread is a no-op; an
+    unknown size (Long.MaxValue, e.g. an RDD-backed frame) counts as
+    large.  The estimate reads logical statistics only — no physical
+    planning and no RDD conversion.
     """
     if df.isStreaming:
-        # partition count is the source's business on a stream (and
-        # .rdd is illegal there); micro-batches already fan out
+        # a stream's partitioning is its source's business
         return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if _looks_pre_shuffled(plan.toString()):
-            return df
-        size = int(plan.stats().sizeInBytes())
-        if size >= (1 << 62):
-            # unknown-size leaf (LogicalRDD etc. default to
-            # Long.MaxValue): the estimate is meaningless — fall back
-            # to the real partition probe (r15 review)
-            raise ValueError("sizeInBytes is the unknown sentinel")
-        # exact bytes from the session state (handles '128m'-style
-        # user settings the string form would misparse — r15 review)
-        split = int(df.sparkSession._jsparkSession.sessionState()
-                    .conf().filesMaxPartitionBytes())
-        est_splits = max(1, -(-size // max(split, 1)))
-    except Exception:   # noqa: BLE001 — any py4j surprise: old probe
-        est_splits = df.rdd.getNumPartitions()
-    if est_splits < target:
+    size = int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    # exact bytes from the session state (handles '128m'-style settings)
+    split = int(spark._jsparkSession.sessionState().conf()
+                .filesMaxPartitionBytes())
+    if -(-size // max(split, 1)) < target:
         return df.repartition(target)
     return df

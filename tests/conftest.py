@@ -37,6 +37,22 @@ def duck():
     return con
 
 
+_SINK_N = [0]
+
+
+def drain_to_memory(df, output_mode="append"):
+    """Run a streaming frame to completion into a fresh memory sink and
+    return the sink's table name.  Fails if the stream has not finished
+    within 120 s — a timed-out stream would leave a partial sink that a
+    row-count assertion could still pass on."""
+    _SINK_N[0] += 1
+    name = f"test_sink{_SINK_N[0]}"
+    q = (df.writeStream.format("memory").queryName(name)
+         .outputMode(output_mode).trigger(availableNow=True).start())
+    assert q.awaitTermination(120), f"stream {name} did not finish"
+    return name
+
+
 def normalize(pdf):
     """Driver-style normalization: columns sorted by name, rows sorted by
     all columns, tz-stripped timestamps."""

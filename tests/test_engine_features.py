@@ -135,7 +135,7 @@ def test_json_file_source_batch_and_stream(spark, tmp_path):
     sdf = es.catalog.get("js2")
     assert sdf.isStreaming
     q = es.start_sink(sdf, name="js2sink", available_now=True)
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     rows = [(r["a"], r["b"]) for r in spark.table("js2sink").collect()]
     assert rows == [(5, "s")]
 

@@ -3,9 +3,12 @@ the approximate method must agree with its exact counterpart on the
 deterministic testdata.
 """
 
+import re
+
 import pytest
 
 from flink_dsl_spark import llm_ops as L
+from flink_dsl_spark.llm_ops.util import spread_for_compute
 
 from .conftest import SF_DIR
 
@@ -2640,6 +2643,57 @@ def test_random_projection_plan_no_shuffle(emb):
     with pytest.raises(ValueError, match="out_dim"):
         L.random_projection(emb, "embedding", "vec_id", dim=64,
                             out_dim=65)
+
+
+def _round_robin_exchanges(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)
+
+
+def test_spread_one_row_group_scan_gains_one_exchange(spark, emb):
+    n = spark.sparkContext.defaultParallelism
+    assert _round_robin_exchanges(emb) == []
+    assert _round_robin_exchanges(spread_for_compute(emb)) == [str(n)]
+
+
+@pytest.mark.parametrize("shape", [
+    lambda d: d.groupBy().count(),
+    lambda d: d.coalesce(1),
+    lambda d: d.sortWithinPartitions("vec_id"),
+], ids=["aggregate", "coalesce", "sort_within_partitions"])
+def test_spread_small_shuffled_or_coalesced_frame(spark, emb, shape):
+    """Only the size estimate decides: a small frame spreads whatever
+    operators sit above its scan."""
+    df = shape(emb)
+    out = spread_for_compute(df)
+    assert out is not df
+    n = spark.sparkContext.defaultParallelism
+    assert _round_robin_exchanges(out) == [str(n)]
+
+
+def test_spread_threshold_is_the_split_estimate(spark):
+    """ceil(sizeInBytes / filesMaxPartitionBytes) < defaultParallelism
+    spreads; anything at or above passes through.  A Range relation
+    estimates exactly 8 bytes a row, so the boundary is exact."""
+    n = spark.sparkContext.defaultParallelism
+    split = int(spark._jsparkSession.sessionState().conf()
+                .filesMaxPartitionBytes())
+    below = spark.range((n - 1) * split // 8)     # n - 1 splits
+    assert spread_for_compute(below) is not below
+    at = spark.range((n - 1) * split // 8 + 1)    # rounds up to n
+    assert spread_for_compute(at) is at
+    large = spark.range(n * split // 8)
+    assert spread_for_compute(large) is large
+
+
+def test_spread_passes_streaming_and_unknown_size_frames(spark):
+    stream = spark.readStream.format("rate").load()
+    assert spread_for_compute(stream) is stream
+    # an RDD-backed relation has no size statistics (Long.MaxValue):
+    # it counts as large
+    rdd_backed = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,)]), "a int")
+    assert spread_for_compute(rdd_backed) is rdd_backed
 
 
 def test_random_projection_duckdb_parity(spark, emb):

@@ -12,6 +12,8 @@ import pytest
 
 from flink_dsl_spark import FsqlEngine
 
+from .conftest import drain_to_memory
+
 T0 = dt.datetime(2026, 1, 1, 0, 0, 0)
 SCHEMA = ("event_id long, ts timestamp, tb timestamp, user string, "
           "value double, small long, kind string")
@@ -35,18 +37,6 @@ def shuffled_dir(spark, tmp_path_factory):
     spark.createDataFrame(rows, schema=SCHEMA) \
         .coalesce(1).write.mode("overwrite").parquet(d)
     return d
-
-
-_SINK_N = [0]
-
-
-def _drain(spark, df):
-    _SINK_N[0] += 1
-    name = f"stateful_sink{_SINK_N[0]}"
-    q = (df.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    return spark.table(name)
 
 
 def _rows(df, cols):
@@ -90,7 +80,7 @@ def test_keys_split_across_chunks_match_batch(spark, shuffled_dir, sql,
         seng = FsqlEngine(spark)
         seng.register("ev", spark.readStream.schema(SCHEMA)
                       .parquet(shuffled_dir), event_time_col="ts")
-        got = _rows(_drain(spark, seng.sql(sql)), cols)
+        got = _rows(spark.table(drain_to_memory(seng.sql(sql))), cols)
     finally:
         spark.conf.set(conf, old)
     assert len(expected) > 0
@@ -188,7 +178,8 @@ def test_rank_over_timestamp_key_matches_batch(spark, shuffled_dir):
     seng = FsqlEngine(spark)
     seng.register("ev", spark.readStream.schema(SCHEMA)
                   .parquet(shuffled_dir))
-    got = _rows(_drain(spark, seng.sql(sql)), ["event_id", "r", "d"])
+    got = _rows(spark.table(drain_to_memory(seng.sql(sql))),
+                ["event_id", "r", "d"])
     assert len(set(r for _e, r, _d in expected)) < len(expected)
     assert got == expected
 

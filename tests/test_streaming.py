@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from flink_dsl_spark import FsqlEngine, PlanError
 from flink_dsl_spark.streaming import count_window_agg
 
+from .conftest import drain_to_memory
+
 T0 = dt.datetime(2026, 1, 1, 0, 0, 0)
 
 
@@ -34,18 +36,6 @@ def sdf(spark, src_dir):
     return spark.readStream.schema(schema).parquet(src_dir)
 
 
-_SINK_N = [0]
-
-
-def run_to_memory(df, output_mode="append"):
-    _SINK_N[0] += 1
-    name = f"msink{_SINK_N[0]}"
-    q = (df.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    return name
-
-
 # --------------------------------------------------------------------------
 # M4: time windows, watermarks, derived streams — streaming-native
 # --------------------------------------------------------------------------
@@ -57,7 +47,7 @@ def test_fsql_time_tumbling_streaming(spark, sdf):
         "select user, count(*) as cnt from ev [size 1 h on ts] "
         "group by user")
     assert out.isStreaming
-    sink = run_to_memory(out, "complete")
+    sink = drain_to_memory(out, "complete")
     rows = spark.sql(f"select * from {sink}").collect()
     # 24 rows over 115 min -> 2 hour-windows x 2 users
     got = {(r["user"], r["cnt"]) for r in rows}
@@ -70,7 +60,7 @@ def test_fsql_sliding_window_streaming(spark, sdf):
     eng.register("ev", sdf, event_time_col="ts")
     out = eng.sql(
         "select count(*) as cnt from ev [size 1 h on ts every 30 min]")
-    sink = run_to_memory(out, "complete")
+    sink = drain_to_memory(out, "complete")
     cnts = [r["cnt"] for r in spark.sql(f"select * from {sink}").collect()]
     # hopping windows: each row lands in 2 windows => total = 48
     assert sum(cnts) == 48
@@ -82,7 +72,7 @@ def test_fsql_partitioned_window_streaming(spark, sdf):
     out = eng.sql(
         "select user, round(sum(value), 2) as sv "
         "from ev [size 2 h on ts partitioned on user] group by user")
-    sink = run_to_memory(out, "complete")
+    sink = drain_to_memory(out, "complete")
     got = {(r["user"], r["sv"])
            for r in spark.sql(f"select * from {sink}").collect()}
     # one 2h window holds all 24 rows; sum 1..24 split by parity
@@ -118,7 +108,7 @@ def test_fsql_session_window_streaming(spark, tmp_path):
     out = eng.sql("select user, count(*) as cnt from ev "
                   "[session 30 min on ts] group by user")
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     got = {(r["user"], r["cnt"])
            for r in spark.sql(f"select * from {sink}").collect()
            if r["user"] == "u"}
@@ -181,7 +171,7 @@ def test_watermark_update_mode(spark, sdf):
     out = eng.sql(
         "select user, count(*) as cnt from ev [size 1 h on ts] "
         "group by user")
-    sink = run_to_memory(out, "update")
+    sink = drain_to_memory(out, "update")
     total = sum(r["cnt"]
                 for r in spark.sql(f"select * from {sink}").collect())
     assert total == 24
@@ -193,7 +183,7 @@ def test_append_mode_auto_watermark(spark, sdf):
     eng = FsqlEngine(spark)
     eng.register("ev", sdf, event_time_col="ts")
     out = eng.sql("select count(*) as cnt from ev [size 10 min on ts]")
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     # rows at 0:00..1:55 every 5 min; final watermark = 1:55 - 10 min =
     # 1:45 -> the ten windows ending 0:10..1:40 are final, 2 rows each
@@ -210,7 +200,7 @@ def test_derived_stream_streaming(spark, sdf):
              where value > 20.0);
         select id, speed from fast where speed <= 23.0""")
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     got = sorted(r["id"] for r in
                  spark.sql(f"select * from {sink}").collect())
     assert got == [20, 21, 22]          # values 21..23
@@ -223,7 +213,7 @@ def test_streaming_file_source_via_ddl(spark, src_dir):
                 source file('{src_dir}')""")
     df = eng.catalog.get("ev")
     assert df.isStreaming
-    sink = run_to_memory(df.groupBy("user").count(), "complete")
+    sink = drain_to_memory(df.groupBy("user").count(), "complete")
     got = {(r["user"], r["count"])
            for r in spark.sql(f"select * from {sink}").collect()}
     assert got == {("u0", 12), ("u1", 12)}
@@ -353,7 +343,7 @@ def test_count_tumbling_stateful(spark, sdf):
         aggs=[("sum", "value", "sv"), ("count", "value", "n")],
         size=4, order_col="ts")
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     got = {(r["user"], r["window_no"], r["sv"], r["n"]) for r in rows}
     # u0 values: 1,3,5,...,23; u1: 2,4,...,24; windows of 4 rows
@@ -368,7 +358,7 @@ def test_count_sliding_stateful(spark, sdf):
         sdf, key_cols=[],
         aggs=[("avg", "value", "av"), ("max", "value", "mx")],
         size=6, every=3, order_col="ts")
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = sorted(spark.sql(f"select * from {sink}").collect(),
                   key=lambda r: r["trigger"])
     # triggers at rows 3,6,9,...,24 (values are 1..24 in ts order);
@@ -392,7 +382,7 @@ def test_count_window_state_across_batches(spark, src_dir):
     out = count_window_agg(
         sdf, key_cols=["user"], aggs=[("sum", "value", "sv")],
         size=4, order_col="ts")
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     assert {(r["user"], r["window_no"], r["sv"]) for r in rows} == {
         ("u0", 0, 16.0), ("u0", 1, 48.0), ("u0", 2, 80.0),
@@ -426,7 +416,7 @@ def test_count_window_checkpoint_recovery(spark, tmp_path):
         q = (out.writeStream.format("parquet").option("path", outp)
              .option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     write_batch([1, 2, 3, 4, 5, 6], "b1")
     run_once()                      # window 0 (1..4) emits; 5,6 buffered
@@ -458,7 +448,7 @@ def test_fsql_count_window_streaming_routes_to_stateful(spark, sdf):
     out = eng.sql("select user, sum(value) as sv, count(*) as n "
                   "from ev [size 4 partitioned on user] group by user")
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     got = {(r["user"], r["window_no"], r["sv"], r["n"]) for r in rows}
     assert got == {
@@ -471,7 +461,7 @@ def test_fsql_count_sliding_streaming(spark, sdf):
     eng = FsqlEngine(spark)
     eng.register("ev", sdf, event_time_col="ts")
     out = eng.sql("select count(*) as n from ev [size 6 every 3]")
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     assert len(rows) == 8             # triggers at 3,6,...,24
     assert sum(r["n"] for r in rows) == 3 + 6 * 7
@@ -486,7 +476,7 @@ def test_fsql_count_window_expression_aggs_and_having(spark, sdf):
                case when max(value) > 20 then 'hi' else 'lo' end as tag
         from ev [size 4 partitioned on user] group by user
         having min(value) > 2""")
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     got = {(r["user"], r["window_no"], r["avg_v"], r["tag"]) for r in rows}
     # u0 windows: (1,3,5,7) min=1 -> filtered by HAVING;
@@ -515,7 +505,7 @@ def test_fsql_delta_sliding_streaming_matches_batch(spark, sdf, src_dir):
     engs.register("ev", sdf, event_time_col="ts")
     out = engs.sql(q)
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     stream = {(r["user"], float(r["trigger"]), r["sv"], r["n"])
               for r in spark.sql(f"select * from {sink}").collect()}
     assert len(batch) > 0
@@ -554,7 +544,7 @@ def test_fsql_count_sliding_streaming_matches_batch(
         event_time_col="ts")
     out = engs.sql(q)
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     stream = {key(r) for r in spark.sql(f"select * from {sink}").collect()}
     assert len(batch) > 0
     assert stream == batch
@@ -574,7 +564,7 @@ def test_windowed_select_on_stream_is_continuous(spark, sdf):
     eng.register("ev", sdf, event_time_col="ts")
     out = eng.sql("select event_id from ev [size 30 min on ts]")
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     assert spark.sql(f"select count(*) n from {sink}").first()["n"] == 24
 
 
@@ -591,7 +581,7 @@ def test_windowed_stream_join_inner(spark, sdf):
         from ev [size 1 h on ts] as s1
         join ev [size 1 h on ts] as s2 on s1.user = s2.user""")
     assert out.isStreaming
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     # per hour-window: 12 rows, 6 per user -> 2 windows * 2 users * 36
     assert len(rows) == 144
@@ -605,7 +595,7 @@ def test_windowed_stream_join_left(spark, sdf):
         from ev [size 1 h on ts] as s1
         left join ev [size 1 h on ts] as s2
           on s1.user = s2.user and s2.value > 100.0""")
-    sink = run_to_memory(out, "append")
+    sink = drain_to_memory(out, "append")
     rows = spark.sql(f"select * from {sink}").collect()
     # no right match ever (value <= 24): left rows survive with null.
     # Outer-join emission waits for the watermark to pass window end;
@@ -623,7 +613,7 @@ def test_parquet_sink(spark, sdf, tmp_path):
     q = eng.start_sink(out, format="parquet",
                        path=str(tmp_path / "out"),
                        checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     back = spark.read.parquet(str(tmp_path / "out"))
     assert back.count() == 4          # values 21..24
 
@@ -632,7 +622,7 @@ def test_console_ish_noop_sink(spark, sdf):
     eng = FsqlEngine(spark)
     eng.register("ev", sdf)
     q = eng.start_sink(eng.catalog.get("ev"), format="noop")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert q.lastProgress is not None
 
 

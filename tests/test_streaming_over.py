@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from flink_dsl_spark import FsqlEngine, PlanError
 from flink_dsl_spark.streaming import running_agg
 
+from .conftest import drain_to_memory
+
 T0 = dt.datetime(2026, 1, 1, 0, 0, 0)
 
 _OVER = ("over (partition by user order by ts, event_id "
@@ -34,18 +36,6 @@ def src_dir(spark, tmp_path_factory):
                      "value double, small long")
     df.coalesce(1).write.mode("overwrite").parquet(d)
     return d
-
-
-_SINK_N = [0]
-
-
-def _run(df, output_mode="append"):
-    _SINK_N[0] += 1
-    name = f"rover{_SINK_N[0]}"
-    q = (df.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    return name
 
 
 def _stream_engine(spark, src_dir):
@@ -71,7 +61,7 @@ def test_running_over_equals_batch_window(spark, src_dir):
            f"sum(small) {_OVER} as rsmall from ev")
     out = eng.sql(sql)
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: r for r in
            spark.sql(f"select * from {sink}").collect()}
 
@@ -106,7 +96,7 @@ def test_running_over_state_across_batches(spark, tmp_path):
     out = running_agg(sdf, ["user"], [("sum", "value", "rs"),
                                       ("count", None, "rstar")],
                       order_cols=["ts"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["value"]: (r["rs"], r["rstar"]) for r in
            spark.sql(f"select * from {sink}").collect()}
     assert got == {1.0: (1.0, 1), 2.0: (3.0, 2), 3.0: (6.0, 3),
@@ -132,7 +122,7 @@ def test_running_sum_nullable_bigint_exact_past_2p53(spark, tmp_path):
     out = running_agg(sdf, ["user"],
                       [("sum", "v", "rs"), ("min", "v", "rmn"),
                        ("max", "v", "rmx")], order_cols=["ts"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [(r["rs"], r["rmn"], r["rmx"]) for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     t3 = 3_000_000_000_000_000
@@ -166,7 +156,7 @@ def test_running_double_sum_carry_seeds_cumsum(spark, tmp_path):
            .option("maxFilesPerTrigger", 1).parquet(str(src) + "/*"))
     out = running_agg(sdf, ["user"], [("sum", "v", "rs")],
                       order_cols=["ts"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [r["rs"] for r in
            spark.sql(f"select rs from {sink} order by ts").collect()]
     assert got == [1e16, 1e16, 1e16]
@@ -189,7 +179,7 @@ def test_streaming_lag_equals_batch_window(spark, src_dir):
            "from ev")
     out = eng.sql(sql)
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: r for r in
            spark.sql(f"select * from {sink}").collect()}
     beng = FsqlEngine(spark)
@@ -223,7 +213,7 @@ def test_streaming_lag_state_across_batches(spark, tmp_path):
     out = running_agg(sdf, ["user"], [], order_cols=["ts"],
                       offsets=[("v", 2, None, "p2"),
                                ("v", 1, -1, "p1")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [(r["v"], r["p2"], r["p1"]) for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     assert got == [(10, None, -1), (20, None, 10), (30, 10, 20),
@@ -244,7 +234,7 @@ def test_streaming_lag_nullable_bigint_values_stay_long(spark, tmp_path):
     sdf = spark.readStream.schema(schema).parquet(src)
     out = running_agg(sdf, ["user"], [], order_cols=["ts"],
                       offsets=[("v", 1, None, "pv")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [r["pv"] for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     assert got == [None, 7, None]
@@ -292,7 +282,7 @@ def test_streaming_lag_default_type_checked_at_plan_time(spark, src_dir):
     # int default on a double column coerces to float and runs
     out = eng.sql("select event_id, lag(value, 1, -1) over (partition "
                   "by user order by ts, event_id) as pv from ev")
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: r["pv"] for r in
            spark.sql(f"select * from {sink}").collect()}
     assert got[0] == -1.0 and len(got) == 24
@@ -317,7 +307,7 @@ def test_streaming_over_survives_rw_column_collision(spark, tmp_path):
         "lag(v * 2, 1) over (partition by user order by ts) as dv, "
         "sum(v * 3) over (partition by user order by ts rows between "
         "unbounded preceding and current row) as rs from ev")
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = sorted((r["__rw_out0"], r["__rw_in0"], r["dv"], r["rs"])
                  for r in spark.sql(f"select * from {sink}").collect())
     assert got == [("keep0", "also0", None, 3.0),
@@ -336,7 +326,7 @@ def test_streaming_lag_expression_arg_and_zero_offset(spark, src_dir):
            "order by ts, event_id) as same from ev")
     out = eng.sql(sql)
     assert set(out.columns) == {"event_id", "dv", "same"}
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: (r["dv"], r["same"]) for r in
            spark.sql(f"select * from {sink}").collect()}
     beng = FsqlEngine(spark)
@@ -359,7 +349,7 @@ def test_streaming_first_last_value_equal_batch(spark, src_dir):
            f"sum(value) {_OVER} as rs from ev")
     out = eng.sql(sql)
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: tuple(r[c] for c in
                                 ("fv", "fu", "lv", "lv2", "rs"))
            for r in spark.sql(f"select * from {sink}").collect()}
@@ -389,7 +379,7 @@ def test_streaming_first_value_carries_across_batches(spark, tmp_path):
            .option("maxFilesPerTrigger", 1).parquet(str(src) + "/*"))
     out = running_agg(sdf, ["user"], [], order_cols=["ts"],
                       firsts=[("v", "fv")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [r["fv"] for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     assert got == [None, None, None, None, None]   # first value IS NULL
@@ -405,7 +395,7 @@ def test_streaming_pure_last_value_needs_no_state(spark, src_dir):
                   f"from ev")
     assert out.isStreaming
     assert eng.planner._stateful_passes == 0
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: r["lv"] for r in
            spark.sql(f"select * from {sink}").collect()}
     exp = {r["event_id"]: r["value"] for r in
@@ -430,7 +420,7 @@ def test_streaming_nth_value_equals_batch(spark, src_dir):
            f"count(*) {_OVER} as rn from ev")
     out = eng.sql(sql)
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: (r["v2"], r["u3"], r["rn"]) for r in
            spark.sql(f"select * from {sink}").collect()}
     beng = FsqlEngine(spark)
@@ -461,7 +451,7 @@ def test_streaming_nth_value_buffer_carries_across_batches(spark,
            .option("maxFilesPerTrigger", 1).parquet(str(src) + "/*"))
     out = running_agg(sdf, ["user"], [], order_cols=["ts"],
                       nths=[("v", 2, "n2"), ("v", 4, "n4")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [(r["n2"], r["n4"]) for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     # n2: the 2nd row's value is NULL — captured as NULL from row 2 on
@@ -493,7 +483,7 @@ def test_streaming_row_number_equals_batch(spark, src_dir):
     out = eng.sql(sql)
     assert out.isStreaming
     assert dict(out.dtypes)["rn"] == "int"
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: (r["rn"], r["rs"]) for r in
            spark.sql(f"select * from {sink}").collect()}
     beng = FsqlEngine(spark)
@@ -505,7 +495,7 @@ def test_streaming_row_number_equals_batch(spark, src_dir):
     capped = eng.sql("select event_id, row_number() over (partition "
                      "by user order by ts, event_id) as rn from ev "
                      "qualify rn <= 2")
-    sink2 = _run(capped)
+    sink2 = drain_to_memory(capped)
     assert spark.sql(f"select * from {sink2}").count() == 4
     # frames rejected like batch
     with pytest.raises(PlanError, match="frame"):
@@ -531,7 +521,7 @@ def test_streaming_rank_dense_rank_equals_batch(spark, src_dir):
     assert out.isStreaming
     assert dict(out.dtypes)["rnk"] == "int"
     assert dict(out.dtypes)["drnk"] == "int"
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: (r["rnk"], r["drnk"]) for r in
            spark.sql(f"select * from {sink}").collect()}
     beng = FsqlEngine(spark)
@@ -548,7 +538,7 @@ def test_streaming_rank_dense_rank_equals_batch(spark, src_dir):
                 "rank() over (partition by user order by small) as r, "
                 "row_number() over (partition by user order by small) "
                 "as rn from ev qualify r = 1")
-    sink2 = _run(q)
+    sink2 = drain_to_memory(q)
     assert spark.sql(f"select * from {sink2}").count() == 8
     plan = q._jdf.queryExecution().analyzed().toString()
     assert plan.count("FlatMapGroupsInPandasWithState") == 1
@@ -585,7 +575,7 @@ def test_streaming_rank_state_across_batches(spark, tmp_path):
            .option("maxFilesPerTrigger", 1).parquet(str(src) + "/*"))
     out = running_agg(sdf, ["user"], [], order_cols=["k"],
                       ranks=[("rank", "r"), ("dense_rank", "d")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [(r["k"], r["r"], r["d"]) for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     assert got == [(10, 1, 1), (10, 1, 1), (10, 1, 1),
@@ -610,7 +600,7 @@ def test_streaming_rank_null_keys_are_peers(spark, tmp_path):
            .option("maxFilesPerTrigger", 1).parquet(str(src) + "/*"))
     out = running_agg(sdf, ["user"], [], order_cols=["k"],
                       ranks=[("rank", "r"), ("dense_rank", "d")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [(r["k"], r["r"], r["d"]) for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     assert got == [(None, 1, 1), (None, 1, 1), (None, 1, 1),
@@ -685,7 +675,7 @@ def test_running_agg_survives_gk_column_collision(spark, tmp_path):
          .write.mode("overwrite").parquet(src)
     sdf = spark.readStream.schema(schema).parquet(src)
     out = running_agg(sdf, [], [("sum", "v", "rs")], order_cols=["ts"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = sorted((r["__gk"], r["rs"]) for r in
                  spark.sql(f"select * from {sink}").collect())
     assert got == [(100, 1.0), (101, 3.0), (102, 6.0)]
@@ -697,7 +687,7 @@ def test_running_over_expression_argument(spark, src_dir):
     eng = _stream_engine(spark, src_dir)
     out = eng.sql(f"select event_id, sum(value * 2) {_OVER} as d "
                   f"from ev")
-    sink = _run(out)
+    sink = drain_to_memory(out)
     rows = spark.sql(f"select * from {sink}").collect()
     assert len(rows) == 24
     assert not any(c.startswith("__rw") for c in
@@ -726,7 +716,7 @@ def test_running_over_expression_keys_equal_batch(spark, src_dir):
     out = eng.sql(sql)
     assert out.isStreaming
     assert out.columns == ["event_id", "rs", "rk"]
-    sink = _run(out)
+    sink = drain_to_memory(out)
     rows = spark.sql(f"select * from {sink}").collect()
     assert len(rows) == 24
     beng = FsqlEngine(spark)
@@ -862,7 +852,7 @@ def test_running_over_null_order_key_sorts_first(spark, tmp_path):
          .write.mode("overwrite").parquet(src)
     sdf = spark.readStream.schema(schema).parquet(src)
     out = running_agg(sdf, ["user"], [("sum", "value", "rs")], ["ts"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["value"]: r["rs"] for r in
            spark.sql(f"select * from {sink}").collect()}
     # NULL-ts row accumulates FIRST: its running sum is 100, then 101,
@@ -886,7 +876,7 @@ def test_running_over_all_null_prefix_emits_nulls(spark, tmp_path):
                       [("sum", "v", "rs"), ("count", "v", "rn"),
                        ("min", "v", "rmn"), ("avg", "v", "rav")],
                       ["ts"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     rows_out = sorted(spark.sql(f"select * from {sink}").collect(),
                       key=lambda r: r["ts"])
     assert [(r["rs"], r["rn"], r["rmn"], r["rav"])
@@ -919,7 +909,7 @@ def test_streaming_qualify_first_k_per_key(spark, src_dir):
                   f"between unbounded preceding and current row) as rn "
                   f"from ev qualify rn <= 3")
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = sorted((r["user"], r["event_id"], r["rn"]) for r in
                  spark.sql(f"select * from {sink}").collect())
     beng = FsqlEngine(spark)
@@ -933,7 +923,7 @@ def test_streaming_qualify_first_k_per_key(spark, src_dir):
     out2 = eng.sql("select event_id from ev qualify sum(value) over ("
                    "partition by user order by ts, event_id rows "
                    "between unbounded preceding and current row) < 10")
-    sink2 = _run(out2)
+    sink2 = drain_to_memory(out2)
     exp2 = beng.sql("select event_id from ev qualify sum(value) over ("
                     "partition by user order by ts, event_id rows "
                     "between unbounded preceding and current row) < 10")
@@ -955,7 +945,7 @@ def test_streaming_qualify_cap_composes_with_union(spark, src_dir):
            "select event_id, small as rn from ev where small = 0")
     out = eng.sql(sql)
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = sorted((r["event_id"], r["rn"]) for r in
                  spark.sql(f"select * from {sink}").collect())
     beng = FsqlEngine(spark)
@@ -1052,7 +1042,7 @@ def test_running_agg_matches_batch_window(spark, tmp_path_factory,
             for fn in sorted(fns)]
     sdf = spark.readStream.schema("seq long, k string, v long").parquet(d)
     out = running_agg(sdf, ["k"], aggs, ["seq"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["seq"]: tuple(r[a] for _f, _c, a in aggs)
            for r in spark.sql(f"select * from {sink}").collect()}
 
@@ -1105,7 +1095,7 @@ def test_running_agg_multibatch_multikey_doubles(spark, tmp_path_factory,
         sdf, ["ka", "kb"],
         [("sum", "v", "rs"), ("avg", "v", "ra"), ("count", "v", "rc")],
         ["seq"], offsets=[("v", k, -1.0, "lg")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["seq"]: (r["rs"], r["ra"], r["rc"], r["lg"]) for r in
            spark.sql(f"select * from {sink}").collect()}
 
@@ -1136,7 +1126,7 @@ def test_running_avg_integral_matches_batch_past_2p53(spark, tmp_path):
     sdf = spark.readStream.schema(schema).parquet(src)
     out = running_agg(sdf, [], [("avg", "v", "ra"), ("sum", "v", "rs")],
                       order_cols=["ts"])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [(r["ra"], r["rs"]) for r in
            spark.sql(f"select * from {sink} order by ts").collect()]
     from pyspark.sql import functions as F
@@ -1172,7 +1162,7 @@ def test_streaming_ignore_nulls_equals_batch(spark, src_dir):
     # the whole list still compiles to ONE stateful pass
     plan = out._jdf.queryExecution().analyzed().toString()
     assert plan.count("FlatMapGroupsInPandasWithState") == 1
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = {r["event_id"]: (r["l2"], r["fv"], r["lv"], r["n3"], r["rn"])
            for r in spark.sql(f"select * from {sink}").collect()}
     beng = FsqlEngine(spark)
@@ -1205,7 +1195,7 @@ def test_streaming_ignore_nulls_state_across_batches(spark, tmp_path):
         firsts=[("v", "fv", True)],
         nths=[("v", 2, "n2", True)],
         lasts=[("v", "lnn")])
-    sink = _run(out)
+    sink = drain_to_memory(out)
     got = [(r["v"], r["p1"], r["p2"], r["fv"], r["n2"], r["lnn"])
            for r in spark.sql(f"select * from {sink} order by ts")
            .collect()]
@@ -1263,7 +1253,7 @@ def test_streaming_ignore_respect_composition_fuzz(
     eng.register("ev", sdf)
     out = eng.sql(sql)
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     cols = ("li", "lr", "fi", "fr", "lvi", "ni", "rs")
     got = {r["seq"]: tuple(r[c] for c in cols)
            for r in spark.sql(f"select * from {sink}").collect()}
@@ -1284,7 +1274,7 @@ def test_streaming_qualify_with_expression_keys(spark, src_dir):
         "order by ts, event_id rows between unbounded preceding and "
         "current row) as rn from ev qualify rn <= 2")
     assert out.isStreaming
-    sink = _run(out)
+    sink = drain_to_memory(out)
     rows = spark.sql(f"select * from {sink}").collect()
     beng = FsqlEngine(spark)
     beng.register("ev", spark.read.parquet(src_dir))

@@ -181,7 +181,7 @@ def test_sessionize_streaming(spark, tmp_path):
                      {"n_events": F.count(F.lit(1))})
     q = (out.writeStream.format("memory").queryName("sess_sink")
          .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {(r["user"], r["n_events"])
            for r in spark.sql("select * from sess_sink").collect()
            if r["user"] == "u"}

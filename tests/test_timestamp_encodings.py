@@ -123,7 +123,7 @@ def _stream_result(spark, path, name):
                   f"from {name} [size 1 h on ts] group by event_type")
     q = (out.writeStream.format("memory").queryName(f"__enc_{name}")
          .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     return normalize(spark.sql(f"select * from __enc_{name}").toPandas())
 
 
