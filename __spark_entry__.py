@@ -1619,44 +1619,17 @@ def _llm_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _SINK_SEQ = [0]
 
 
-def _run_stream(spark, df, output_mode):
+def _run_stream(eng, df, output_mode):
     _SINK_SEQ[0] += 1
     name = f"entry_sink{_SINK_SEQ[0]}"
-    # Per-query state-partition scope (r15, VERDICT r14 items 3/5): a
-    # JVM-native stateful stream (windowed agg / dedup / stream join)
-    # pays a fixed per-partition state-store commit each micro-batch,
-    # so at bench scale 32 state partitions are almost pure overhead —
-    # measured s01: 2.5 s at 32 partitions, 0.87 s at 2.  The
-    # Python-stateful streams (applyInPandasWithState) are the
-    # opposite: their per-key Python work needs the parallelism
-    # (s11/s13 measured WORSE below 32, r14 ledger) — so the scope
-    # applies only when the analyzed plan has no Python stateful
-    # operator.  The count derives from defaultParallelism (never a
-    # constant): state-side parallelism still scales with cores, and
-    # at cluster scale (dp in the thousands) the divisor keeps state
-    # stores proportional to the cluster.  The conf is cloned into the
-    # stream at start() and restored immediately after — results are
-    # partition-count-independent (same agg, same rows).
-    native = ("FlatMapGroupsInPandasWithState"
-              not in df._jdf.queryExecution().analyzed().toString())
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if native:
-        dp = spark.sparkContext.defaultParallelism
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(max(1, dp // 8)))
-    try:
-        q = (df.writeStream.format("memory").queryName(name)
-             .outputMode(output_mode).trigger(availableNow=True).start())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    finished = q.awaitTermination(300)
-    if not finished:
+    q = eng.start_sink(df, name=name, output_mode=output_mode)
+    if not q.awaitTermination(300):
         # fail LOUDLY: a timed-out stream would otherwise return a
         # silently-partial sink table and read as an oracle mismatch
         q.stop()
         raise RuntimeError(f"streaming query {name} did not finish "
                            "within 300s")
-    return spark.table(name)
+    return eng.spark.table(name)
 
 
 def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1670,7 +1643,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = eng.sql("""
             select event_type, count(*) as cnt
             from events_s1 [size 1 h on ts] group by event_type""")
-        return _run_stream(spark, out, "complete")
+        return _run_stream(eng, out, "complete")
 
     def s02(spark, d):
         # stateful count window (applyInPandasWithState); (ts, event_id)
@@ -1683,7 +1656,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             aggs=[("sum", "value", "sv"), ("count", "value", "n"),
                   ("max", "value", "mx")],
             size=5, order_col=["ts", "event_id"])
-        df = _run_stream(spark, out, "append")
+        df = _run_stream(eng, out, "append")
         from pyspark.sql import functions as F
         return df.select("user_id", "window_no",
                          F.round("sv", 2).alias("sv"),
@@ -1702,7 +1675,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             from events_s3 [size 10 min on ts] as s1
             join events_s3 [size 10 min on ts] as s2
               on s1.user_id = s2.user_id""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s04(spark, d):
         # streaming delta-sliding windows (stateful); within each batch
@@ -1715,7 +1688,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             from events_s4 [size 50 on value every 20 on value
                             partitioned on user_id]
             group by user_id""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s05(spark, d):
         # streaming gap-based session windows (Spark-native
@@ -1728,7 +1701,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = eng.sql("""
             select user_id, count(*) as n
             from events_s5 [session 30 min on ts] group by user_id""")
-        return _run_stream(spark, out, "complete")
+        return _run_stream(eng, out, "complete")
 
     def s06(spark, d):
         # streaming SLIDING count window (stateful, partitioned): the
@@ -1742,7 +1715,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             select user_id, count(*) as cnt, round(sum(value), 2) as sv
             from events_s6 [size 6 every 3 partitioned on user_id]
             group by user_id""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s07(spark, d):
         # streaming SLIDING time window (native window() with slide);
@@ -1754,7 +1727,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             select event_type, count(*) as cnt
             from events_s7 [size 2 h on ts every 1 h]
             group by event_type""")
-        return _run_stream(spark, out, "complete")
+        return _run_stream(eng, out, "complete")
 
     def s08(spark, d):
         # streaming exact dedup: dropDuplicatesWithinWatermark keeps
@@ -1773,7 +1746,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                   .dropDuplicatesWithinWatermark(
                       ["user_id", "event_type"])
                   .select("user_id", "event_type"))
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s09(spark, d):
         # curation-on-a-stream: the llm text-quality operator applied
@@ -1787,7 +1760,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "docs_s9", f"{d}/documents.parquet")
         out = L.quality_score(eng.catalog.get("docs_s9"),
                               "text", "doc_id")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s10(spark, d):
         # sketching-on-a-stream: the HLL register table is a pure
@@ -1801,7 +1774,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         eng.register_stream_parquet(
             "docs_s10", f"{d}/documents.parquet")
         out = L.hll_registers(eng.catalog.get("docs_s10"), "text", p=9)
-        return _run_stream(spark, out, "complete")
+        return _run_stream(eng, out, "complete")
 
     def s11(spark, d):
         # streaming analytic OVER (r9 dialect extension): per-row
@@ -1829,7 +1802,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                        rows between unbounded preceding and current row)
                        as run_max
             from ev_s11""")
-        df = _run_stream(spark, out, "append")
+        df = _run_stream(eng, out, "append")
         from pyspark.sql import functions as F
         return df.select("user_id", "event_id",
                          F.round("run_sum", 2).alias("run_sum"),
@@ -1850,7 +1823,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                        rows between unbounded preceding and current row)
                        as rn
             from ev_s12 qualify rn <= 3""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s13(spark, d):
         # streaming lag (r10 dialect extension): the per-key
@@ -1876,7 +1849,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                        rows between unbounded preceding and current row)
                        as run_sum
             from ev_s13""")
-        df = _run_stream(spark, out, "append")
+        df = _run_stream(eng, out, "append")
         from pyspark.sql import functions as F
         return df.select("user_id", "event_id", "prev_type", "prev2_id",
                          F.round("run_sum", 2).alias("run_sum"))
@@ -1899,7 +1872,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    last_value(value) {frame} as cur_amt,
                    count(*) {frame} as run_n
             from ev_s14""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s15(spark, d):
         # streaming nth_value (r10): the n-th row's value per key via
@@ -1917,7 +1890,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    nth_value(value, 2) {frame} as second_amt,
                    count(*) {frame} as run_n
             from ev_s15""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s16(spark, d):
         # streaming row_number/rank/dense_rank in one stateful pass
@@ -1939,7 +1912,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    dense_rank() over (partition by user_id
                        order by ts, event_id) as drnk
             from ev_s16 qualify rn <= 5""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s17(spark, d):
         # streaming rank/dense_rank TIE semantics (r11): ordering by
@@ -1964,7 +1937,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    dense_rank() over (partition by user_id
                        order by event_type) as drnk
             from ev_s17 qualify drnk <= 2""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s18(spark, d):
         # streaming IGNORE NULLS (r11): lag / first_value /
@@ -1992,7 +1965,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    nth_value({nully}, 2) ignore nulls {frame}
                        as second_amt
             from ev_s18""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s19(spark, d):
         # streaming QUALIFY composed with EXPRESSION partition keys
@@ -2014,7 +1987,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    rank() over (partition by user_id % 4
                        order by ts, event_id) as rnk
             from ev_s19 qualify rn <= 7""")
-        return _run_stream(spark, out, "append")
+        return _run_stream(eng, out, "append")
 
     def s20(spark, d):
         # sample hint composed on a STREAM with running OVER + QUALIFY
@@ -2041,7 +2014,7 @@ def _stream_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                        rows between unbounded preceding and current row)
                        as run_amt
             from ev_s20 qualify rn <= 6""")
-        df = _run_stream(spark, out, "append")
+        df = _run_stream(eng, out, "append")
         from pyspark.sql import functions as F
         return df.select("user_id", "event_id", "rn",
                          F.round("run_amt", 2).alias("run_amt"))

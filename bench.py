@@ -226,6 +226,9 @@ def main():
                "gate_cores": gate}
     steady_first = None
     amb_steady = ambient["steady"]
+    # ambient_cores is biased slightly high (reparented bench children
+    # and steal/guest jiffies count as ambient): an upper bound, not an
+    # exact figure — conservative, as it can only add re-runs
     if (gate > 0 and amb_steady is not None
             and amb_steady["ambient_cores"] > gate):
         steady_first = steady

@@ -9,6 +9,7 @@ The three phases are timed like the reference's Timer
 from __future__ import annotations
 
 import os
+import threading
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +25,7 @@ from .parser import parse, parse_many
 from .planner import Planner
 from .resolver import Resolver
 from .session import get_session
+from .streaming.stateful import has_python_state
 from .timer import Timer
 
 # Extension -> reader format.  "tsv" is resolved to csv + tab separator
@@ -55,6 +57,9 @@ _REQUIRED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
+
+
+_START_LOCK = threading.Lock()
 
 
 def _warehouse_leftover(wh: str, name: str) -> Optional[str]:
@@ -385,15 +390,12 @@ class FsqlEngine:
                 self.resolver.resolve(src.query)
             with self.timer.phase("plan"):
                 df = self.planner.plan(src.query, params)
+            # the plan's stateful-pass mark, read before the rename,
+            # counts toward the one-pass limit of later uses (catalog)
+            stateful = has_python_state(df)
             if schema is not None:
                 df = df.toDF(*[f.name for f in schema.fields])
-            # carry the derived plan's stateful-pass mark into the
-            # catalog so later compositions over this view count it
-            # toward the one-pass limit (round-10 ADVICE)
-            self.register(
-                stmt.name, df, kind="stream",
-                stateful=(df.isStreaming and getattr(
-                    self.planner, "_stateful_passes", 0) > 0))
+            self.register(stmt.name, df, kind="stream", stateful=stateful)
             return None
 
         if isinstance(src, FileSource):
@@ -566,7 +568,17 @@ class FsqlEngine:
         """Write a streaming DataFrame to a sink; returns the
         StreamingQuery.  ``available_now=True`` drains what's available
         then stops (deterministic tests/batch-like runs); False runs
-        continuously."""
+        continuously.
+
+        A stream fixes its state partition count at its first start.  A
+        frame declared to carry Python state (``has_python_state``) keeps
+        the session's ``spark.sql.shuffle.partitions`` for its per-key
+        Python work; any other stream starts with ``max(1,
+        defaultParallelism // 8)``, as JVM state pays a state-store
+        commit per partition and micro-batch.  The session value is
+        restored under a lock shared by all starts.  Results do not
+        depend on the count.  A frame derived after ``sql()`` returned
+        is undeclared and gets the JVM count."""
         w = df.writeStream.format(format).outputMode(output_mode)
         if name:
             w = w.queryName(name)
@@ -578,7 +590,16 @@ class FsqlEngine:
             w = w.option(k, v)
         if available_now:
             w = w.trigger(availableNow=True)
-        return w.start()
+        spark, key = df.sparkSession, "spark.sql.shuffle.partitions"
+        with _START_LOCK:
+            old = spark.conf.get(key)
+            if not has_python_state(df):
+                spark.conf.set(key, str(max(
+                    1, spark.sparkContext.defaultParallelism // 8)))
+            try:
+                return w.start()
+            finally:
+                spark.conf.set(key, old)
 
     # ------------------------------------------------------------------
     # external RDBMS catalog (flinkdsl/database.scala:11-31 used

@@ -45,6 +45,7 @@ from .ast_nodes import (
 )
 from .errors import PlanError, UnsupportedError
 from .functions import FunctionRegistry
+from .streaming.stateful import _declare
 from .streaming.windows import last_window_filter, window_grouping
 
 
@@ -138,6 +139,9 @@ class Planner:
         # (populated by _plan_streaming_over, consulted by
         # _compile_window_func before its batch-only guard)
         self._stream_wf_cols: dict = {}
+        # applyInPandasWithState passes in the statement being planned
+        # (Spark allows one per streaming query; checked at plan time)
+        self._stateful_passes = 0
 
     # ------------------------------------------------------------------
     # statement dispatch
@@ -145,19 +149,16 @@ class Planner:
 
     def plan(self, stmt, params: Optional[list] = None):
         self._params = params or []
-        # stateful streaming passes created while planning THIS
-        # statement — Spark allows at most one applyInPandasWithState
-        # per streaming query, and its checker only fires at
-        # writeStream.start(); counting here lets plan_setop reject
-        # a second pass with a clean scope message at plan time
         self._stateful_passes = 0
         if isinstance(stmt, (Select, SetOp)):
             df = self.plan_query(stmt)
-            if df.isStreaming and self._stateful_passes > 1:
-                # derived-table compositions reach here too (e.g.
-                # streaming OVER over a subquery that already ran a
-                # stateful pass) — same limitation, same message
-                raise PlanError(self._ONE_STATEFUL_MSG)
+            if self._stateful_passes and df.isStreaming:
+                if self._stateful_passes > 1:
+                    # derived-table compositions reach here too (e.g.
+                    # streaming OVER over a subquery that already ran a
+                    # stateful pass) — same limitation, same message
+                    raise PlanError(self._ONE_STATEFUL_MSG)
+                _declare(df)            # read by FsqlEngine.start_sink
             return df
         from .ast_nodes import RecursiveWith
         if isinstance(stmt, RecursiveWith):
@@ -208,7 +209,7 @@ class Planner:
     def plan_setop(self, s: SetOp) -> DataFrame:
         left = self.plan_query(s.left)
         right = self.plan_query(s.right)
-        if getattr(self, "_stateful_passes", 0) > 1 \
+        if self._stateful_passes > 1 \
                 and (left.isStreaming or right.isStreaming):
             # Spark allows ONE applyInPandasWithState per streaming
             # query, and its UnsupportedOperationChecker only fires at
@@ -1464,14 +1465,12 @@ class Planner:
         if isinstance(rel, TableRef):
             df = self.catalog.get(rel.name).alias(rel.binding)
             if df.isStreaming and self.catalog.has(rel.name) \
-                    and getattr(self.catalog.meta(rel.name),
-                                "stateful", False):
+                    and self.catalog.meta(rel.name).stateful:
                 # a derived view whose plan already carries a stateful
                 # pass (StreamMeta.stateful): count every leaf use
                 # toward the one-pass limit so a second pass layered
                 # over it rejects at plan time (round-10 ADVICE)
-                self._stateful_passes = getattr(
-                    self, "_stateful_passes", 0) + 1
+                self._stateful_passes += 1
             if snapshot and rel.window is not None:
                 df = self._apply_snapshot_window(df, rel)
             return self._apply_tablesample(df, rel)
@@ -1620,8 +1619,7 @@ class Planner:
 
         base = df.withColumn("__ones", F.lit(1.0)) if needs_ones else df
         if base.isStreaming:
-            self._stateful_passes = getattr(
-                self, "_stateful_passes", 0) + 1
+            self._stateful_passes += 1
         if axis == "count":
             order_cols = None
             if isinstance(leaf, TableRef) and self.catalog.has(leaf.name):
@@ -2754,8 +2752,7 @@ class Planner:
         # after the projection compiles)
         self._stream_wf_cols = wf_map
         if stateful:
-            self._stateful_passes = getattr(
-                self, "_stateful_passes", 0) + 1
+            self._stateful_passes += 1
         return out
 
     def _compile_window_func(self, e: WindowFunc, df,

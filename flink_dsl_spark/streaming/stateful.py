@@ -44,6 +44,7 @@ sequential per-row loop.
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator, Optional
 
 import numpy as np
@@ -62,6 +63,19 @@ _SUPPORTED = ("sum", "count", "min", "max", "avg")
 # window-matrix cells aggregated per numpy call: bounds the per-key
 # working memory however many windows one micro-batch fires
 _BLOCK_CELLS = 1 << 20
+
+# Python-state frames, declared by the producers below and Planner.plan
+_PYTHON_STATE: "weakref.WeakSet[DataFrame]" = weakref.WeakSet()
+
+
+def _declare(df: DataFrame) -> DataFrame:
+    _PYTHON_STATE.add(df)
+    return df
+
+
+def has_python_state(df: DataFrame) -> bool:
+    """Whether ``df`` itself (not one derived from it) is declared."""
+    return df in _PYTHON_STATE
 
 
 def count_window_agg(sdf: DataFrame,
@@ -172,7 +186,7 @@ def count_window_agg(sdf: DataFrame,
     out = keyed.groupBy(*[f.name for f in key_fields]) \
         .applyInPandasWithState(fn, out_schema, state_schema, "append",
                                 GroupStateTimeout.NoTimeout)
-    return out if key_cols else out.drop(key_fields[0].name)
+    return _declare(out if key_cols else out.drop(key_fields[0].name))
 
 
 def delta_window_agg(sdf: DataFrame,
@@ -318,7 +332,7 @@ def delta_window_agg(sdf: DataFrame,
     out = keyed.groupBy(*[f.name for f in key_fields]) \
         .applyInPandasWithState(fn, out_schema, state_schema, "append",
                                 GroupStateTimeout.NoTimeout)
-    return out if key_cols else out.drop(key_fields[0].name)
+    return _declare(out if key_cols else out.drop(key_fields[0].name))
 
 
 def _keyed_input(sdf: DataFrame, key_cols: list[str], read: list[str],
@@ -1088,4 +1102,4 @@ def running_agg(sdf: DataFrame,
     out = keyed.groupBy(*group_keys).applyInPandasWithState(
         fn, out_schema, state_schema, "append",
         GroupStateTimeout.NoTimeout)
-    return out if key_cols else out.drop(group_keys[0])
+    return _declare(out if key_cols else out.drop(group_keys[0]))

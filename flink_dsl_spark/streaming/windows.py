@@ -214,10 +214,9 @@ def _global_index(df: DataFrame, order: Column,
                   total_name: str | None = None) -> DataFrame:
     """Total-order row numbering without a single-partition sort.
 
-    Three distributed phases, ALL lazy — zero driver jobs at
-    plan-build time (r15: the per-bucket-counts ``collect()`` the
-    eager variant ran is gone; the offsets AND the total come from
-    one in-plan fold):
+    Three distributed phases, lazy but for one plan-build job: without
+    ``known_range``, _range_bucket runs an eager min/max ``.first()``
+    pass (the offsets AND the total come from one in-plan fold):
       1. assign each row a range bucket via ``width_bucket`` (over a
          statically known range when the caller provides one, else a
          one-pass min/max — the bucket is a pure function of the

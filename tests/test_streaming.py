@@ -626,6 +626,72 @@ def test_console_ish_noop_sink(spark, sdf):
     assert q.lastProgress is not None
 
 
+# --------------------------------------------------------------------------
+# start_sink's state-partition policy: JVM state starts with
+# max(1, defaultParallelism // 8) partitions, declared Python state keeps
+# the session value, and the session conf is never left changed
+# --------------------------------------------------------------------------
+
+_PARTS = "spark.sql.shuffle.partitions"
+
+
+def _state_partitions(eng, df, name, mode):
+    """Drain ``df`` through start_sink; return the state operators'
+    partition counts, checking the session conf is left as it was."""
+    before = eng.spark.conf.get(_PARTS)
+    q = eng.start_sink(df, name=name, output_mode=mode, available_now=True)
+    assert eng.spark.conf.get(_PARTS) == before
+    assert q.awaitTermination(120) is True
+    ops = q.lastProgress["stateOperators"]
+    assert ops, f"{name}: no state operator"
+    return {op["numShufflePartitions"] for op in ops}
+
+
+def test_start_sink_jvm_state_gets_reduced_partitions(spark, sdf):
+    eng = FsqlEngine(spark)
+    eng.register("ev", sdf, event_time_col="ts")
+    out = eng.sql("select user, count(*) as cnt from ev [size 1 h on ts] "
+                  "group by user")
+    dp = spark.sparkContext.defaultParallelism
+    assert _state_partitions(eng, out, "policy_jvm", "complete") \
+        == {max(1, dp // 8)}
+
+
+def test_start_sink_running_over_keeps_session_partitions(spark, sdf):
+    eng = FsqlEngine(spark)
+    eng.register("ev", sdf)
+    out = eng.sql(
+        "select user, event_id, sum(value) over (partition by user "
+        "order by ts, event_id rows between unbounded preceding and "
+        "current row) as rs from ev")
+    session = int(spark.conf.get(_PARTS))
+    assert _state_partitions(eng, out, "policy_over", "append") \
+        == {session}
+
+
+def test_start_sink_count_window_agg_keeps_session_partitions(spark, sdf):
+    eng = FsqlEngine(spark)
+    out = count_window_agg(sdf, key_cols=["user"],
+                           aggs=[("sum", "value", "sv")], size=4,
+                           order_col="ts")
+    session = int(spark.conf.get(_PARTS))
+    assert _state_partitions(eng, out, "policy_cwa", "append") \
+        == {session}
+
+
+def test_start_sink_decides_by_declaration_not_plan_text(spark, sdf):
+    # JVM state whose output column carries the Python-state operator's
+    # plan-node name: a search of the plan string would misread it
+    eng = FsqlEngine(spark)
+    eng.register("ev", sdf, event_time_col="ts")
+    out = eng.sql("select user, count(*) as FlatMapGroupsInPandasWithState "
+                  "from ev [size 1 h on ts] group by user")
+    assert "FlatMapGroupsInPandasWithState" in out.columns
+    dp = spark.sparkContext.defaultParallelism
+    assert _state_partitions(eng, out, "policy_alias", "complete") \
+        == {max(1, dp // 8)}
+
+
 def test_windowed_join_count_axis_on_stream_raises(spark, sdf):
     eng = FsqlEngine(spark)
     eng.register("ev", sdf, event_time_col="ts")
@@ -685,3 +751,50 @@ def test_session_snapshot_distributed_plan_and_boundaries(spark):
     for ln in plan.splitlines():
         assert not ("Window" in ln and "SinglePartition" in ln)
         assert not ("Sort" in ln and "SinglePartition" in ln)
+
+
+def test_start_sink_concurrent_starts_keep_their_counts(spark, sdf):
+    # more starting threads than cores and a short switch interval: an
+    # unserialized set / start / restore hands a stream another stream's
+    # count or leaves the session conf changed
+    import sys
+    import threading
+    eng = FsqlEngine(spark)
+    eng.register("ev", sdf, event_time_col="ts")
+    session = spark.conf.get(_PARTS)
+    dp = spark.sparkContext.defaultParallelism
+    jobs = []
+    for i in range(dp + 2):
+        if i % 2:
+            jobs.append((count_window_agg(
+                sdf, key_cols=["user"], aggs=[("sum", "value", "sv")],
+                size=4, order_col="ts"), "append", int(session)))
+        else:
+            jobs.append((eng.sql(
+                "select user, count(*) as cnt from ev [size 1 h on ts] "
+                "group by user"), "complete", max(1, dp // 8)))
+    queries = [None] * len(jobs)
+
+    def start(i):
+        df, mode, _ = jobs[i]
+        queries[i] = eng.start_sink(df, name=f"policy_conc{i}",
+                                    output_mode=mode, available_now=True)
+
+    threads = [threading.Thread(target=start, args=(i,))
+               for i in range(len(jobs))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert spark.conf.get(_PARTS) == session
+    for q, (_, _, want) in zip(queries, jobs):
+        assert q is not None
+        assert q.awaitTermination(120) is True
+        assert {op["numShufflePartitions"]
+                for op in q.lastProgress["stateOperators"]} == {want}

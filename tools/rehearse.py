@@ -10,8 +10,8 @@ the 50-key window — the below-fold queries only ever run at sf0.001
 in the pytest sweep, so this is the one check that exercises them on
 the gate corpus.  ``--only`` takes a comma-separated key list for a
 quick driver-style check of specific queries.
-Prints one OK/FAIL line per query and a JSON summary; exit code 1 on
-any failure.
+Prints one OK/FAIL/RAN line per query and a JSON summary; exit code 1
+on any failure, 2 on bad usage (e.g. no sf_dir/region.parquet).
 """
 
 import json
@@ -32,17 +32,21 @@ def main() -> int:
     if "--only" in argv:
         k = argv.index("--only")
         if k + 1 >= len(argv):
-            print("usage: --only key1[,key2,...]")
-            return 1
+            print(__doc__)
+            return 2
         only = [s for s in argv[k + 1].split(",") if s]
         argv = argv[:k] + argv[k + 2:]
     args = [a for a in argv if a != "--all"]
     sweep_all = "--all" in argv
     sf = args[0] if args else "/root/testdata/sf0.01"
+    if not os.path.isfile(os.path.join(sf, "region.parquet")):
+        print(__doc__)
+        return 2
     import duckdb
 
     import __spark_entry__ as entry
     from flink_dsl_spark import get_session
+    from perfbench.stats import frames_match
 
     spark = get_session("rehearse")
     spark.sparkContext.setLogLevel("ERROR")
@@ -71,22 +75,11 @@ def main() -> int:
                 # summary can't be read as 187 value-verified keys.
                 results[name] = {"rows": len(sdf), "oracle": None,
                                  "ok": True, "run_only": True}
-                continue
-            odf = con.sql(o).df()
-            cols_s, cols_o = sorted(sdf.columns), sorted(odf.columns)
-            schema_ok = cols_s == cols_o
-            a = (sdf[cols_s].sort_values(cols_s).reset_index(drop=True)
-                 if schema_ok else sdf)
-            b = (odf[cols_o].sort_values(cols_o).reset_index(drop=True)
-                 if schema_ok else odf)
-            vals_ok = bool(
-                schema_ok and len(a) == len(b) and all(
-                    (a[c].astype(str).values ==
-                     b[c].astype(str).values).all() for c in a.columns))
-            results[name] = {"rows": len(sdf), "oracle": len(odf),
-                             "schema": schema_ok, "values": vals_ok,
-                             "ok": vals_ok,
-                             "sec": round(time.time() - t0, 2)}
+            else:
+                odf = con.sql(o).df()
+                results[name] = {"rows": len(sdf), "oracle": len(odf),
+                                 "ok": frames_match(sdf, odf),
+                                 "sec": round(time.time() - t0, 2)}
         except Exception as ex:            # noqa: BLE001 — report, don't die
             results[name] = {"ok": False, "err": str(ex)[:300]}
         r = results[name]
