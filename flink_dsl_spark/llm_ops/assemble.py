@@ -441,9 +441,8 @@ def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
     # a min/max scan plus a subtotal-collect scan before the query
     # even started (guide §1.2 / §5: remove passes, keep the driver
     # out of the data path).
-    d = d.withColumn(bkt, _range_bucket(
-        d, F.col(key), buckets,
-        known_range=getattr(id_hash, "hash_range", None)))
+    d = _range_bucket(d, F.col(key), buckets, bkt,
+                      known_range=getattr(id_hash, "hash_range", None))
     from ..streaming.windows import _lazy_prefix_offsets
     off_df = _lazy_prefix_offsets(d, bkt, F.sum(n), off)
     w = (W.partitionBy(bkt).orderBy(key, id_col)
@@ -833,9 +832,8 @@ def shard_corpus(df: DataFrame, id_col: str, tokens_col: str,
     # token_budget_filter: no min/max pass, no subtotal collect; one
     # action, the corpus touched by exactly the (partial-aggregated)
     # subtotal branch and the main branch
-    d = d.withColumn("__bkt", _range_bucket(
-        d, F.col("__key"), buckets,
-        known_range=getattr(id_hash, "hash_range", None)))
+    d = _range_bucket(d, F.col("__key"), buckets, "__bkt",
+                      known_range=getattr(id_hash, "hash_range", None))
     from ..streaming.windows import _lazy_prefix_offsets
     off_df = _lazy_prefix_offsets(d, "__bkt", F.sum("n_tokens"), "__off")
     w = (W.partitionBy("__bkt").orderBy("__key", "id")

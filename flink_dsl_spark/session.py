@@ -4,6 +4,17 @@ Test profile is local[N] (single JVM), but every knob here is chosen for
 the 1000-executor case too: AQE on (runtime re-planning, skew-join
 handling, partition coalescing), auto broadcast for small dims, Arrow for
 the Pandas-UDF paths (LLM ops).
+
+Two confs make the driver side cheaper and quieter:
+``spark.python.sql.dataFrameDebugging.enabled=false`` stops PySpark
+from wrapping every Column function with a call-site capture (five JVM
+round trips each), which cuts the py4j traffic of building a plan by
+about two thirds; the price is that a Spark ``AnalysisException`` raised
+from a DataFrame call no longer names the Python line.  It is a static
+conf, read once per process, so it only takes effect when set here at
+build time — ``FsqlEngine`` cannot set it on a caller's session.
+``spark.ui.showConsoleProgress=false`` keeps the ``[Stage N:>`` bar off
+stderr lines that scripts parse.
 """
 
 from __future__ import annotations
@@ -38,5 +49,7 @@ def get_session(app_name: str = "flink-dsl-spark",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

@@ -31,9 +31,11 @@ our documented choices — SURVEY.md §2.9, §7.0):
 Count-axis note for 100 TB scale: a totally-ordered count window (no
 ``partitioned on``) still needs a global row number, but NOT a global
 single-task sort: ``_global_index`` range-buckets rows on the order
-column (width_bucket over a one-pass min/max), numbers each bucket in
-parallel, and rebases with broadcast per-bucket offsets — the plan has
-no single-partition Exchange.  With ``partitioned on k`` the row_number
+column (width_bucket over an in-plan min/max), numbers each bucket in
+parallel, and rebases with broadcast per-bucket offsets — its only
+single-partition Exchanges carry pre-aggregated rows (one per input
+partition for the min/max, one per bucket for the offsets), never the
+table's rows.  With ``partitioned on k`` the row_number
 partitions by key and parallelizes directly.  Global MAX lookups
 (snapshot windows, trigger high-water marks) use a scalar aggregate
 broadcast-joined back, not a whole-table window.
@@ -118,63 +120,67 @@ def _order_col(spec: WindowSpec, time_col: Optional[Column]) -> Column:
 # distributed total-order helpers (batch only)
 # --------------------------------------------------------------------------
 
-def _cast_to_double_is_monotone(df: DataFrame, order: Column) -> bool:
-    """True iff ``order.cast('double')`` preserves the column's sort
-    order.  Numeric / timestamp / date / boolean casts are monotone;
-    strings are NOT (lexicographic "10" < "9" but numeric 10 > 9), and
-    complex types don't cast at all — those fall back to the one-bucket
-    (single-task row_number) path, which is slow but correct for any
-    orderable type."""
+def _order_as_double(df: DataFrame, order: Column) -> Optional[Column]:
+    """``order`` as a double whose sort order matches the column's, or
+    None when no such cast exists.  Numeric / timestamp / date / boolean
+    casts are monotone; strings are NOT (lexicographic "10" < "9" but
+    numeric 10 > 9), and complex types don't cast at all — those fall
+    back to the one-bucket (single-task row_number) path, which is slow
+    but correct for any orderable type."""
     from pyspark.sql.types import (BooleanType, DateType, NumericType,
                                    TimestampNTZType, TimestampType)
     dt = df.select(order.alias("__o")).schema[0].dataType
-    return isinstance(dt, (NumericType, TimestampType, TimestampNTZType,
-                           DateType, BooleanType))
+    if isinstance(dt, TimestampNTZType):
+        # TIMESTAMP_NTZ has no direct double cast; hop through LTZ
+        # (session TZ is UTC under the engine, and any fixed zone
+        # preserves order)
+        return order.cast("timestamp").cast("double")
+    if isinstance(dt, (NumericType, TimestampType, DateType, BooleanType)):
+        return order.cast("double")
+    return None
 
 
-def _range_bucket(df: DataFrame, order: Column, buckets: int,
-                  known_range: tuple[float, float] | None = None):
-    """Range-bucket expression for ``order`` such that bucket ids are
-    non-decreasing along the column's sort order: NULLs -> 0 (sort
-    first), NaN -> buckets+2 (sorts last in Spark), everything else via
-    ``width_bucket`` over the non-NaN min/max.  Falls back to a single
-    bucket when the cast to double is not order-preserving or the range
-    is degenerate.
+def _range_bucket(df: DataFrame, order: Column, buckets: int, out: str,
+                  known_range: tuple[float, float] | None = None
+                  ) -> DataFrame:
+    """``df`` plus an integer column ``out`` holding a range bucket of
+    ``order``: bucket ids are non-decreasing along the column's sort
+    order and equal values share a bucket.  NULLs -> 0 (sort first),
+    NaN -> buckets+2 (sorts last in Spark), everything else via
+    ``width_bucket`` over the non-NaN min/max.  One bucket when the
+    cast to double is not order-preserving or the range is empty or
+    degenerate (NaN rows still go to the top bucket).
+
+    The min/max is a scalar aggregate broadcast cross-joined back, the
+    ``_with_global_max`` shape: it runs inside the query, so building
+    the plan launches no job, and the single-partition step it adds
+    carries one partial-aggregate row per input partition.
 
     ``known_range``: static (lo, hi) bounds covering every possible
-    value of ``order`` — callers whose order key is a seeded HASH know
-    its codomain a priori (xxhash64: full int64; md5-60bit: [0, 2^60)),
-    so the one-pass min/max scan this function otherwise runs is a
-    wasted full pass over the input (r14 optimization, guide §1.2:
-    remove unnecessary passes).  Bucket boundaries differ from the
-    observed-range ones, but every consumer only requires bucket ids to
-    be non-decreasing along the sort order with equal keys sharing a
-    bucket — any fixed monotone bucketing satisfies that, so results
-    are unchanged."""
-    if buckets <= 1 or not _cast_to_double_is_monotone(df, order):
-        return F.lit(1)
-    from pyspark.sql.types import TimestampNTZType
-    dt = df.select(order.alias("__o")).schema[0].dataType
-    # TIMESTAMP_NTZ has no direct double cast; hop through LTZ (session
-    # TZ is UTC under the engine, and any fixed zone preserves order)
-    num = (order.cast("timestamp").cast("double")
-           if isinstance(dt, TimestampNTZType) else order.cast("double"))
-    safe = F.when(F.isnan(num), F.lit(None)).otherwise(num)
-    if known_range is not None:
-        mn, mx = float(known_range[0]), float(known_range[1])
+    value of ``order``.  Callers whose order key is a seeded hash know
+    its codomain (xxhash64: full int64; md5-60bit: [0, 2^60)); with it
+    the bounds are literals and the min/max pass is not planned at
+    all.  Its boundaries differ from the observed-range ones, but every
+    consumer only needs a monotone bucketing, so results are
+    unchanged."""
+    num = _order_as_double(df, order) if buckets > 1 else None
+    if num is None:
+        return df.withColumn(out, F.lit(1))
+    if known_range is None:
+        safe = F.when(F.isnan(num), F.lit(None)).otherwise(num)
+        rng = df.select(F.min(safe).alias("__rb_mn"),
+                        F.max(safe).alias("__rb_mx"))
+        d = df.crossJoin(F.broadcast(rng))
+        mn, mx = F.col("__rb_mn"), F.col("__rb_mx")
     else:
-        row = df.select(F.min(safe).alias("mn"),
-                        F.max(safe).alias("mx")).first()
-        mn, mx = row["mn"], row["mx"]
-    if mn is None or mn == mx:
-        # empty / all-NULL / constant order column: one bucket is all
-        # there is (NaN rows, if any, still go to the top bucket)
-        base = F.lit(1)
-    else:
-        base = F.coalesce(
-            F.width_bucket(num, F.lit(mn), F.lit(mx), F.lit(buckets)),
-            F.lit(0))        # nulls sort first
-    return F.when(F.isnan(num), F.lit(buckets + 2)).otherwise(base)
+        d = df
+        mn, mx = (F.lit(float(v)) for v in known_range)
+    base = F.when(mn.isNull() | (mn == mx), F.lit(1)).otherwise(
+        F.coalesce(F.width_bucket(num, mn, mx, F.lit(buckets)),
+                   F.lit(0)))        # nulls sort first
+    d = d.withColumn(out, F.when(F.isnan(num), F.lit(buckets + 2))
+                          .otherwise(base))
+    return d if known_range is not None else d.drop("__rb_mn", "__rb_mx")
 
 
 def _lazy_prefix_offsets(d: DataFrame, bkt_col: str, measure,
@@ -214,17 +220,17 @@ def _global_index(df: DataFrame, order: Column,
                   total_name: str | None = None) -> DataFrame:
     """Total-order row numbering without a single-partition sort.
 
-    Three distributed phases, lazy but for one plan-build job: without
-    ``known_range``, _range_bucket runs an eager min/max ``.first()``
-    pass (the offsets AND the total come from one in-plan fold):
-      1. assign each row a range bucket via ``width_bucket`` (over a
-         statically known range when the caller provides one, else a
-         one-pass min/max — the bucket is a pure function of the
-         value, so recomputation across jobs is deterministic);
+    Three distributed phases, all inside the plan (building it runs no
+    job):
+      1. assign each row a range bucket via ``width_bucket`` over an
+         in-plan min/max, or over a statically known range when the
+         caller provides one (see _range_bucket) — the bucket is a pure
+         function of the value, so recomputation across jobs is
+         deterministic;
       2. ``row_number`` per bucket — one task per bucket, parallel;
-      3. rebase with per-bucket offsets built lazily inside the plan
-         (count aggregate -> cumulative window over at most buckets+3
-         aggregated rows -> broadcast join back).
+      3. rebase with per-bucket offsets (count aggregate -> cumulative
+         window over at most buckets+3 aggregated rows -> broadcast
+         join back).
 
     Ties within the order column keep row_number's usual arbitrary tie
     order; equal values always share a bucket, so the numbering is a
@@ -235,15 +241,11 @@ def _global_index(df: DataFrame, order: Column,
     offsets fold (an unbounded frame over the identical tiny window),
     so callers needing "last N of the total order" filter in-plan
     instead of forcing an eager counting pass.
-
-    ``known_range`` skips the min/max pass (see _range_bucket).
     """
     spark = df.sparkSession
     if buckets is None:
         buckets = spark.sparkContext.defaultParallelism
-    df = df.withColumn("__bkt",
-                       _range_bucket(df, order, buckets,
-                                     known_range=known_range))
+    df = _range_bucket(df, order, buckets, "__bkt", known_range=known_range)
     off_df = _lazy_prefix_offsets(df, "__bkt", F.count(F.lit(1)),
                                   "__off", total_name=total_name)
     lrn = F.row_number().over(W.partitionBy("__bkt").orderBy(order))
@@ -255,34 +257,23 @@ def _global_index(df: DataFrame, order: Column,
 def _latest_session_distributed(df: DataFrame, time_col: Column,
                                 gap: Column) -> DataFrame:
     """Rows of the latest gap-delimited run of a total time order,
-    without a single-partition Window.
+    without a single-partition Window over the rows.
 
     The old formulation (lag + running sum over an empty partitionBy)
     serialized the whole table through one task.  Instead: range-bucket
-    on time, lag WITHIN each bucket (parallel), repair the one missing
-    predecessor per bucket from the broadcast per-bucket maxima, then
-    the latest session start is a scalar max over session-start rows —
-    three distributed passes, each column-pruned, none single-task."""
-    spark = df.sparkSession
-    buckets = spark.sparkContext.defaultParallelism
-    d = df.withColumn("__bkt", _range_bucket(df, time_col, buckets))
-    # per-bucket max time, sorted by bucket: each bucket's boundary
-    # predecessor is the previous NON-EMPTY bucket's max
-    bmax = sorted((r["__bkt"], r["bm"]) for r in
-                  d.groupBy("__bkt").agg(F.max(time_col).alias("bm"))
-                   .collect())
-    boundary, prev_max = [], None
-    for b, m in bmax:
-        boundary.append((b, prev_max))
-        prev_max = m
-    ts_type = df.select(time_col.alias("__t")).schema[0].dataType
-    from pyspark.sql.types import IntegerType, StructField, StructType
-    bschema = StructType([StructField("__bkt", IntegerType()),
-                          StructField("__prev_bmax", ts_type)])
-    bdf = spark.createDataFrame(
-        [(int(b), p) for b, p in boundary], schema=bschema)
+    on time, lag WITHIN each bucket (parallel), and repair the one
+    missing predecessor per bucket — the previous non-empty bucket's
+    max — from a lag over the per-bucket maxima (at most buckets+3
+    aggregated rows), broadcast back.  The latest session start is then
+    a scalar max over session-start rows.  Every pass is in-plan and
+    column-pruned; none moves corpus rows through one task."""
+    buckets = df.sparkSession.sparkContext.defaultParallelism
+    d = _range_bucket(df, time_col, buckets, "__bkt")
+    bprev = (d.groupBy("__bkt").agg(F.max(time_col).alias("__bm"))
+              .select("__bkt", F.lag("__bm").over(W.orderBy("__bkt"))
+                                 .alias("__prev_bmax")))
     w = W.partitionBy("__bkt").orderBy(time_col)
-    d = (d.join(F.broadcast(bdf), "__bkt")
+    d = (d.join(F.broadcast(bprev), "__bkt")
           .withColumn("__prev", F.coalesce(F.lag(time_col).over(w),
                                            F.col("__prev_bmax"))))
     new_sess = F.col("__prev").isNull() | (time_col > F.col("__prev") + gap)

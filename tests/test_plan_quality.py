@@ -130,11 +130,11 @@ def test_global_count_windows_have_no_single_partition_exchange(
     the whole table through one task via Window.partitionBy().orderBy();
     the distributed _global_index / broadcast-scalar-max rewrite must
     keep every Exchange partitioned."""
-    # count-axis windows number rows with the LAZY offsets fold (r15:
-    # the eager per-bucket-counts collect is gone, closing the last
-    # driver job in windows.py): exactly the one
+    # count-axis windows number rows with the lazy offsets fold over
+    # an in-plan min/max range bucket: exactly the one
     # SinglePartition-over-bucket-subtotals exchange of the llm44/q80
-    # prefix-sum family is allowed, never a corpus-sized one
+    # prefix-sum family is allowed, plus the min/max scalar fold's
+    # one-row-per-partition exchange — never a corpus-sized one
     for name in ["q28_count_tumbling", "q29_count_sliding"]:
         plan = queries[name](spark, SF) \
             ._jdf.queryExecution().executedPlan().toString()
@@ -208,11 +208,16 @@ def test_dup_spans_shuffles_hashes_not_substrings(spark, queries):
 
 
 _BKT_AGG_RE = re.compile(r"HashAggregate\(keys=\[[^]\n]*__\w*bkt")
+# the range bucket's in-plan min/max: a keyless partial aggregate whose
+# only two functions are partial_min and partial_max
+_RANGE_AGG_RE = re.compile(
+    r"HashAggregate\(keys=\[\], functions=\[partial_min\(.*\), "
+    r"partial_max\(.*\)\], output=\[[^,\]]+, [^,\]]+\]\)$")
 
 
 def _assert_single_partition_only_over_bucket_agg(p: str,
                                                   max_folds: int = 1):
-    """r14 lazy-offsets shape: the per-bucket prefix offsets are built
+    """Lazy-offsets shape: the per-bucket prefix offsets are built
     inside the plan (bucket aggregate -> cumulative window -> broadcast)
     instead of an eager collect, so a SinglePartition exchange is
     legitimate — but only when its input is the already-aggregated
@@ -220,20 +225,28 @@ def _assert_single_partition_only_over_bucket_agg(p: str,
     1..buckets+1, NaN bucket buckets+2), never corpus rows.  Assert
     each SinglePartition exchange is fed directly by the bucket
     HashAggregate (keyed on a __*bkt bookkeeping column — the strict
-    regex, r14 ADVICE: a bare 'bkt' substring could false-pass on an
-    unrelated aggregate), at most ``max_folds`` of them (a query
-    composing several lazy prefix-offset folds passes its own count),
-    and the corpus-sized cumsum window stays hash-partitioned by the
-    bucket column."""
+    regex: a bare 'bkt' substring could false-pass on an unrelated
+    aggregate), at most ``max_folds`` of them (a query composing
+    several lazy prefix-offset folds passes its own count), and the
+    corpus-sized cumsum window stays hash-partitioned by the bucket
+    column.  The one other shape allowed is the range bucket's in-plan
+    min/max: a SinglePartition exchange fed directly by a keyless
+    partial_min/partial_max aggregate, which carries at most one row
+    per input partition (it may appear once per branch that reads the
+    bucket column)."""
     lines = p.splitlines()
     sp = [i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln]
-    assert len(sp) <= max_folds, p
+    folds = 0
     for i in sp:
         assert i + 1 < len(lines), \
             f"SinglePartition with no child in plan:\n{lines[i]}"
         nxt = lines[i + 1]
+        if _RANGE_AGG_RE.search(nxt):
+            continue
         assert _BKT_AGG_RE.search(nxt), \
             f"SinglePartition not fed by the bucket aggregate:\n{nxt}"
+        folds += 1
+    assert folds <= max_folds, p
     assert any("Exchange hashpartitioning(" in ln and "bkt" in ln
                for ln in lines), "corpus window lost its bucket partitioning"
 
