@@ -82,6 +82,12 @@ class Catalog:
         self._relations: dict[str, DataFrame] = {}
         self._meta: dict[str, StreamMeta] = {}
         self._schemas: dict[str, T.StructType] = {}
+        # facts about a relation, computed on first use and dropped by
+        # register/unregister (the one place a relation changes): its
+        # column names (a schema fetch each), and its frame aliased per
+        # binding (a Dataset.as re-analysis each)
+        self._columns: dict[str, tuple[str, ...]] = {}
+        self._aliased: dict[str, dict[str, DataFrame]] = {}
 
     # --- named schemas (CREATE SCHEMA) ---
 
@@ -127,6 +133,7 @@ class Catalog:
                 meta = StreamMeta(name, is_stream=df.isStreaming)
         self._relations[key] = df
         self._meta[key] = meta
+        self._forget(key)
         # also expose to spark.sql for the SQL-compilation path
         df.createOrReplaceTempView(name)
 
@@ -137,6 +144,7 @@ class Catalog:
         existed = key in self._relations
         self._relations.pop(key, None)
         self._meta.pop(key, None)
+        self._forget(key)
         try:
             self.spark.catalog.dropTempView(name)
         except Exception:    # noqa: BLE001 — view may not exist
@@ -161,8 +169,25 @@ class Catalog:
     def has(self, name: str) -> bool:
         return name.lower() in self._relations
 
-    def columns(self, name: str) -> list[str]:
-        return self.get(name).columns
+    def columns(self, name: str) -> tuple[str, ...]:
+        key = name.lower()
+        cols = self._columns.get(key)
+        if cols is None:
+            cols = self._columns[key] = tuple(self.get(name).columns)
+        return cols
+
+    def aliased(self, name: str, binding: str) -> DataFrame:
+        """``get(name).alias(binding)``, built once per binding."""
+        key = name.lower()
+        df = self._aliased.get(key, {}).get(binding)
+        if df is None:
+            df = self.get(name).alias(binding)
+            self._aliased.setdefault(key, {})[binding] = df
+        return df
+
+    def _forget(self, key: str) -> None:
+        self._columns.pop(key, None)
+        self._aliased.pop(key, None)
 
     def names(self) -> list[str]:
         return sorted(self._relations)

@@ -8,7 +8,9 @@ zero custom optimizer rules by design).
 
 Key mechanics:
   * every base relation is ``df.alias(binding)`` so qualified column refs
-    compile to ``F.col("binding.name")``;
+    compile to ``col("binding.name")``; column handles and aliased
+    relations are built once per engine (``Planner._col``,
+    ``Catalog.aliased``), not once per statement;
   * aggregation uses a two-phase compile: pre-project grouping exprs as
     ``__g{i}`` and aggregate arguments as ``__a{j}``, then groupBy/rollup
     over the hidden columns — HAVING and ORDER BY compile in the same
@@ -25,6 +27,7 @@ Key mechanics:
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Optional
 
@@ -120,11 +123,22 @@ def _has_window(sel) -> bool:
                for l in relation_leaves(sel.from_))
 
 
+# capacity of Planner._col: a warm pass of the 78 catalog FSQL
+# statements references 204 distinct names
+_COL_MEMO_SIZE = 4096
+
+
 class Planner:
     def __init__(self, catalog, registry: FunctionRegistry, resolver):
         self.catalog = catalog
         self.registry = registry
         self.resolver = resolver
+        # every column reference, by name: PySpark Classic Columns are
+        # immutable, so one handle serves every statement, and F.col
+        # costs three py4j round trips (class lookup, member lookup,
+        # call).  Per planner, never module level: a handle belongs to
+        # one JVM gateway.
+        self._col = functools.lru_cache(maxsize=_COL_MEMO_SIZE)(F.col)
         self._params: list = []
         # salt(key, n) specs for the Select currently being planned;
         # keys are POPPED as their join consumes them (plan_select
@@ -232,7 +246,7 @@ class Planner:
             raise PlanError(f"unknown set op {s.op}")
         if s.order_by:
             df = df.orderBy(*[
-                _sorted_col(F.col(df.columns[_setop_order_index(s, o, df)]),
+                _sorted_col(self._col(df.columns[_setop_order_index(s, o, df)]),
                             o)
                 for o in s.order_by])
         df = _apply_limit_offset(df, self._lit_int(s.limit),
@@ -479,10 +493,10 @@ class Planner:
                     raise PlanError(
                         f"ORDER BY position {pos} is not in the select "
                         f"list (1..{len(df.columns)})")
-                oc = F.col(df.columns[pos - 1])
+                oc = self._col(df.columns[pos - 1])
             elif isinstance(o.expr, Col) and o.expr.qualifier is None \
                     and o.expr.name.lower() in lower:
-                oc = F.col(lower[o.expr.name.lower()])
+                oc = self._col(lower[o.expr.name.lower()])
             else:
                 raise PlanError(
                     "ORDER BY with SELECT DISTINCT must reference "
@@ -553,11 +567,11 @@ class Planner:
         w: WindowSpec = leaf.window
         if w.size.on_col is not None:
             c = w.size.on_col
-            return F.col(f"{c.binding}.{c.name}")
+            return self._col(f"{c.binding}.{c.name}")
         if isinstance(leaf, TableRef) and self.catalog.has(leaf.name):
             meta = self.catalog.meta(leaf.name)
             if meta.event_time_col:
-                return F.col(f"{leaf.binding}.{meta.event_time_col}")
+                return self._col(f"{leaf.binding}.{meta.event_time_col}")
         return None
 
     def _needs_aggregation(self, sel: Select) -> bool:
@@ -667,7 +681,7 @@ class Planner:
             pred = self._compile(sel.qualify, qdf)
         finally:
             self._qualify_aliases = prev
-        qdf = qdf.withColumn("__qual", pred).filter(F.col("__qual"))
+        qdf = qdf.withColumn("__qual", pred).filter(self._col("__qual"))
 
         cols: list[Column] = []
         out_names: list[str] = []
@@ -678,7 +692,7 @@ class Planner:
                 out_names.extend(star_names)
             else:
                 h, name = payload
-                cols.append(F.col(h).alias(name))
+                cols.append(self._col(h).alias(name))
                 out_names.append(name)
         return self._project_ordered(sel, qdf, cols, out_names, order)
 
@@ -702,14 +716,14 @@ class Planner:
                     raise PlanError(
                         f"ORDER BY position {pos} is not in the select "
                         f"list (1..{len(out_names)})")
-                oc = F.col(out_names[pos - 1])
+                oc = self._col(out_names[pos - 1])
             elif isinstance(o.expr, Col) and o.expr.qualifier is None \
                     and o.expr.name.lower() in lower_names:
-                oc = F.col(lower_names[o.expr.name.lower()])
+                oc = self._col(lower_names[o.expr.name.lower()])
             else:
                 h = f"__o{k}"
                 hidden.append(self._compile(o.expr, df).alias(h))
-                oc = F.col(h)
+                oc = self._col(h)
             order_cols.append(_sorted_col(oc, o))
         df = df.select(*cols, *hidden).orderBy(*order_cols)
         return df.drop(*[f"__o{k}" for k in range(len(sel.order_by))
@@ -725,7 +739,7 @@ class Planner:
                          if isinstance(leaf, TableRef)
                          else self.resolver.output_names(leaf.query))
             for c in leaf_cols:
-                cols.append(F.col(f"{leaf.binding}.{c}"))
+                cols.append(self._col(f"{leaf.binding}.{c}"))
                 names.append(c)
         # score-adding row hints (SCORE_HINTS) append a column that
         # belongs to no relation leaf — an unqualified * includes it
@@ -735,7 +749,7 @@ class Planner:
             for h in sel.hints:
                 sc = SCORE_HINTS.get(getattr(h, "name", None))
                 if sc is not None:
-                    cols.append(F.col(sc))
+                    cols.append(self._col(sc))
                     names.append(sc)
         return cols, names
 
@@ -835,7 +849,7 @@ class Planner:
             collect(o.expr)
 
         # pre-projection: grouping exprs + agg argument exprs
-        pre_cols: list[Column] = [F.col("*")]
+        pre_cols: list[Column] = [self._col("*")]
         for i, g in enumerate(group_exprs):
             pre_cols.append(self._compile(g, df).alias(g_names[i]))
         # each aggregate argument either pre-projects as a hidden column
@@ -860,7 +874,7 @@ class Planner:
 
         pre = df.select(*pre_cols)
 
-        group_cols = [F.col(n) for n in g_names] + win_group
+        group_cols = [self._col(n) for n in g_names] + win_group
         if sel.rollup:
             gdf = pre.rollup(*group_cols)
         elif sel.cube:
@@ -870,7 +884,7 @@ class Planner:
             # into the parsed union of grouping keys — same partial→
             # final hash-agg shape as ROLLUP/CUBE, one Expand node
             gdf = pre.groupingSets(
-                [[F.col(g_names[i]) for i in idxs]
+                [[self._col(g_names[i]) for i in idxs]
                  for idxs in sel.grouping_sets],
                 *group_cols)
         elif group_cols:
@@ -939,15 +953,15 @@ class Planner:
                     raise PlanError(
                         f"ORDER BY position {pos} is not in the select "
                         f"list (1..{len(sel.items)})")
-                order_specs.append((F.col(out_specs[pos - 1][0]), o))
+                order_specs.append((self._col(out_specs[pos - 1][0]), o))
             elif isinstance(o.expr, Col) and o.expr.qualifier is None \
                     and o.expr.name.lower() in lower_names:
                 order_specs.append(
-                    (F.col(lower_names[o.expr.name.lower()]), o))
+                    (self._col(lower_names[o.expr.name.lower()]), o))
             else:
                 h = f"__ord{k}"
                 agg_exprs.append(ctx.compile(o.expr).alias(h))
-                order_specs.append((F.col(h), o))
+                order_specs.append((self._col(h), o))
 
         if not agg_exprs:
             agg_exprs = [F.count(F.lit(1)).alias("__cnt")]
@@ -959,7 +973,7 @@ class Planner:
             res = res.withColumn(wname, wcol)
 
         if having_name:
-            res = res.filter(F.col(having_name))
+            res = res.filter(self._col(having_name))
         if win_specs or sel.qualify is not None:
             post = _PostAggContext(self, group_exprs, g_names,
                                    win_agg_cols, res)
@@ -977,11 +991,11 @@ class Planner:
                         "__qual", post.compile(sel.qualify))
                 finally:
                     post.alias_map = None
-                res = res.filter(F.col("__qual"))
+                res = res.filter(self._col("__qual"))
         if order_specs:
             res = res.orderBy(*[_sorted_col(c, o)
                                 for c, o in order_specs])
-        return res.select(*[F.col(hid).alias(out)
+        return res.select(*[self._col(hid).alias(out)
                             for hid, out in out_specs])
 
     # ------------------------------------------------------------------
@@ -1051,8 +1065,8 @@ class Planner:
             assigned[col] = self._compile(a.value, target)
         updated = target.select(*[
             (F.when(cond, assigned[c].cast(dtypes[c]))
-              .otherwise(F.col(c)).alias(c)) if c in assigned
-            else F.col(c)
+              .otherwise(self._col(c)).alias(c)) if c in assigned
+            else self._col(c)
             for c in target.columns])
         self.catalog.register(name, updated)
         return updated
@@ -1223,11 +1237,11 @@ class Planner:
             # ANSI cardinality rule (eager, plan-time — see docstring)
             viol = (target.alias(ta)
                     .join(srcd.alias(sa), cond, "inner")
-                    .groupBy(*[F.col(f"{ta}.{c}") for c in target.columns])
+                    .groupBy(*[self._col(f"{ta}.{c}") for c in target.columns])
                     .agg(F.count_distinct(F.struct(
-                        *[F.col(f"{sa}.{c}") for c in srcd.columns]))
+                        *[self._col(f"{sa}.{c}") for c in srcd.columns]))
                         .alias("__n"))
-                    .filter(F.col("__n") > 1).limit(1).count())
+                    .filter(self._col("__n") > 1).limit(1).count())
             if viol:
                 raise PlanError(
                     "MERGE cardinality violation: a target row matches "
@@ -1249,7 +1263,7 @@ class Planner:
                         "UPDATE SET * is not available in WHEN NOT "
                         "MATCHED BY SOURCE — there is no source row "
                         "to copy from")
-                star = {tcols[n]: F.col(f"{sa}.{scols[n]}")
+                star = {tcols[n]: self._col(f"{sa}.{scols[n]}")
                         for n in tcols if n in scols}
                 if not star:
                     raise PlanError(
@@ -1311,7 +1325,7 @@ class Planner:
                 for pred, v in cases.get(c, []):
                     w = v.cast(dtypes[c])
                     e = F.when(pred, w) if e is None else e.when(pred, w)
-                base = F.col(f"{ta}.{c}")
+                base = self._col(f"{ta}.{c}")
                 return (base if e is None
                         else e.otherwise(base)).alias(c)
             return (df_in.filter(keep)
@@ -1321,7 +1335,7 @@ class Planner:
             joined = (target.alias(ta)
                       .join(srcd.withColumn(mk, F.lit(True)).alias(sa),
                             cond, "left"))
-            matched = F.col(f"{sa}.{mk}").isNotNull()
+            matched = self._col(f"{sa}.{mk}").isNotNull()
             mkeep, mcases = action_cases(
                 m.matched,
                 ordered_preds(m.matched, matched, "WHEN MATCHED",
@@ -1350,7 +1364,7 @@ class Planner:
                 f"{_BYS} SET", ("t",))
             updated = mt.unionByName(
                 case_select(un, bkeep, bcases)
-                .select(*[F.col(c) for c in target.columns]))
+                .select(*[self._col(c) for c in target.columns]))
         else:
             updated = target
 
@@ -1363,7 +1377,7 @@ class Planner:
                     # its same-named target column, the rest NULL —
                     # pre-compiled Columns, not ASTs (ins_expr
                     # branches on the type)
-                    star = {tcols[n]: F.col(f"{sa}.{scols[n]}")
+                    star = {tcols[n]: self._col(f"{sa}.{scols[n]}")
                             for n in tcols if n in scols}
                     if not star:
                         raise PlanError(
@@ -1458,14 +1472,15 @@ class Planner:
                 f"{rel.binding!r} ({', '.join(df.columns)})")
         from .llm_ops.assemble import md5_id_hash
         return df.filter(
-            md5_id_hash(F.col(f"{rel.binding}.{real}"), 42)
+            md5_id_hash(self._col(f"{rel.binding}.{real}"), 42)
             % 1000 < permille)
 
     def _plan_relation(self, rel, snapshot: bool = False) -> DataFrame:
         if isinstance(rel, TableRef):
-            df = self.catalog.get(rel.name).alias(rel.binding)
-            if df.isStreaming and self.catalog.has(rel.name) \
-                    and self.catalog.meta(rel.name).stateful:
+            df = self.catalog.aliased(rel.name, rel.binding)
+            if self.catalog.has(rel.name) \
+                    and self.catalog.meta(rel.name).stateful \
+                    and self._leaf_is_stream(rel, df):
                 # a derived view whose plan already carries a stateful
                 # pass (StreamMeta.stateful): count every leaf use
                 # toward the one-pass limit so a second pass layered
@@ -1484,10 +1499,11 @@ class Planner:
             right = self._plan_relation(rel.right, snapshot)
             lw, rw = self._cowin_name(rel.left), self._cowin_name(rel.right)
             co_cond = None
-            if lw in left.columns and rw in right.columns:
+            if self._has_cowin(rel.left, left, snapshot) \
+                    and self._has_cowin(rel.right, right, snapshot):
                 # streaming windowed join: equality of co-trigger windows
                 # gives Spark a bounded-state stream-stream join
-                co_cond = F.col(lw) == F.col(rw)
+                co_cond = self._col(lw) == self._col(rw)
             if rel.kind == "cross" and rel.on is None and rel.using is None:
                 if co_cond is not None:
                     return (left.join(right, on=co_cond, how="inner")
@@ -1644,14 +1660,14 @@ class Planner:
             Cols must be keys."""
             a = call_alias.get(id(e))
             if a is not None:
-                return F.col(a).cast("long") if a in count_aliases \
-                    else F.col(a)
+                return self._col(a).cast("long") if a in count_aliases \
+                    else self._col(a)
             if isinstance(e, Col):
                 if e.name not in keys:
                     raise PlanError(
                         f"column {e.name!r} is not a grouping key of the "
                         "streaming count window")
-                return F.col(e.name)
+                return self._col(e.name)
             if isinstance(e, Lit):
                 return F.lit(e.value)
             if isinstance(e, Param):
@@ -1690,11 +1706,11 @@ class Planner:
 
         final = [compile_post(item.expr).alias(_item_name(item, i))
                  for i, item in enumerate(sel.items)]
-        final.append(F.col(win_col))
+        final.append(self._col(win_col))
         if sel.having is not None:
             return (out.select(*final,
                                compile_post(sel.having).alias("__hav"))
-                    .filter(F.col("__hav")).drop("__hav"))
+                    .filter(self._col("__hav")).drop("__hav"))
         return out.select(*final)
 
     def _ensure_watermark(self, df: DataFrame, leaf,
@@ -1722,13 +1738,27 @@ class Planner:
             # watermarks require TIMESTAMP (EVENT_TIME_IS_NOT_ON_
             # TIMESTAMP_TYPE); engine.register() normally coerces, this
             # covers relations that reached the planner another way
-            df = df.withColumn(tname, F.col(tname).cast("timestamp"))
+            df = df.withColumn(tname, self._col(tname).cast("timestamp"))
         return df.withWatermark(tname, duration_str(spec.size))
 
     @staticmethod
     def _cowin_name(rel) -> str:
         binding = getattr(rel, "binding", None)
         return f"__cowin_{binding}" if binding else "__cowin"
+
+    def _leaf_is_stream(self, rel, df: DataFrame) -> bool:
+        """``df.isStreaming`` of a planned relation leaf, read from the
+        catalog's metadata when the leaf is a registered relation."""
+        if isinstance(rel, TableRef) and self.catalog.has(rel.name):
+            return self.catalog.meta(rel.name).is_stream
+        return df.isStreaming
+
+    def _has_cowin(self, rel, df: DataFrame, snapshot: bool) -> bool:
+        """Whether _apply_snapshot_window attached ``rel``'s co-trigger
+        window column: a windowed leaf over a stream, in snapshot
+        mode."""
+        return snapshot and not isinstance(rel, Join) \
+            and rel.window is not None and self._leaf_is_stream(rel, df)
 
     def _apply_snapshot_window(self, df: DataFrame, rel) -> DataFrame:
         """Snapshot-mode window on one relation leaf.
@@ -1739,7 +1769,7 @@ class Planner:
         join turns into a window-equality condition, running the join
         continuously per window (time-axis specs only; the FSQL windowed
         join of test/parserTest.scala:54 — SURVEY.md §2.9/§7.3(2))."""
-        if not df.isStreaming:
+        if not self._leaf_is_stream(rel, df):
             return last_window_filter(df, rel.window,
                                       self._leaf_time_col(rel))
         from .streaming.windows import _axis, duration_str
@@ -1783,11 +1813,11 @@ class Planner:
                             "an unbounded stream is not supported)")
         g, i = self._resolve_hint_cols(df, (gcol, idcol), "cap")
         from .llm_ops.assemble import md5_id_hash
-        w = Window.partitionBy(g).orderBy(md5_id_hash(F.col(i), 42),
-                                          F.col(i))
+        w = Window.partitionBy(g).orderBy(md5_id_hash(self._col(i), 42),
+                                          self._col(i))
         rank = "__cap_rank__"
         return (df.withColumn(rank, F.row_number().over(w))
-                  .filter(F.col(rank) <= k).drop(rank))
+                  .filter(self._col(rank) <= k).drop(rank))
 
     def _apply_sample_hint(self, df: DataFrame, idcol: str,
                            permille: int) -> DataFrame:
@@ -1813,7 +1843,7 @@ class Planner:
         (idc,) = self._resolve_hint_cols(df, (idcol,), "sample")
         from .llm_ops.assemble import md5_id_hash
         return df.filter(
-            md5_id_hash(F.col(idc), 42) % 1000 < permille)
+            md5_id_hash(self._col(idc), 42) % 1000 < permille)
 
     def _apply_bm25_hint(self, df: DataFrame, textcol: str,
                          idcol: str, terms: str, k: int) -> DataFrame:
@@ -1856,7 +1886,7 @@ class Planner:
         # BEFORE scoring, like every other row hint's NULL-id rule
         # (a NULL-id doc in the top-k would silently shrink the
         # result below k and displace a real document)
-        scorable = df.filter(F.col(idc).isNotNull())
+        scorable = df.filter(self._col(idc).isNotNull())
         try:
             scores = bm25_scores(scorable, tc, idc, terms.split(), k=k)
         except ValueError as e:           # e.g. no usable query terms
@@ -1890,9 +1920,9 @@ class Planner:
         while join_id in df.columns:
             join_id += "_"
         scores = F.broadcast(
-            scores.select(F.col("id").alias(join_id),
-                          F.col(value_col).alias(score_col)))
-        return (df.join(scores, F.col(idc) == F.col(join_id))
+            scores.select(self._col("id").alias(join_id),
+                          self._col(value_col).alias(score_col)))
+        return (df.join(scores, self._col(idc) == self._col(join_id))
                   .drop(join_id))
 
     def _apply_hybrid_rrf_hint(self, df: DataFrame, textcol: str,
@@ -1934,7 +1964,7 @@ class Planner:
             df, (textcol, veccol, idcol), "hybrid_rrf")
         score_col = self._score_hint_output_col(df, "hybrid_rrf")
         from .llm_ops.simsearch import hybrid_topk
-        scorable = df.filter(F.col(idc).isNotNull())
+        scorable = df.filter(self._col(idc).isNotNull())
         # a typo'd / absent query_id — or one whose VECTOR is NULL
         # (r14 review: cosine_sim(v, NULL) is NULL for every
         # candidate, so the leg silently ranks by ascending id) —
@@ -1951,8 +1981,8 @@ class Planner:
         # pass 2), and a limit(1) probe could land on the one clean
         # row of a dirty pair.  Two collected rows prove duplication
         # without scanning past the second match.
-        hit = (scorable.filter(F.col(idc) == F.lit(query_id))
-                       .select(F.col(vc).alias("__v"))
+        hit = (scorable.filter(self._col(idc) == F.lit(query_id))
+                       .select(self._col(vc).alias("__v"))
                        .limit(2).collect())
         if not hit:
             raise PlanError(
@@ -2011,18 +2041,18 @@ class Planner:
         idc, wc = self._resolve_hint_cols(df, (idcol, wcol),
                                           "priority_sample")
         from .llm_ops.assemble import dlt_priority, md5_id_hash
-        w = F.col(wc).cast("double")
+        w = self._col(wc).cast("double")
         # collision-free bookkeeping name — withColumn silently
         # REPLACES a same-named user column (the __tb_* lesson)
         pri = "__ps_pri"
         while pri in df.columns:
             pri += "_"
         base = (df.filter(w.isNotNull() & (w > 0)
-                          & F.col(idc).isNotNull())
+                          & self._col(idc).isNotNull())
                   .withColumn(pri, dlt_priority(idc, wc, 42,
                                                 md5_id_hash)))
         if stratcol is None:
-            return base.orderBy(pri, F.col(idc)).limit(k).drop(pri)
+            return base.orderBy(pri, self._col(idc)).limit(k).drop(pri)
         from pyspark.sql import Window
 
         (sc,) = self._resolve_hint_cols(df, (stratcol,),
@@ -2030,9 +2060,9 @@ class Planner:
         rn = pri + "_rn"
         while rn in df.columns:
             rn += "_"
-        win = Window.partitionBy(sc).orderBy(pri, F.col(idc))
+        win = Window.partitionBy(sc).orderBy(pri, self._col(idc))
         return (base.withColumn(rn, F.row_number().over(win))
-                    .filter(F.col(rn) <= k).drop(pri, rn))
+                    .filter(self._col(rn) <= k).drop(pri, rn))
 
     def _apply_token_budget_hint(self, df: DataFrame, idcol: str,
                                  tokcol: str, budget: int) -> DataFrame:
@@ -2244,7 +2274,7 @@ class Planner:
         right2 = right.withColumn(
             sr, F.explode(F.sequence(F.lit(0), F.lit(n - 1))))
         cond = self._compile_join_cond(rel.on, left2, right2) & \
-            (F.col(sl) == F.col(sr))
+            (self._col(sl) == self._col(sr))
         return left2.join(right2, on=cond, how=how).drop(sl, sr)
 
     def _compile_join_cond(self, e, left: DataFrame,
@@ -2263,12 +2293,12 @@ class Planner:
             return F.lit(self._bind_param(e))
         if isinstance(e, Col):
             if e.binding is not None:
-                return F.col(f"{e.binding}.{e.name}")
+                return self._col(f"{e.binding}.{e.name}")
             if self._qualify_aliases:
                 hid = self._qualify_aliases.get(e.name.lower())
                 if hid is not None:
-                    return F.col(hid)
-            return F.col(e.name)
+                    return self._col(hid)
+            return self._col(e.name)
         if isinstance(e, BinOp):
             return self._compile_binop(e, df)
         if isinstance(e, UnOp):
@@ -2476,7 +2506,7 @@ class Planner:
                         df.schema[name].dataType, TimestampType):
                     return name
                 dedup, expr = ("unix_micros", name), \
-                    F.unix_micros(F.col(name))
+                    F.unix_micros(self._col(name))
             for prev, name in expr_keys:
                 if prev == dedup:
                     return name
@@ -2724,7 +2754,7 @@ class Planner:
                 *spec0[0], *spec0[1], *wf_map.values(),
                 *(c for _f, c, _a in aggs if c is not None),
                 *(x[0] for x in offsets + firsts + nths + lasts)))
-            df = df.select(*[F.col("`" + c.replace("`", "``") + "`")
+            df = df.select(*[self._col("`" + c.replace("`", "``") + "`")
                              for c in df.columns if c.lower() in used],
                            *hidden_cols)
         elif hidden_cols:
@@ -2741,7 +2771,7 @@ class Planner:
         # hidden columns stay on `out`: the projection names its
         # columns (star expands the leaf's own), so none leaks out
         for rc in rownum_casts:
-            out = out.withColumn(rc, F.col(rc).cast("int"))
+            out = out.withColumn(rc, self._col(rc).cast("int"))
         # restore the single leaf's binding so the projection's
         # qualified column refs (resolver qualifies every Col by its
         # leaf) still resolve on the stateful output
@@ -2789,7 +2819,7 @@ class Planner:
         mapped = self._stream_wf_cols.get(id(e))
         if mapped is not None:
             # already computed by the stateful running_agg pass
-            return F.col(mapped)
+            return self._col(mapped)
         if df.isStreaming:
             raise PlanError(
                 "window functions on streams support only running "
@@ -2961,7 +2991,7 @@ class _AggContext:
         # grouping expression match (structural equality via dataclasses)
         for i, g in enumerate(self.group_exprs):
             if e == g:
-                return F.col(self.g_names[i])
+                return self.p._col(self.g_names[i])
         if isinstance(e, FuncCall):
             if self.p.registry.is_aggregate(e.name):
                 return self._agg(e)
@@ -3029,12 +3059,12 @@ class _AggContext:
                     f"{name}(DISTINCT ...) takes one column argument")
             hidden = specs[0][1]
             if name == "count":
-                return F.countDistinct(F.col(hidden))
+                return F.countDistinct(self.p._col(hidden))
             if name == "sum":
-                return F.sum_distinct(F.col(hidden))
+                return F.sum_distinct(self.p._col(hidden))
             # general distinct aggregate over a named hidden column
             return F.expr(f"{name}(DISTINCT {hidden})")
-        args = [F.col(v) if kind == "col" else F.lit(v)
+        args = [self.p._col(v) if kind == "col" else F.lit(v)
                 for kind, v in specs]
         return self.p.registry.build(name, args)
 
@@ -3060,7 +3090,7 @@ class _PostAggContext(_AggContext):
                 and e.binding is None:
             hid = self.alias_map.get(e.name.lower())
             if hid is not None:
-                return F.col(hid)
+                return self.p._col(hid)
         if isinstance(e, WindowFunc):
             return self.p._compile_window_func(
                 e, self.res, compile=self.compile)
@@ -3069,7 +3099,7 @@ class _PostAggContext(_AggContext):
     def _agg(self, call: FuncCall) -> Column:
         for c, h in self.agg_cols:
             if call == c:
-                return F.col(h)
+                return self.p._col(h)
         raise PlanError(
             f"internal: aggregate {call.name}() inside a window item "
             "was not materialized")
