@@ -10,11 +10,13 @@ Key mechanics:
   * every base relation is ``df.alias(binding)`` so qualified column refs
     compile to ``col("binding.name")``; column handles and aliased
     relations are built once per engine (``Planner._col``,
-    ``Catalog.aliased``), not once per statement;
-  * aggregation uses a two-phase compile: pre-project grouping exprs as
-    ``__g{i}`` and aggregate arguments as ``__a{j}``, then groupBy/rollup
-    over the hidden columns — HAVING and ORDER BY compile in the same
-    aggregate context (SQL semantics, evaluated per group);
+    ``Planner._lit``, ``Catalog.aliased``), not once per statement;
+  * aggregation compiles straight over the input: grouping exprs become
+    ``groupBy(<expr>.alias("__g{i}"))`` and aggregate arguments stay
+    inline (``sum(<expr>)``), then one final select; HAVING and ORDER
+    BY compile in the same aggregate context (SQL semantics, evaluated
+    per group).  ROLLUP/CUBE/GROUPING SETS first project keys and
+    arguments as hidden ``__g{i}``/``__a{j}`` columns below the Expand;
   * FSQL window specs (fsql/Ast.scala:132-136) compile to:
       - time windows  -> F.window(tcol, size, every)   [Spark-native]
       - count windows -> row_number / exploded trigger buckets
@@ -29,6 +31,7 @@ from __future__ import annotations
 
 import functools
 import math
+from decimal import Decimal
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -126,6 +129,11 @@ def _has_window(sel) -> bool:
 # capacity of Planner._col: a warm pass of the 78 catalog FSQL
 # statements references 204 distinct names
 _COL_MEMO_SIZE = 4096
+# capacity of Planner._lit, and the value types it keeps: those whose
+# repr spells the value exactly (a datetime literal also depends on
+# the process time zone, so it is built each time)
+_LIT_MEMO_SIZE = 4096
+_LIT_MEMO_TYPES = frozenset({bool, int, float, str, Decimal, type(None)})
 
 
 class Planner:
@@ -139,6 +147,9 @@ class Planner:
         # call).  Per planner, never module level: a handle belongs to
         # one JVM gateway.
         self._col = functools.lru_cache(maxsize=_COL_MEMO_SIZE)(F.col)
+        # literal handles, the same way (see _lit)
+        self._lit_memo = functools.lru_cache(maxsize=_LIT_MEMO_SIZE)(
+            lambda _type, _repr, v: F.lit(v))
         self._params: list = []
         # salt(key, n) specs for the Select currently being planned;
         # keys are POPPED as their join consumes them (plan_select
@@ -156,6 +167,15 @@ class Planner:
         # applyInPandasWithState passes in the statement being planned
         # (Spark allows one per streaming query; checked at plan time)
         self._stateful_passes = 0
+
+    def _lit(self, v) -> Column:
+        """``F.lit(v)``, built once per type and spelling of ``v``.
+        The memo key carries ``type(v)`` and ``repr(v)``, not just
+        ``v``: 0.0 == -0.0, 1 == 1.0 == True and Decimal('1.0') ==
+        Decimal('1.00'), yet each is a different literal."""
+        if type(v) not in _LIT_MEMO_TYPES:
+            return F.lit(v)
+        return self._lit_memo(type(v), repr(v), v)
 
     # ------------------------------------------------------------------
     # statement dispatch
@@ -286,6 +306,7 @@ class Planner:
         #   - aggregating query over exactly one windowed stream:
         #     per-window grouping (tumbling/sliding).
         snapshot_mode = bool(windowed) and (not agg_ctx or len(windowed) > 1)
+        stream = self._is_stream(sel)
         group_window_leaf = windowed[0] if (agg_ctx and len(windowed) == 1) \
             else None
 
@@ -467,10 +488,11 @@ class Planner:
         # outputs (the DuckDB/ANSI restriction).
         defer_order = sel.distinct and bool(sel.order_by)
         if agg_ctx:
-            df = self._plan_aggregate(sel, df, group_window_leaf,
+            df = self._plan_aggregate(sel, df, group_window_leaf, stream,
                                       order=not defer_order)
         else:
-            df = self._plan_projection(sel, df, order=not defer_order)
+            df = self._plan_projection(sel, df, stream,
+                                       order=not defer_order)
 
         if sel.distinct:
             df = df.distinct()
@@ -587,16 +609,18 @@ class Planner:
 
     # --- non-aggregate projection ---
 
-    def _plan_projection(self, sel: Select, df: DataFrame,
+    def _plan_projection(self, sel: Select, df: DataFrame, stream: bool,
                          order: bool = True) -> DataFrame:
         if sel.qualify is not None:
-            return self._plan_projection_qualify(sel, df, order=order)
+            return self._plan_projection_qualify(sel, df, stream,
+                                                 order=order)
         return self._route_streaming_over(
-            sel, df, [], lambda d: self._plan_projection_items(
+            sel, df, stream, [], lambda d: self._plan_projection_items(
                 sel, d, order))
 
     def _route_streaming_over(self, sel: Select, df: DataFrame,
-                              extra_exprs: list, body) -> DataFrame:
+                              stream: bool, extra_exprs: list,
+                              body) -> DataFrame:
         """Shared streaming-OVER routing for the plain and QUALIFY
         projection paths: collect window functions from the select
         items (plus ``extra_exprs``, e.g. the QUALIFY predicate),
@@ -605,7 +629,7 @@ class Planner:
         recycle once an AST is collected, so a leaked entry could
         poison a later plan's window compile (the r9 review's bug
         class; one copy of the clear discipline lives here)."""
-        if df.isStreaming:
+        if stream:
             wfs = [x for item in sel.items
                    if not isinstance(item.expr, Star)
                    for x in walk_expr(item.expr)
@@ -636,6 +660,7 @@ class Planner:
         return self._project_ordered(sel, df, cols, out_names, order)
 
     def _plan_projection_qualify(self, sel: Select, df: DataFrame,
+                                 stream: bool,
                                  order: bool = True) -> DataFrame:
         """QUALIFY on a non-aggregating query.  ANSI/DuckDB evaluation
         order: every select item (and so every window function) is
@@ -658,7 +683,7 @@ class Planner:
         (...) <= k`` keeps the FIRST k rows per key, the streaming
         cap."""
         return self._route_streaming_over(
-            sel, df, [sel.qualify],
+            sel, df, stream, [sel.qualify],
             lambda d: self._plan_projection_qualify_body(sel, d, order))
 
     def _plan_projection_qualify_body(self, sel: Select, df: DataFrame,
@@ -756,13 +781,14 @@ class Planner:
     # --- aggregate path ---
 
     def _plan_aggregate(self, sel: Select, df: DataFrame,
-                        window_leaf, order: bool = True) -> DataFrame:
+                        window_leaf, stream: bool,
+                        order: bool = True) -> DataFrame:
         if (sel.cube or sel.grouping_sets is not None) \
                 and window_leaf is not None:
             raise PlanError(
                 "CUBE/GROUPING SETS cannot combine with stream window "
                 "specs (every grouping set would need the window key)")
-        if df.isStreaming and (
+        if stream and (
                 sel.qualify is not None
                 or any(_expr_contains_winfunc(it.expr)
                        for it in sel.items
@@ -807,20 +833,20 @@ class Planner:
             # session windows validate/compile in window_grouping (native
             # session_window on batch AND streams) — they must not fall
             # into the count/delta stateful routing
-            if not is_session and df.isStreaming \
+            if not is_session and stream \
                     and _axis(spec.size) == "count":
                 # no rank-function emulation on streams: route through the
                 # stateful operator when the query shape allows
                 return self._stream_stateful_window_agg(
                     sel, df, window_leaf, axis="count")
-            if not is_session and df.isStreaming \
+            if not is_session and stream \
                     and _axis(spec.size) == "delta" \
                     and spec.every is not None:
                 # sliding delta windows use a max-over-partition filter in
                 # batch — streaming needs the stateful operator
                 return self._stream_stateful_window_agg(
                     sel, df, window_leaf, axis="delta")
-            if df.isStreaming and _axis(spec.size) == "time":
+            if stream and _axis(spec.size) == "time":
                 df = self._ensure_watermark(df, window_leaf, spec)
             df, win_group, win_out = window_grouping(
                 df, spec, self._leaf_time_col(window_leaf))
@@ -848,54 +874,72 @@ class Planner:
         for o in sel.order_by:
             collect(o.expr)
 
-        # pre-projection: grouping exprs + agg argument exprs
+        # A plain GROUP BY aggregates straight over its input:
+        # groupBy(<key> AS __g{i}).agg(sum(<arg>)), so Catalyst places
+        # every expression and no Project is built for it.  ROLLUP,
+        # CUBE and GROUPING SETS project the keys and arguments as
+        # hidden columns first: inline, an argument would be evaluated
+        # after the Expand, once per grouping set, and grouping(<key>)
+        # would not match an aliased key.  Two more shapes project:
+        # a DISTINCT aggregate other than count/sum has no Column
+        # builder, so its SQL text names its argument's hidden column;
+        # and a nondeterministic key must be computed once, because
+        # an item that repeats it inline would draw its own seed
+        # (`select floor(rand() * 3) .. group by floor(rand() * 3)`).
+        project = sel.rollup or sel.cube \
+            or sel.grouping_sets is not None \
+            or any(_named_distinct(c) for c in agg_calls) \
+            or any(_nondeterministic(g) for g in group_exprs)
         pre_cols: list[Column] = [self._col("*")]
-        for i, g in enumerate(group_exprs):
-            pre_cols.append(self._compile(g, df).alias(g_names[i]))
-        # each aggregate argument either pre-projects as a hidden column
-        # or stays a foldable literal (percentile fractions, accuracy
-        # knobs etc. must remain literals for Catalyst to accept them)
-        arg_names: dict[int, Optional[list]] = {}
+
+        def hidden(c: Column, name: str) -> Column:
+            if not project:
+                return c
+            pre_cols.append(c.alias(name))
+            return self._col(name)
+
+        # one Column per key, shared by groupBy and every aggregate-
+        # context reference to it
+        key_cols = [hidden(self._compile(g, df), g_names[i])
+                    for i, g in enumerate(group_exprs)]
+        # literal arguments stay literals (percentile fractions,
+        # accuracy knobs etc. must be foldable for Catalyst)
+        agg_args: dict[int, Optional[list]] = {}
         for j, call in enumerate(agg_calls):
             if not call.args or isinstance(call.args[0], Star):
-                arg_names[id(call)] = None          # count(*)
+                agg_args[id(call)] = None           # count(*)
                 continue
-            specs: list[tuple[str, object]] = []
-            for k, arg in enumerate(call.args):
-                if isinstance(arg, Lit):
-                    specs.append(("lit", arg.value))
-                elif isinstance(arg, Param):
-                    specs.append(("lit", self._bind_param(arg)))
-                else:
-                    a = f"__a{j}_{k}" if k else f"__a{j}"
-                    pre_cols.append(self._compile(arg, df).alias(a))
-                    specs.append(("col", a))
-            arg_names[id(call)] = specs
+            agg_args[id(call)] = [
+                self._compile(arg, df) if isinstance(arg, (Lit, Param))
+                else hidden(self._compile(arg, df),
+                            f"__a{j}_{k}" if k else f"__a{j}")
+                for k, arg in enumerate(call.args)]
 
-        pre = df.select(*pre_cols)
-
-        group_cols = [self._col(n) for n in g_names] + win_group
+        src = df.select(*pre_cols) if project else df
+        group_cols = (key_cols if project else
+                      [c.alias(n) for c, n in zip(key_cols, g_names)]) \
+            + win_group
         if sel.rollup:
-            gdf = pre.rollup(*group_cols)
+            gdf = src.rollup(*group_cols)
         elif sel.cube:
-            gdf = pre.cube(*group_cols)
+            gdf = src.cube(*group_cols)
         elif sel.grouping_sets is not None:
             # DataFrame.groupingSets (Spark 4): sets are index lists
             # into the parsed union of grouping keys — same partial→
             # final hash-agg shape as ROLLUP/CUBE, one Expand node
-            gdf = pre.groupingSets(
-                [[self._col(g_names[i]) for i in idxs]
+            gdf = src.groupingSets(
+                [[key_cols[i] for i in idxs]
                  for idxs in sel.grouping_sets],
                 *group_cols)
-        elif group_cols:
-            gdf = pre.groupBy(*group_cols)
         else:
-            gdf = pre.groupBy()
+            gdf = src.groupBy(*group_cols)
 
         # compile output/having/order in aggregate context
         agg_exprs: list[Column] = []
-        out_specs: list[tuple[str, str]] = []   # (hidden_name, out_name)
-        ctx = _AggContext(self, group_exprs, g_names, agg_calls, arg_names)
+        # (column of the aggregated frame, output name, whether that
+        # column already carries the output name)
+        out_specs: list[tuple[Column, str, bool]] = []
+        ctx = _AggContext(self, group_exprs, key_cols, agg_calls, agg_args)
 
         win_specs: list[tuple[str, object]] = []   # (hidden_name, expr)
         for i, item in enumerate(sel.items):
@@ -910,10 +954,10 @@ class Planner:
                 # overwrite each other's withColumn
                 h = f"__win{i}"
                 win_specs.append((h, item.expr))
-                out_specs.append((h, name))
+                out_specs.append((self._col(h), name, False))
                 continue
             agg_exprs.append(ctx.compile(item.expr).alias(name))
-            out_specs.append((name, name))
+            out_specs.append((self._col(name), name, True))
         # materialize every aggregate call a deferred window item — or
         # the QUALIFY predicate — uses (walk_expr skips the window's
         # OWN function, so `sum(x) over` never lands here — only true
@@ -931,8 +975,10 @@ class Planner:
                     h = f"__w{len(win_agg_cols)}"
                     agg_exprs.append(ctx.compile(x).alias(h))
                     win_agg_cols.append((x, h))
+        # window bounds (window_start/window_end, ...) are expressions
+        # over the aggregated window key, computed in the final select
         for wname, wcol in win_out:
-            out_specs.append((wname, wname))
+            out_specs.append((wcol, wname, False))
 
         having_name = None
         if sel.having is not None:
@@ -940,10 +986,10 @@ class Planner:
             agg_exprs.append(ctx.compile(sel.having).alias(having_name))
 
         order_specs: list[tuple[Column, OrderItem]] = []
-        # ORDER BY aliases resolve to the HIDDEN column holding each
-        # output (hidden == out for plain items, __win{i} for deferred
-        # window items)
-        lower_names = {out.lower(): hid for hid, out in out_specs}
+        # ORDER BY aliases resolve to the column holding each output
+        # (the item itself for plain items, __win{i} for deferred
+        # window items, the bound expression for window bounds)
+        lower_names = {out.lower(): c for c, out, _ in out_specs}
         for k, o in enumerate(sel.order_by if order else []):
             pos = _ordinal(o.expr)
             if pos is not None:
@@ -953,24 +999,20 @@ class Planner:
                     raise PlanError(
                         f"ORDER BY position {pos} is not in the select "
                         f"list (1..{len(sel.items)})")
-                order_specs.append((self._col(out_specs[pos - 1][0]), o))
+                order_specs.append((out_specs[pos - 1][0], o))
             elif isinstance(o.expr, Col) and o.expr.qualifier is None \
                     and o.expr.name.lower() in lower_names:
                 order_specs.append(
-                    (self._col(lower_names[o.expr.name.lower()]), o))
+                    (lower_names[o.expr.name.lower()], o))
             else:
                 h = f"__ord{k}"
                 agg_exprs.append(ctx.compile(o.expr).alias(h))
                 order_specs.append((self._col(h), o))
 
         if not agg_exprs:
-            agg_exprs = [F.count(F.lit(1)).alias("__cnt")]
+            agg_exprs = [F.count(self._lit(1)).alias("__cnt")]
 
         res = gdf.agg(*agg_exprs)
-
-        # window struct -> window_start/window_end output columns
-        for wname, wcol in win_out:
-            res = res.withColumn(wname, wcol)
 
         if having_name:
             res = res.filter(self._col(having_name))
@@ -983,9 +1025,8 @@ class Planner:
                 # QUALIFY over an aggregating query: evaluated after
                 # grouping/HAVING and the deferred window items, before
                 # ORDER BY/LIMIT (ANSI order).  Alias references
-                # resolve to the hidden column holding each output.
-                post.alias_map = {out.lower(): hid
-                                  for hid, out in out_specs}
+                # resolve to the column holding each output.
+                post.alias_map = lower_names
                 try:
                     res = res.withColumn(
                         "__qual", post.compile(sel.qualify))
@@ -995,8 +1036,8 @@ class Planner:
         if order_specs:
             res = res.orderBy(*[_sorted_col(c, o)
                                 for c, o in order_specs])
-        return res.select(*[self._col(hid).alias(out)
-                            for hid, out in out_specs])
+        return res.select(*[c if named else c.alias(out)
+                            for c, out, named in out_specs])
 
     # ------------------------------------------------------------------
     # INSERT (append semantics; flinkdsl/ast.scala:154-161,
@@ -1020,7 +1061,7 @@ class Planner:
         dtypes = dict(target.dtypes)
         for c in target_cols:
             if c not in cols:
-                new = new.withColumn(c, F.lit(None).cast(dtypes[c]))
+                new = new.withColumn(c, self._lit(None).cast(dtypes[c]))
         updated = target.unionByName(new.select(*target_cols))
         self.catalog.register(ins.table, updated)
         return updated
@@ -1050,7 +1091,7 @@ class Planner:
         if target.isStreaming:
             raise PlanError("cannot UPDATE a streaming relation")
         cond = (self._compile(u.where, target)
-                if u.where is not None else F.lit(True))
+                if u.where is not None else self._lit(True))
         dtypes = dict(target.dtypes)
         lower = {c.lower(): c for c in target.columns}
         assigned: dict[str, Column] = {}
@@ -1083,10 +1124,10 @@ class Planner:
         if target.isStreaming:
             raise PlanError("cannot DELETE from a streaming relation")
         if d.where is None:
-            remaining = target.filter(F.lit(False))
+            remaining = target.filter(self._lit(False))
         else:
             cond = self._compile(d.where, target)
-            remaining = target.filter(~F.coalesce(cond, F.lit(False)))
+            remaining = target.filter(~F.coalesce(cond, self._lit(False)))
         self.catalog.register(name, remaining)
         return remaining
 
@@ -1294,13 +1335,13 @@ class Planner:
             A NULL condition behaves as FALSE (coalesce), so every
             predicate is a non-NULL boolean and the preds of one kind
             are mutually exclusive by construction."""
-            preds, fired = [], F.lit(False)
+            preds, fired = [], self._lit(False)
             for cl in clauses:
                 cond_ast = cl[-1]
                 c = (F.coalesce(self._compile(
                         qualify(cond_ast, what, sides=sides), None),
-                        F.lit(False))
-                     if cond_ast is not None else F.lit(True))
+                        self._lit(False))
+                     if cond_ast is not None else self._lit(True))
                 preds.append(base & c & ~fired)
                 fired = fired | c
             return preds
@@ -1309,7 +1350,7 @@ class Planner:
             """Fold delete/update clauses into (keep-predicate,
             per-column CASE arms).  Arm order across kinds is
             irrelevant: the preds are mutually exclusive."""
-            keep, cases = F.lit(True), {}
+            keep, cases = self._lit(True), {}
             for (knd, assigns, _c), pred in zip(clauses, preds):
                 if knd == "delete":
                     keep = keep & ~pred
@@ -1333,7 +1374,7 @@ class Planner:
 
         if m.matched:
             joined = (target.alias(ta)
-                      .join(srcd.withColumn(mk, F.lit(True)).alias(sa),
+                      .join(srcd.withColumn(mk, self._lit(True)).alias(sa),
                             cond, "left"))
             matched = self._col(f"{sa}.{mk}").isNotNull()
             mkeep, mcases = action_cases(
@@ -1360,7 +1401,7 @@ class Planner:
                                         "left_anti"))
             bkeep, bcases = action_cases(
                 m.by_source,
-                ordered_preds(m.by_source, F.lit(True), _BYS, ("t",)),
+                ordered_preds(m.by_source, self._lit(True), _BYS, ("t",)),
                 f"{_BYS} SET", ("t",))
             updated = mt.unionByName(
                 case_select(un, bkeep, bcases)
@@ -1407,7 +1448,7 @@ class Planner:
             unmatched = (src_df.alias(sa)
                          .join(target.alias(ta), cond, "left_anti"))
             # insert conditions see the SOURCE side only
-            npreds = ordered_preds(m.not_matched, F.lit(True),
+            npreds = ordered_preds(m.not_matched, self._lit(True),
                                    "WHEN NOT MATCHED", ("s",))
             fire_any = npreds[0]
             for p in npreds[1:]:
@@ -1419,7 +1460,7 @@ class Planner:
                 for by_col, pred in zip(clause_vals, npreds):
                     raw = by_col.get(c)
                     if raw is None:
-                        v = F.lit(None).cast(dtypes[c])
+                        v = self._lit(None).cast(dtypes[c])
                     elif isinstance(raw, Column):   # INSERT * path
                         v = raw.cast(dtypes[c])
                     else:
@@ -1480,7 +1521,7 @@ class Planner:
             df = self.catalog.aliased(rel.name, rel.binding)
             if self.catalog.has(rel.name) \
                     and self.catalog.meta(rel.name).stateful \
-                    and self._leaf_is_stream(rel, df):
+                    and self._is_stream(rel):
                 # a derived view whose plan already carries a stateful
                 # pass (StreamMeta.stateful): count every leaf use
                 # toward the one-pass limit so a second pass layered
@@ -1499,8 +1540,8 @@ class Planner:
             right = self._plan_relation(rel.right, snapshot)
             lw, rw = self._cowin_name(rel.left), self._cowin_name(rel.right)
             co_cond = None
-            if self._has_cowin(rel.left, left, snapshot) \
-                    and self._has_cowin(rel.right, right, snapshot):
+            if self._has_cowin(rel.left, snapshot) \
+                    and self._has_cowin(rel.right, snapshot):
                 # streaming windowed join: equality of co-trigger windows
                 # gives Spark a bounded-state stream-stream join
                 co_cond = self._col(lw) == self._col(rw)
@@ -1633,7 +1674,7 @@ class Planner:
             raise PlanError("streaming count-window query needs at least "
                             "one aggregate")
 
-        base = df.withColumn("__ones", F.lit(1.0)) if needs_ones else df
+        base = df.withColumn("__ones", self._lit(1.0)) if needs_ones else df
         if base.isStreaming:
             self._stateful_passes += 1
         if axis == "count":
@@ -1669,9 +1710,9 @@ class Planner:
                         "streaming count window")
                 return self._col(e.name)
             if isinstance(e, Lit):
-                return F.lit(e.value)
+                return self._lit(e.value)
             if isinstance(e, Param):
-                return F.lit(self._bind_param(e))
+                return self._lit(self._bind_param(e))
             if isinstance(e, BinOp):
                 return _apply_binop(e.op, compile_post(e.left),
                                     compile_post(e.right))
@@ -1746,19 +1787,25 @@ class Planner:
         binding = getattr(rel, "binding", None)
         return f"__cowin_{binding}" if binding else "__cowin"
 
-    def _leaf_is_stream(self, rel, df: DataFrame) -> bool:
-        """``df.isStreaming`` of a planned relation leaf, read from the
-        catalog's metadata when the leaf is a registered relation."""
-        if isinstance(rel, TableRef) and self.catalog.has(rel.name):
-            return self.catalog.meta(rel.name).is_stream
-        return df.isStreaming
+    def _is_stream(self, node) -> bool:
+        """Whether a query or FROM relation plans to a streaming frame
+        (``isStreaming``), read from its leaves' catalog metadata
+        instead of asked of each frame the planner builds."""
+        if isinstance(node, (SetOp, Join)):
+            return self._is_stream(node.left) or self._is_stream(node.right)
+        if isinstance(node, Select):
+            return node.from_ is not None and self._is_stream(node.from_)
+        if isinstance(node, DerivedTable):
+            return self._is_stream(node.query)
+        return self.catalog.has(node.name) \
+            and self.catalog.meta(node.name).is_stream
 
-    def _has_cowin(self, rel, df: DataFrame, snapshot: bool) -> bool:
+    def _has_cowin(self, rel, snapshot: bool) -> bool:
         """Whether _apply_snapshot_window attached ``rel``'s co-trigger
         window column: a windowed leaf over a stream, in snapshot
         mode."""
         return snapshot and not isinstance(rel, Join) \
-            and rel.window is not None and self._leaf_is_stream(rel, df)
+            and rel.window is not None and self._is_stream(rel)
 
     def _apply_snapshot_window(self, df: DataFrame, rel) -> DataFrame:
         """Snapshot-mode window on one relation leaf.
@@ -1769,7 +1816,7 @@ class Planner:
         join turns into a window-equality condition, running the join
         continuously per window (time-axis specs only; the FSQL windowed
         join of test/parserTest.scala:54 — SURVEY.md §2.9/§7.3(2))."""
-        if not self._leaf_is_stream(rel, df):
+        if not self._is_stream(rel):
             return last_window_filter(df, rel.window,
                                       self._leaf_time_col(rel))
         from .streaming.windows import _axis, duration_str
@@ -1981,7 +2028,7 @@ class Planner:
         # pass 2), and a limit(1) probe could land on the one clean
         # row of a dirty pair.  Two collected rows prove duplication
         # without scanning past the second match.
-        hit = (scorable.filter(self._col(idc) == F.lit(query_id))
+        hit = (scorable.filter(self._col(idc) == self._lit(query_id))
                        .select(self._col(vc).alias("__v"))
                        .limit(2).collect())
         if not hit:
@@ -2272,7 +2319,7 @@ class Planner:
         left2 = left.withColumn(
             sl, F.floor(F.rand(42) * n).cast("int"))
         right2 = right.withColumn(
-            sr, F.explode(F.sequence(F.lit(0), F.lit(n - 1))))
+            sr, F.explode(F.sequence(self._lit(0), self._lit(n - 1))))
         cond = self._compile_join_cond(rel.on, left2, right2) & \
             (self._col(sl) == self._col(sr))
         return left2.join(right2, on=cond, how=how).drop(sl, sr)
@@ -2288,9 +2335,9 @@ class Planner:
 
     def _compile(self, e, df: Optional[DataFrame]) -> Column:
         if isinstance(e, Lit):
-            return F.lit(e.value)
+            return self._lit(e.value)
         if isinstance(e, Param):
-            return F.lit(self._bind_param(e))
+            return self._lit(self._bind_param(e))
         if isinstance(e, Col):
             if e.binding is not None:
                 return self._col(f"{e.binding}.{e.name}")
@@ -2386,7 +2433,7 @@ class Planner:
     def _param_lit(self, p: Param, other, df) -> Column:
         """Bind a parameter, casting it to the compared column's type
         when that type is resolvable from the frame in scope."""
-        lit = F.lit(self._bind_param(p))
+        lit = self._lit(self._bind_param(p))
         if df is not None and isinstance(other, Col) \
                 and other.binding is None:
             dt = dict(df.dtypes).get(other.name)
@@ -2921,7 +2968,7 @@ class Planner:
                 pick = F.last if back else F.first
                 for _ in range(abs(off)):
                     y = pick(F.when(nn, y), ignorenulls=True).over(wf)
-                return y if dflt is None else F.coalesce(y, F.lit(dflt))
+                return y if dflt is None else F.coalesce(y, self._lit(dflt))
             # offset 0 is the current row on both engines, with or
             # without IGNORE NULLS (null treatment skips *prior* rows
             # only — pinned by test vs DuckDB's in-paren spelling)
@@ -2952,7 +2999,7 @@ class Planner:
             if args and isinstance(args[0], Star):
                 if name != "count":
                     raise PlanError(f"{name}(*) is not valid")
-                col = F.count(F.lit(1))
+                col = F.count(self._lit(1))
             else:
                 col = self.registry.build(
                     name, [comp(a) for a in args])
@@ -2975,23 +3022,25 @@ class Planner:
 
 
 class _AggContext:
-    """Compile expressions evaluated per-group: aggregate calls map to
-    aggregates over pre-projected ``__a{j}`` columns; grouping expressions
-    map to ``__g{i}`` refs; literals pass through."""
+    """Compile expressions evaluated per-group: aggregate calls build
+    from their argument Columns (``agg_args``: compiled over the input
+    frame, or hidden ``__a{j}`` columns when the aggregate projects
+    first); grouping expressions map to their key Columns
+    (``key_cols``); literals pass through."""
 
-    def __init__(self, planner: Planner, group_exprs, g_names,
-                 agg_calls, arg_names):
+    def __init__(self, planner: Planner, group_exprs, key_cols,
+                 agg_calls, agg_args):
         self.p = planner
         self.group_exprs = group_exprs
-        self.g_names = g_names
+        self.key_cols = key_cols
         self.agg_calls = agg_calls
-        self.arg_names = arg_names
+        self.agg_args = agg_args
 
     def compile(self, e) -> Column:
         # grouping expression match (structural equality via dataclasses)
         for i, g in enumerate(self.group_exprs):
             if e == g:
-                return self.p._col(self.g_names[i])
+                return self.key_cols[i]
         if isinstance(e, FuncCall):
             if self.p.registry.is_aggregate(e.name):
                 return self._agg(e)
@@ -2999,9 +3048,9 @@ class _AggContext:
             return self.p.registry.build(
                 e.name, [self.compile(a) for a in e.args])
         if isinstance(e, Lit):
-            return F.lit(e.value)
+            return self.p._lit(e.value)
         if isinstance(e, Param):
-            return F.lit(self.p._bind_param(e))
+            return self.p._lit(self.p._bind_param(e))
         if isinstance(e, BinOp):
             if e.op in ("<<", ">>"):
                 if not isinstance(e.right, Lit):
@@ -3049,23 +3098,22 @@ class _AggContext:
             f"cannot compile {type(e).__name__} in aggregate context")
 
     def _agg(self, call: FuncCall) -> Column:
-        specs = self.arg_names[id(call)]
+        args = self.agg_args[id(call)]
         name = call.name.lower()
-        if specs is None:                        # count(*)
-            return F.count(F.lit(1))
+        if args is None:                         # count(*)
+            return F.count(self.p._lit(1))
         if call.distinct:
-            if len(specs) != 1 or specs[0][0] != "col":
+            if len(args) != 1 or isinstance(call.args[0], (Lit, Param)):
                 raise PlanError(
                     f"{name}(DISTINCT ...) takes one column argument")
-            hidden = specs[0][1]
             if name == "count":
-                return F.countDistinct(self.p._col(hidden))
+                return F.countDistinct(args[0])
             if name == "sum":
-                return F.sum_distinct(self.p._col(hidden))
-            # general distinct aggregate over a named hidden column
-            return F.expr(f"{name}(DISTINCT {hidden})")
-        args = [self.p._col(v) if kind == "col" else F.lit(v)
-                for kind, v in specs]
+                return F.sum_distinct(args[0])
+            # no Column builder: SQL text over the hidden argument
+            # column _plan_aggregate projected for it
+            j = next(j for j, c in enumerate(self.agg_calls) if c is call)
+            return F.expr(f"{name}(DISTINCT __a{j})")
         return self.p.registry.build(name, args)
 
 
@@ -3077,20 +3125,21 @@ class _PostAggContext(_AggContext):
     order for `rank() over (order by sum(x)) … group by g`."""
 
     def __init__(self, planner, group_exprs, g_names, agg_cols, res):
-        super().__init__(planner, group_exprs, g_names, [], {})
+        super().__init__(planner, group_exprs,
+                         [planner._col(n) for n in g_names], [], {})
         self.agg_cols = agg_cols        # list[(FuncCall, hidden_name)]
         self.res = res
-        # QUALIFY alias substitution (lowercase output alias -> hidden
-        # column of the aggregated frame); set only while the QUALIFY
+        # QUALIFY alias substitution (lowercase output alias -> column
+        # of the aggregated frame); set only while the QUALIFY
         # predicate compiles
         self.alias_map: Optional[dict] = None
 
     def compile(self, e) -> Column:
         if self.alias_map is not None and isinstance(e, Col) \
                 and e.binding is None:
-            hid = self.alias_map.get(e.name.lower())
-            if hid is not None:
-                return self.p._col(hid)
+            c = self.alias_map.get(e.name.lower())
+            if c is not None:
+                return c
         if isinstance(e, WindowFunc):
             return self.p._compile_window_func(
                 e, self.res, compile=self.compile)
@@ -3103,6 +3152,29 @@ class _PostAggContext(_AggContext):
         raise PlanError(
             f"internal: aggregate {call.name}() inside a window item "
             "was not materialized")
+
+
+# Spark builtins that are Nondeterministic: each evaluation may
+# differ, and an unseeded call draws its seed where it is analyzed
+_NONDETERMINISTIC_FUNCS = frozenset({
+    "rand", "random", "randn", "randstr", "uniform", "uuid", "shuffle",
+    "monotonically_increasing_id", "spark_partition_id",
+    "input_file_name", "input_file_block_start",
+    "input_file_block_length", "reflect", "java_method", "try_reflect",
+})
+
+
+def _nondeterministic(e) -> bool:
+    return any(isinstance(x, FuncCall)
+               and x.name.lower() in _NONDETERMINISTIC_FUNCS
+               for x in walk_expr(e))
+
+
+def _named_distinct(call: FuncCall) -> bool:
+    """A DISTINCT aggregate with no Column builder (anything but
+    count/sum): _AggContext writes it as SQL text over a hidden
+    argument column."""
+    return call.distinct and call.name.lower() not in ("count", "sum")
 
 
 def _ordinal(e) -> Optional[int]:

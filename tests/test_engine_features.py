@@ -369,8 +369,8 @@ def test_param_typed_from_compared_column(spark):
 
 
 def test_multi_arg_and_approx_aggregates(spark, engine):
-    """Multi-argument aggregates pre-project every expression argument
-    and keep constant arguments foldable literals (percentile fractions
+    """Multi-argument aggregates compile every expression argument and
+    keep constant arguments foldable literals (percentile fractions
     must stay literals for Catalyst)."""
     r = engine.sql("""
         select percentile_approx(value, 0.5) as p50,

@@ -4,18 +4,21 @@ driver-side work only.
 Building a plan must launch no Spark job (every data pass belongs to the
 query that runs it, not to its compilation), and must stay cheap in
 py4j round trips, the unit the Python planner pays for.  The planner
-reuses what does not change between statements (column handles, the
-catalog's per-relation column lists and aliased frames); the tests at
-the end check that a replaced relation is never planned from stale
-facts.
+reuses what does not change between statements (column and literal
+handles, the catalog's per-relation column lists and aliased frames);
+the tests at the end check that a literal is reused only for the same
+value and type, and that a replaced relation is never planned from
+stale facts.
 """
+
+from decimal import Decimal
 
 import pytest
 
 import __spark_entry__ as entry
 from flink_dsl_spark import FsqlEngine
 from flink_dsl_spark.errors import ResolutionError
-from flink_dsl_spark.planner import _COL_MEMO_SIZE
+from flink_dsl_spark.planner import _COL_MEMO_SIZE, _LIT_MEMO_SIZE
 
 from .conftest import count_py4j, drain_to_memory
 
@@ -56,43 +59,123 @@ def test_fsql_plan_build_launches_no_job(spark, queries):
 
 def test_session_skips_call_site_capture(spark, queries):
     """``get_session`` turns off PySpark's per-Column call-site capture
-    (five JVM calls per Column function), and the planner reuses its
-    column handles and aliased relations, so a warm rebuild of q01
-    stays within 190 py4j commands (166 measured; about 800 with the
-    capture on, 252 with it off and nothing reused)."""
+    (five JVM calls per Column function), the planner reuses its
+    column handles, literals and aliased relations, and aggregates
+    straight over the input, so a warm rebuild of q01 stays within 130
+    py4j commands (118 measured; about 800 with the capture on, 252
+    with it off and nothing reused, 166 with a projection before the
+    aggregate and a literal built per use)."""
     assert spark.conf.get(
         "spark.python.sql.dataFrameDebugging.enabled") == "false"
     build = queries["q01_pricing_summary"]
     build(spark, SF)._jdf.queryExecution().executedPlan()     # warm
     with count_py4j(spark) as sent:
         build(spark, SF)._jdf.queryExecution().executedPlan()
-    assert len(sent) <= 190, f"{len(sent)} py4j commands"
+    assert len(sent) <= 130, f"{len(sent)} py4j commands"
 
 
 def test_warm_fsql_pass_py4j_commands(spark, queries):
-    """A warm pass of all FSQL catalog statements sends at most 7,000
-    py4j commands (6,414 measured on 4 cores; 9,258 when every
-    statement built its own column handles and aliased relations)."""
+    """A warm pass of all FSQL catalog statements sends at most 5,600
+    py4j commands (5,082 measured on 4 cores; 9,258 when every
+    statement built its own column handles and aliased relations,
+    6,414 with a projection before each aggregate and a literal built
+    per use)."""
     _build_all(spark, queries)                                 # warm
     with count_py4j(spark) as sent:
         _build_all(spark, queries)
-    assert len(sent) <= 7000, f"{len(sent)} py4j commands"
+    assert len(sent) <= 5600, f"{len(sent)} py4j commands"
+
+
+# Dataset methods: each call re-analyzes the plan it builds and copies
+# its arguments into a Java list
+_DATASET_CALLS = frozenset({"select", "agg", "groupBy", "rollup", "cube",
+                            "groupingSets", "withColumn", "filter",
+                            "join", "crossJoin", "drop"})
+
+
+def test_warm_fsql_pass_dataset_calls(spark, queries):
+    """A warm pass of all FSQL catalog statements makes at most 390
+    Dataset calls (352 measured; 412 when every aggregate projected
+    its keys and arguments first and added its window bounds one
+    ``withColumn`` each)."""
+    _build_all(spark, queries)                                 # warm
+    with count_py4j(spark) as sent:
+        _build_all(spark, queries)
+    calls = [c.split("\n")[2] for c in sent if c.startswith("c\n")]
+    n = sum(m in _DATASET_CALLS for m in calls)
+    assert n <= 390, f"{n} Dataset calls"
+
+
+def _plan_lines(spark, queries, name, phase):
+    df = queries[name](spark, SF)
+    return getattr(df._jdf.queryExecution(), phase)().toString() \
+        .splitlines()
+
+
+def test_plain_aggregate_has_no_argument_projection(spark, queries):
+    """q01 aggregates straight over its input relation: no hidden
+    ``__a*`` argument column, and no Project under the Aggregate."""
+    lines = _plan_lines(spark, queries, "q01_pricing_summary", "analyzed")
+    assert not any(" AS __a" in line for line in lines), lines
+    i = next(i for i, line in enumerate(lines)
+             if line.lstrip("+- :").startswith("Aggregate "))
+    assert not lines[i + 1].lstrip("+- :").startswith("Project "), lines
+
+
+@pytest.mark.parametrize("name", ["q09_rollup", "q51_cube"])
+def test_expand_aggregate_projects_arguments_first(spark, queries, name):
+    """ROLLUP and CUBE compute their aggregate arguments once per row,
+    below the Expand that multiplies the rows (``__a*`` columns of the
+    Project under it), and q51's ``grouping()`` resolves against the
+    projected keys."""
+    lines = _plan_lines(spark, queries, name, "optimizedPlan")
+    i = next(i for i, line in enumerate(lines)
+             if line.lstrip("+- :").startswith("Expand "))
+    assert lines[i + 1].lstrip("+- :").startswith("Project "), lines
+    assert " AS __a" in lines[i + 1], lines
+    if name == "q51_cube":
+        assert any("spark_grouping_id" in line and " AS g_st" in line
+                   for line in lines), lines
 
 
 def test_memos_do_not_grow_on_replanning(spark, queries):
-    """Planning the FSQL statements again adds no column handle and no
-    aliased relation: the memos hold what the statements name, not one
-    entry per statement."""
+    """Planning the FSQL statements again adds no column handle, no
+    literal and no aliased relation: the memos hold what the
+    statements name, not one entry per statement."""
     eng = entry._engine(spark, SF)
     _build_all(spark, queries)
-    cols = eng.planner._col.cache_info()
+    memos = [(eng.planner._col, _COL_MEMO_SIZE),
+             (eng.planner._lit_memo, _LIT_MEMO_SIZE)]
+    before = [m.cache_info() for m, _ in memos]
     aliased = sum(map(len, eng.catalog._aliased.values()))
     _build_all(spark, queries)
-    again = eng.planner._col.cache_info()
-    assert cols.currsize < _COL_MEMO_SIZE          # nothing was evicted
-    assert again.currsize == cols.currsize
-    assert again.hits > cols.hits
+    for (memo, size), info in zip(memos, before):
+        again = memo.cache_info()
+        assert info.currsize < size                # nothing was evicted
+        assert again.currsize == info.currsize
+        assert again.hits > info.hits
     assert sum(map(len, eng.catalog._aliased.values())) == aliased
+
+
+# --- a literal is reused only for the same value and type ------------
+
+@pytest.mark.parametrize("values, types", [
+    ((0.0, -0.0), ("double", "double")),
+    ((1, 1.0, True), ("int", "double", "boolean")),
+    ((Decimal("1.0"), Decimal("1.00")), ("decimal(2,1)", "decimal(3,2)")),
+], ids=["signed_zero", "int_float_bool", "decimal_scale"])
+def test_equal_literals_stay_distinct(spark, engine, values, types):
+    """Values that compare equal in Python but are different SQL
+    literals get different handles, each with its own type and
+    value; the same value asked again gets the same handle."""
+    lit = engine.planner._lit
+    cols = [lit(v) for v in values]
+    assert all(lit(v) is c for v, c in zip(values, cols))
+    assert len({id(c) for c in cols}) == len(values)
+    df = spark.range(1).select(
+        *[c.alias(f"c{i}") for i, c in enumerate(cols)])
+    assert [t for _, t in df.dtypes] == list(types)
+    assert [repr(x) for x in df.first()] == [repr(v) for v in values]
 
 
 # --- a replaced relation is planned from its new facts ---------------
