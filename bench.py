@@ -240,7 +240,17 @@ def main():
     # fsql/timer.scala:3-16 / BASELINE.md "engine-internal")
     from flink_dsl_spark import FsqlEngine
     eng = FsqlEngine(spark)
+    # registration cost: wall time and the Spark jobs load_dir launches
+    # (0 when every table's schema comes from its parquet footer)
+    sc = spark.sparkContext
+    sc.setJobGroup("bench-load-dir", "load_dir")
+    t_load = time.perf_counter()
     eng.load_dir(SF_DIR)
+    load_dir_ms = round((time.perf_counter() - t_load) * 1000.0, 3)
+    sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    load_dir_jobs = len(sc.statusTracker().getJobIdsForGroup(
+        "bench-load-dir"))
     eng.sql("""select l_returnflag, count(*) as cnt, sum(l_quantity) as q
                from lineitem join orders on l_orderkey = o_orderkey
                where l_discount between 0.01 and 0.05
@@ -261,6 +271,8 @@ def main():
         "shared17_steady_total": round(sum(
             v for k, v in steady.items() if k not in _ADDED_R5), 3),
         "compile_phases_ms": phases,
+        "load_dir_ms": load_dir_ms,
+        "load_dir_jobs": load_dir_jobs,
         "sf": sf,
         # ambient-load self-adjudication (r12 verdict item 4): the VM
         # hosts other tenants whose load spikes have repeatedly

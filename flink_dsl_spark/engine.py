@@ -13,6 +13,7 @@ import threading
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 from .ast_nodes import (
     CreateSchema, CreateStream, DerivedSource, FileSource, HostSource,
@@ -120,6 +121,7 @@ class FsqlEngine:
         self.resolver = Resolver(self.catalog)
         self.planner = Planner(self.catalog, self.registry, self.resolver)
         self.timer = Timer(enabled=timer)
+        self._stream_dirs: dict[str, str] = {}     # see _stream_dir
 
     def _remember_conf(self, key: str) -> None:
         """Record ``key``'s pre-engine value (None = unset) once, so
@@ -174,8 +176,14 @@ class FsqlEngine:
 
     def register_parquet(self, name: str, path: str,
                          event_time_col: Optional[str] = None) -> None:
-        df = self.spark.read.parquet(path)
-        df = _restore_nano_timestamps(df, path)
+        """Register a parquet file or directory as a batch relation.  A
+        file is read with its footer schema (``_parquet_file_schema``),
+        so no inference job runs; a directory keeps Spark's inference,
+        which chooses the footer or summary file to read."""
+        reader = self.spark.read
+        if os.path.isfile(path):
+            reader = reader.schema(_parquet_file_schema(self.spark, path))
+        df = _restore_nano_timestamps(reader.parquet(path), path)
         self.register(name, df, event_time_col=event_time_col)
 
     def register_bucketed(self, name: str,
@@ -192,26 +200,40 @@ class FsqlEngine:
                                 watermark: Optional[str] = None,
                                 max_files_per_trigger: Optional[int] = None
                                 ) -> None:
-        """Register a parquet path as a STREAMING relation (file stream).
-        Schema comes from a batch footer read; nano-timestamp columns are
+        """Register a parquet file or directory as a STREAMING relation
+        (file stream).  A file's schema comes from its footer, through
+        Spark's own converter, without a Spark job; a directory's from
+        Spark's schema inference.  The file-stream source reads
+        directories, so a file is streamed from a directory holding a
+        symlink to it, made once per file and engine and shared by
+        every name registered on that file.  Nano-timestamp columns are
         restored the same way as the batch path."""
-        batch = self.spark.read.parquet(path)
-        reader = self.spark.readStream.schema(batch.schema)
+        if os.path.isfile(path):
+            schema = _parquet_file_schema(self.spark, path)
+            stream_path = self._stream_dir(path)
+        else:
+            schema = self.spark.read.parquet(path).schema
+            stream_path = path
+        reader = self.spark.readStream.schema(schema)
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger",
                                    max_files_per_trigger)
-        stream_path = path
-        if os.path.isfile(path):
-            # the file-stream source wants a directory; wrap a single
-            # parquet file in a symlink dir
-            import tempfile
-            d = tempfile.mkdtemp(prefix=f"fsql_stream_{name}_")
-            os.symlink(os.path.abspath(path),
-                       os.path.join(d, os.path.basename(path)))
-            stream_path = d
         df = _restore_nano_timestamps(reader.parquet(stream_path), path)
         self.register(name, df, event_time_col=event_time_col,
                       watermark=watermark)
+
+    def _stream_dir(self, path: str) -> str:
+        """The directory that streams the parquet file ``path``: one
+        temporary directory per absolute path, holding a symlink to the
+        file, reused whenever the file is registered again."""
+        path = os.path.abspath(path)
+        d = self._stream_dirs.get(path)
+        if d is None:
+            import tempfile
+            d = tempfile.mkdtemp(prefix="fsql_stream_")
+            os.symlink(path, os.path.join(d, os.path.basename(path)))
+            self._stream_dirs[path] = d
+        return d
 
     def load_dir(self, sf_dir: str) -> None:
         """Register every ``<table>.parquet`` under a testdata dir.
@@ -409,6 +431,9 @@ class FsqlEngine:
                 reader = reader.schema(schema)
             else:
                 reader = self.spark.read.format(self._reader_format(fmt))
+                if schema is None and fmt == "parquet" \
+                        and os.path.isfile(src.path):
+                    schema = _parquet_file_schema(self.spark, src.path)
                 if schema is not None:
                     reader = reader.schema(schema)
             reader = self._delimited_options(reader, fmt)
@@ -638,6 +663,33 @@ class FsqlEngine:
             df.explain(mode)
 
 
+def _parquet_file_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of one parquet file, read from its footer on
+    the driver without a Spark job.
+
+    This is the per-file code of Spark's schema-inference job
+    (``ParquetFileFormat.mergeSchemasInParallel``) run in-process: read
+    the footer without its row groups, then convert it with
+    ``readSchemaFromFooter``, which prefers the Spark row metadata a
+    Spark writer leaves in the footer.  The converter reads the
+    session's own SQLConf, so nanosAsLong, inferTimestampNTZ,
+    binaryAsString and int96AsTimestamp apply exactly as in inference.
+    """
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    jpath = jvm.org.apache.hadoop.fs.Path(os.path.abspath(path))
+    hin = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jpath, state.newHadoopConf())
+    meta = pq.ParquetFooterReader.readFooter(
+        hin, jvm.org.apache.parquet.format.converter
+        .ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    js = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(jpath, meta),
+        pq.ParquetToSparkSchemaConverter(state.conf()))
+    return _parse_datatype_json_string(js.json())
+
+
 def _restore_nano_timestamps(df: DataFrame, path: str) -> DataFrame:
     """Normalize parquet timestamp encodings to TimestampType (LTZ).
 
@@ -645,6 +697,9 @@ def _restore_nano_timestamps(df: DataFrame, path: str) -> DataFrame:
       * TIMESTAMP(NANOS): with ``spark.sql.legacy.parquet.nanosAsLong``
         Spark reads them as long — detect from the parquet footer
         (pyarrow) and cast back to micro-precision TimestampType.
+        pyarrow also reports an INT96 column as nanoseconds, but Spark
+        reads that one as a timestamp, so only a column Spark typed
+        as long is cast.
       * timestamp[us] with no timezone: loads as TIMESTAMP_NTZ unless
         ``inferTimestampNTZ`` is disabled; _coerce_ntz (applied in
         register()) covers sessions where the conf landed too late or a
@@ -657,15 +712,21 @@ def _restore_nano_timestamps(df: DataFrame, path: str) -> DataFrame:
     except Exception:
         return df
     from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
     import pyarrow as pa
-    for field in arrow_schema:
-        if isinstance(field.type, pa.TimestampType) and field.type.unit == "ns":
+    nanos = [f.name for f in arrow_schema
+             if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"]
+    if not nanos:
+        return df
+    longs = {f.name for f in df.schema.fields
+             if isinstance(f.dataType, LongType)}
+    for name in nanos:
+        if name in longs:
             # integer `div`, not `/`: float division of an ~1.7e18 nano
             # count rounds in the 53-bit mantissa and lands a microsecond
             # off; DuckDB (and arrow) floor-truncate, so must we
             df = df.withColumn(
-                field.name,
-                F.timestamp_micros(F.expr(f"`{field.name}` div 1000")))
+                name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
     return df
 
 

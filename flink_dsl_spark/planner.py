@@ -164,6 +164,11 @@ class Planner:
         # (populated by _plan_streaming_over, consulted by
         # _compile_window_func before its batch-only guard)
         self._stream_wf_cols: dict = {}
+        # whether the SELECT block whose items are compiling plans to a
+        # streaming frame (plan_select's _is_stream decision; False
+        # outside one, where UPDATE/DELETE/MERGE targets are batch),
+        # read by _compile_window_func's batch-only guard
+        self._select_stream = False
         # applyInPandasWithState passes in the statement being planned
         # (Spark allows one per streaming query; checked at plan time)
         self._stateful_passes = 0
@@ -487,12 +492,16 @@ class Planner:
         # after .distinct(), where the keys must be select-list
         # outputs (the DuckDB/ANSI restriction).
         defer_order = sel.distinct and bool(sel.order_by)
-        if agg_ctx:
-            df = self._plan_aggregate(sel, df, group_window_leaf, stream,
-                                      order=not defer_order)
-        else:
-            df = self._plan_projection(sel, df, stream,
-                                       order=not defer_order)
+        prev_stream, self._select_stream = self._select_stream, stream
+        try:
+            if agg_ctx:
+                df = self._plan_aggregate(sel, df, group_window_leaf,
+                                          stream, order=not defer_order)
+            else:
+                df = self._plan_projection(sel, df, stream,
+                                           order=not defer_order)
+        finally:
+            self._select_stream = prev_stream
 
         if sel.distinct:
             df = df.distinct()
@@ -2867,7 +2876,7 @@ class Planner:
         if mapped is not None:
             # already computed by the stateful running_agg pass
             return self._col(mapped)
-        if df.isStreaming:
+        if self._select_stream:
             raise PlanError(
                 "window functions on streams support only running "
                 "aggregates — sum/count/min/max/avg OVER (PARTITION "

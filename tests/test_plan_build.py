@@ -27,8 +27,9 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def queries(spark):
-    # the engine's load_dir runs jobs (parquet footers, schema checks):
-    # build it before any job group is watched
+    # register the testdata before any job group is watched, so the
+    # gates below see plan build only (load_dir itself launches no job:
+    # tests/test_registration.py)
     entry._engine(spark, SF)
     return entry.queries()
 
