@@ -251,10 +251,15 @@ def main():
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     load_dir_jobs = len(sc.statusTracker().getJobIdsForGroup(
         "bench-load-dir"))
-    eng.sql("""select l_returnflag, count(*) as cnt, sum(l_quantity) as q
-               from lineitem join orders on l_orderkey = o_orderkey
-               where l_discount between 0.01 and 0.05
-               group by l_returnflag""")
+    # the compile statement's front-end round trips: the non-memory
+    # py4j commands it sends
+    from flink_dsl_spark.timer import count_py4j
+    with count_py4j(spark) as sent:
+        eng.sql("""select l_returnflag, count(*) as cnt, sum(l_quantity) as q
+                   from lineitem join orders on l_orderkey = o_orderkey
+                   where l_discount between 0.01 and 0.05
+                   group by l_returnflag""")
+    compile_py4j_commands = len(sent)
     phases = {k: round(v, 3) for k, v in eng.timer.phases.items()}
 
     total = round(sum(timings.values()), 3)
@@ -271,6 +276,7 @@ def main():
         "shared17_steady_total": round(sum(
             v for k, v in steady.items() if k not in _ADDED_R5), 3),
         "compile_phases_ms": phases,
+        "compile_py4j_commands": compile_py4j_commands,
         "load_dir_ms": load_dir_ms,
         "load_dir_jobs": load_dir_jobs,
         "sf": sf,

@@ -9,6 +9,7 @@ The three phases are timed like the reference's Timer
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 from typing import Optional
 
@@ -93,7 +94,8 @@ class FsqlEngine:
     200, rewrites it to the cluster parallelism.  Other workloads
     sharing the session see these values (notably timezone-sensitive
     queries).  ``close()`` restores every conf this constructor
-    changed to its prior value.
+    changed to its prior value, and removes the temporary directories
+    the engine made.
     """
 
     def __init__(self, spark: Optional[SparkSession] = None,
@@ -122,6 +124,8 @@ class FsqlEngine:
         self.planner = Planner(self.catalog, self.registry, self.resolver)
         self.timer = Timer(enabled=timer)
         self._stream_dirs: dict[str, str] = {}     # see _stream_dir
+        # streams start_sink started and close() stops
+        self._queries: list = []
 
     def _remember_conf(self, key: str) -> None:
         """Record ``key``'s pre-engine value (None = unset) once, so
@@ -135,8 +139,19 @@ class FsqlEngine:
 
     def close(self) -> None:
         """Restore every session conf the constructor changed to its
-        pre-engine value (unset keys are unset again).  Does not stop
-        the SparkSession — the caller owns it."""
+        pre-engine value (unset keys are unset again), stop the
+        streams ``start_sink`` started that still run, then remove the
+        symlink directories ``register_stream_parquet`` made for
+        single files: each was made by this engine, and none of its
+        streams reads it any more.  Does not stop the SparkSession —
+        the caller owns it."""
+        for q in self._queries:
+            if q.isActive:
+                q.stop()
+        self._queries = []
+        for d in self._stream_dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+        self._stream_dirs = {}
         for k, prior in self._prior_confs.items():
             if prior is None:
                 self.spark.conf.unset(k)
@@ -438,6 +453,8 @@ class FsqlEngine:
                     reader = reader.schema(schema)
             reader = self._delimited_options(reader, fmt)
             df = reader.load(src.path)
+            if not self.streaming and fmt == "parquet":
+                df = _restore_nano_timestamps(df, src.path)
             self.register(stmt.name, df, kind="stream")
             return None
 
@@ -603,7 +620,8 @@ class FsqlEngine:
         commit per partition and micro-batch.  The session value is
         restored under a lock shared by all starts.  Results do not
         depend on the count.  A frame derived after ``sql()`` returned
-        is undeclared and gets the JVM count."""
+        is undeclared and gets the JVM count.  ``close()`` stops the
+        stream if it still runs."""
         w = df.writeStream.format(format).outputMode(output_mode)
         if name:
             w = w.queryName(name)
@@ -622,9 +640,11 @@ class FsqlEngine:
                 spark.conf.set(key, str(max(
                     1, spark.sparkContext.defaultParallelism // 8)))
             try:
-                return w.start()
+                q = w.start()
             finally:
                 spark.conf.set(key, old)
+            self._queries = [r for r in self._queries if r.isActive] + [q]
+        return q
 
     # ------------------------------------------------------------------
     # external RDBMS catalog (flinkdsl/database.scala:11-31 used

@@ -30,7 +30,7 @@ def _xxhash_id(c, seed: int):
 _xxhash_id.hash_range = (float(-(1 << 63)), float(1 << 63))
 
 
-def md5_id_hash(c, seed: int):
+def md5_id_hash(c, seed: int, lit=F.lit):
     """Cross-engine deterministic id hash (same pattern as
     dedup.md5_token_hash): 60-bit value of ``md5(id || ':' || seed)``,
     bit-identical to DuckDB's
@@ -40,9 +40,11 @@ def md5_id_hash(c, seed: int):
     intrinsic vs an md5 + string round-trip).  F.concat rather than
     concat_ws — concat_ws silently SKIPS a NULL id (hashing just the
     seed), while concat propagates NULL, matching the oracle's
-    concat(NULL, ':', seed) = NULL on both engines."""
-    s = F.concat(c.cast("string"), F.lit(":"), F.lit(str(seed)))
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+    concat(NULL, ':', seed) = NULL on both engines.  ``lit`` builds
+    the literal handles (the planner passes its memo)."""
+    s = F.concat(c.cast("string"), lit(":"), lit(str(seed)))
+    return F.conv(F.substring(F.md5(s), lit(1), lit(15)),
+                  16, 10).cast("long")
 
 
 md5_id_hash.hash_range = (0.0, float(1 << 60))  # 15 hex digits
@@ -104,13 +106,14 @@ def seeded_shuffle(df: DataFrame, id_col: str, seed: int = 42,
     out = (out.repartitionByRange(parts, "shuffle_key")
               .sortWithinPartitions("shuffle_key"))
     if rank:
-        from ..streaming.windows import _global_index
+        from ..streaming.windows import _column_type, _global_index
         # the order key is the seeded hash itself: static codomain (no
         # min/max pass) and no collected counts (the rank never needs
         # the total) — the numbering is one lazy plan, zero eager jobs
         out = _global_index(
             out, F.col("shuffle_key"), "shuffle_rank",
-            known_range=getattr(id_hash, "hash_range", None))
+            known_range=getattr(id_hash, "hash_range", None),
+            dtype=_column_type(out, "shuffle_key"))
         out = out.withColumn("shuffle_rank", F.col("shuffle_rank") - 1)
     return out
 
@@ -394,14 +397,16 @@ def token_budget_sample(df: DataFrame, id_col: str, tokens_col: str,
 
 def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
                         budget: int, seed: int = 42, id_hash=None,
-                        cum_col: str | None = None) -> DataFrame:
+                        cum_col: str | None = None, *,
+                        col=F.col, lit=F.lit) -> DataFrame:
     """The cut behind ``token_budget_sample``, keeping EVERY input
     column (the dialect ``token_budget`` hint's shape — sample is the
     (id, n_tokens, cum_tokens) projection of this filter).  Orders
     rows by the seeded id hash and keeps the prefix whose running
     ``tokens_col`` total stays <= ``budget``.  ``cum_col``: when set,
     the running total is kept under that name (cast long); otherwise
-    all bookkeeping columns are dropped.
+    all bookkeeping columns are dropped.  ``col``/``lit`` build column
+    and literal handles (the planner passes its memos).
 
     Distributed shape (same as the sample): range-bucket on the hash
     key, collect only per-bucket token SUBTOTALS (<= parallelism+2
@@ -411,15 +416,17 @@ def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
     straddle the cut."""
     if id_hash is None:
         id_hash = _xxhash_id
-    from ..streaming.windows import _range_bucket
+    from ..streaming.windows import (_column_type, _lazy_prefix_offsets,
+                                     _range_bucket)
     from pyspark.sql.window import Window as W
 
     spark = df.sparkSession
     buckets = spark.sparkContext.defaultParallelism
 
-    # bookkeeping names must not shadow an input column — withColumn
-    # silently REPLACES same-named columns, which would corrupt a user
-    # frame that happens to carry e.g. "__tb_key" through the hint path
+    # bookkeeping names must not shadow an input column — a second
+    # same-named column would make every reference to it ambiguous,
+    # which would break a user frame that happens to carry e.g.
+    # "__tb_key" through the hint path
     taken = set(df.columns)
 
     def _fresh(base: str) -> str:
@@ -431,8 +438,8 @@ def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
         return name
     key, bkt, off, n = (_fresh("__tb_key"), _fresh("__tb_bkt"),
                         _fresh("__tb_off"), _fresh("__tb_n"))
-    d = df.withColumn(key, id_hash(F.col(id_col), seed)) \
-          .withColumn(n, F.col(tokens_col).cast("long"))
+    keyed = df.select(col("*"), id_hash(col(id_col), seed).alias(key),
+                      col(tokens_col).cast("long").alias(n))
     # the order key is a seeded hash with a statically-known codomain,
     # so range-bucketing needs no min/max pass; the per-bucket prefix
     # offsets are built LAZILY (sum aggregate + one cumulative window
@@ -441,20 +448,23 @@ def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
     # a min/max scan plus a subtotal-collect scan before the query
     # even started (guide §1.2 / §5: remove passes, keep the driver
     # out of the data path).
-    d = _range_bucket(d, F.col(key), buckets, bkt,
-                      known_range=getattr(id_hash, "hash_range", None))
-    from ..streaming.windows import _lazy_prefix_offsets
-    off_df = _lazy_prefix_offsets(d, bkt, F.sum(n), off)
-    w = (W.partitionBy(bkt).orderBy(key, id_col)
+    d, bucket = _range_bucket(
+        keyed, col(key), buckets, _column_type(keyed, key),
+        known_range=getattr(id_hash, "hash_range", None),
+        col=col, lit=lit)
+    d = d.select(keyed["*"], bucket.alias(bkt))
+    off_df = _lazy_prefix_offsets(d, bkt, F.sum(col(n)), off,
+                                  col=col, lit=lit)
+    w = (W.partitionBy(col(bkt)).orderBy(col(key), col(id_col))
           .rowsBetween(W.unboundedPreceding, W.currentRow))
     cum = cum_col or _fresh("__tb_cum")
+    budget = int(budget)
     out = (d.join(F.broadcast(off_df), bkt)
-            .filter(F.col(off) <= F.lit(int(budget)))
-            .withColumn(cum,
-                        (F.col(off) + F.sum(n).over(w)).cast("long"))
-            .filter(F.col(cum) <= F.lit(int(budget)))
-            .drop(key, bkt, off, n))
-    return out if cum_col else out.drop(cum)
+            .filter(col(off) <= budget)
+            .select(df["*"], (col(off) + F.sum(col(n)).over(w))
+                    .cast("long").alias(cum))
+            .filter(col(cum) <= budget))
+    return out if cum_col else out.select(df["*"])
 
 
 def domain_mixture(df: DataFrame, domain_col: str, id_col: str,
@@ -486,19 +496,24 @@ def domain_mixture(df: DataFrame, domain_col: str, id_col: str,
 
 
 def _weights_dom_frame(df: DataFrame, domain_col: str, tokens_col: str,
-                       weights: dict[str, float]) -> DataFrame:
+                       weights: dict[str, float], *,
+                       col=F.col, lit=F.lit) -> DataFrame:
     """Per-domain token totals joined to the validated explicit weight
     map — the (domain, __tok, __w) frame every weighted mixture entry
     point shares, so the rate algebra exists in exactly one place
-    (_mixture_keep).  Zero-weight and unnamed domains drop here."""
+    (_mixture_keep).  Zero-weight and unnamed domains drop here.  The
+    weight is a function of the grouping key, so the aggregate
+    computes it beside the totals."""
     _check_mixture_weights(weights)
-    wmap = F.create_map(*[F.lit(x) for kv in weights.items()
+    wmap = F.create_map(*[lit(x) for kv in weights.items()
                           for x in (kv[0], float(kv[1]))])
-    return (df.groupBy(F.col(domain_col).alias("domain"))
-              .agg(F.sum(F.col(tokens_col).cast("long"))
-                    .cast("double").alias("__tok"))
-              .withColumn("__w", wmap[F.col("domain")])
-              .filter(F.col("__w").isNotNull() & (F.col("__w") > 0)))
+    dom = col(domain_col)
+    w = col("__w")
+    return (df.groupBy(dom.alias("domain"))
+              .agg(F.sum(col(tokens_col).cast("long"))
+                    .cast("double").alias("__tok"),
+                   wmap[dom].alias("__w"))
+              .filter(w.isNotNull() & (w > 0)))
 
 
 def domain_mixture_temperature(df: DataFrame, domain_col: str,
@@ -541,28 +556,24 @@ def domain_mixture_temperature(df: DataFrame, domain_col: str,
 
 
 def _mixture_keep(df: DataFrame, dom: DataFrame, domain_col: str,
-                  id_col: str, seed: int, id_hash) -> DataFrame:
+                  id_col: str, seed: int, id_hash, *,
+                  col=F.col, lit=F.lit) -> DataFrame:
     """Shared mixture tail keeping EVERY input column: feasible total
     from the (domain, __tok, __w) frame, keep-rates broadcast back,
-    id-hash membership filter.  Domains absent from the rates frame
-    are dropped (inner join)."""
+    id-hash membership as part of the join condition.  Domains absent
+    from the rates frame are dropped (inner join)."""
     if id_hash is None:
         id_hash = _xxhash_id
-    total = dom.agg(F.min(F.col("__tok") / F.col("__w"))
-                     .alias("__total"))
+    total = dom.select(F.min(col("__tok") / col("__w")).alias("__total"))
+    rate = F.least(lit(1.0), col("__w") * col("__total") / col("__tok"))
     rates = (dom.crossJoin(F.broadcast(total))
-                .withColumn("__rate",
-                            F.least(F.lit(1.0),
-                                    F.col("__w") * F.col("__total") /
-                                    F.col("__tok")))
-                .select("domain",
-                        F.round(F.col("__rate") * _BUCKETS)
-                         .cast("long").alias("__thresh")))
-    bucket = F.pmod(id_hash(df[id_col], seed), F.lit(_BUCKETS))
-    out = (df.join(F.broadcast(rates),
-                   df[domain_col] == rates["domain"])
-             .filter(bucket < rates["__thresh"]))
-    return out.drop(rates["domain"]).drop(rates["__thresh"])
+                .select(col("domain"),
+                        F.round(rate * _BUCKETS).cast("long")
+                         .alias("__thresh")))
+    bucket = F.pmod(id_hash(df[id_col], seed), lit(_BUCKETS))
+    keep = (df[domain_col] == rates["domain"]) \
+        & (bucket < rates["__thresh"])
+    return df.join(F.broadcast(rates), keep).select(df["*"])
 
 
 def _mixture_select(df: DataFrame, dom: DataFrame, domain_col: str,
@@ -578,7 +589,8 @@ def _mixture_select(df: DataFrame, dom: DataFrame, domain_col: str,
 
 def domain_mixture_filter(df: DataFrame, domain_col: str, id_col: str,
                           tokens_col: str, weights: dict[str, float],
-                          seed: int = 42, id_hash=None) -> DataFrame:
+                          seed: int = 42, id_hash=None, *,
+                          col=F.col, lit=F.lit) -> DataFrame:
     """``domain_mixture``'s cut keeping EVERY input column (the
     dialect ``mixture`` hint's shape — the API's (id, domain,
     n_tokens) frame is a projection of this filter).  Same algebra:
@@ -587,8 +599,10 @@ def domain_mixture_filter(df: DataFrame, domain_col: str, id_col: str,
     selection is reproducible and downsample-only.  Scale shape is
     domain_mixture's: one partial-aggregated pass for the per-domain
     totals, a broadcast rates join, one filter."""
-    dom = _weights_dom_frame(df, domain_col, tokens_col, weights)
-    return _mixture_keep(df, dom, domain_col, id_col, seed, id_hash)
+    dom = _weights_dom_frame(df, domain_col, tokens_col, weights,
+                             col=col, lit=lit)
+    return _mixture_keep(df, dom, domain_col, id_col, seed, id_hash,
+                         col=col, lit=lit)
 
 
 def temperature_scaled_weights(weights: dict[str, float],
@@ -820,21 +834,23 @@ def shard_corpus(df: DataFrame, id_col: str, tokens_col: str,
         raise ValueError("shard_tokens must be positive")
     if id_hash is None:
         id_hash = _xxhash_id
-    from ..streaming.windows import _range_bucket
+    from ..streaming.windows import (_column_type, _lazy_prefix_offsets,
+                                     _range_bucket)
     from pyspark.sql.window import Window as W
 
     spark = df.sparkSession
     buckets = spark.sparkContext.defaultParallelism
-    d = df.select(F.col(id_col).alias("id"),
-                  F.col(tokens_col).cast("long").alias("n_tokens"))
-    d = d.withColumn("__key", id_hash(F.col("id"), seed))
+    keyed = df.select(F.col(id_col).alias("id"),
+                      F.col(tokens_col).cast("long").alias("n_tokens"),
+                      id_hash(F.col(id_col), seed).alias("__key"))
     # static hash codomain + lazy prefix offsets — same r14 shape as
     # token_budget_filter: no min/max pass, no subtotal collect; one
     # action, the corpus touched by exactly the (partial-aggregated)
     # subtotal branch and the main branch
-    d = _range_bucket(d, F.col("__key"), buckets, "__bkt",
-                      known_range=getattr(id_hash, "hash_range", None))
-    from ..streaming.windows import _lazy_prefix_offsets
+    d, bucket = _range_bucket(
+        keyed, F.col("__key"), buckets, _column_type(keyed, "__key"),
+        known_range=getattr(id_hash, "hash_range", None))
+    d = d.select(keyed["*"], bucket.alias("__bkt"))
     off_df = _lazy_prefix_offsets(d, "__bkt", F.sum("n_tokens"), "__off")
     w = (W.partitionBy("__bkt").orderBy("__key", "id")
           .rowsBetween(W.unboundedPreceding, W.currentRow))

@@ -173,6 +173,17 @@ class Planner:
         # (Spark allows one per streaming query; checked at plan time)
         self._stateful_passes = 0
 
+    @functools.cached_property
+    def _md5_hash(self):
+        """The row hints' and TABLESAMPLE's id hash (md5_id_hash, seed
+        42 at every call site), its literals taken from ``_lit``.
+        Built on first use: ``llm_ops`` takes about 20 ms to import,
+        which a statement without a hint never pays."""
+        from .llm_ops.assemble import md5_id_hash
+        h = functools.partial(md5_id_hash, lit=self._lit)
+        h.hash_range = md5_id_hash.hash_range
+        return h
+
     def _lit(self, v) -> Column:
         """``F.lit(v)``, built once per type and spelling of ``v``.
         The memo key carries ``type(v)`` and ``repr(v)``, not just
@@ -442,11 +453,13 @@ class Planner:
         # FROM
         prev_salt = self._salt_specs
         self._salt_specs = salt_specs
+        where = sel.where
         try:
             if sel.from_ is None:
                 df = self.catalog.spark.range(1).select()   # dual
             else:
-                df = self._plan_relation(sel.from_, snapshot=snapshot_mode)
+                df, where = self._plan_from(sel.from_, where,
+                                            snapshot_mode)
             if self._salt_specs:
                 missing = ", ".join(sorted(self._salt_specs))
                 raise PlanError(
@@ -456,9 +469,9 @@ class Planner:
         finally:
             self._salt_specs = prev_salt
 
-        # WHERE
-        if sel.where is not None:
-            df = df.filter(self._compile(sel.where, df))
+        # WHERE (what the FROM's keyed joins left of it)
+        if where is not None:
+            df = df.filter(self._compile(where, df))
 
         # cap(group, id, k) / token_budget(id, tokens, budget): applied
         # AFTER the row filter and BEFORE aggregation/projection, in
@@ -592,17 +605,18 @@ class Planner:
             "reference to a window-function select item (use WHERE or "
             "HAVING to filter non-window results)")
 
-    def _leaf_time_col(self, leaf) -> Optional[Column]:
-        """Default event-time column for a windowed stream: the policy's
-        ``on`` column, else catalog metadata event_time_col."""
+    def _leaf_time_col(self, leaf) -> Optional[str]:
+        """Name of the default event-time column for a windowed stream:
+        the policy's ``on`` column, else catalog metadata
+        event_time_col."""
         w: WindowSpec = leaf.window
         if w.size.on_col is not None:
             c = w.size.on_col
-            return self._col(f"{c.binding}.{c.name}")
+            return f"{c.binding}.{c.name}"
         if isinstance(leaf, TableRef) and self.catalog.has(leaf.name):
             meta = self.catalog.meta(leaf.name)
             if meta.event_time_col:
-                return self._col(f"{leaf.binding}.{meta.event_time_col}")
+                return f"{leaf.binding}.{meta.event_time_col}"
         return None
 
     def _needs_aggregation(self, sel: Select) -> bool:
@@ -676,8 +690,9 @@ class Planner:
         computed over the FULL WHERE output first, THEN the predicate
         filters, THEN DISTINCT/ORDER BY/LIMIT — a surviving row keeps
         the rank it had in the pre-filter partition.  Items materialize
-        as hidden ``__s{i}`` columns (withColumn keeps the input frame's
-        columns and binding qualifiers available to the predicate);
+        as hidden ``__s{i}`` columns of one select beside ``*`` (which
+        keeps the input frame's columns and binding qualifiers available
+        to the predicate);
         alias references in the predicate resolve to those hidden
         columns via _qualify_aliases, so the window is computed once.
 
@@ -697,18 +712,19 @@ class Planner:
 
     def _plan_projection_qualify_body(self, sel: Select, df: DataFrame,
                                       order: bool) -> DataFrame:
-        qdf = df
         specs: list[tuple] = []          # ("star", Star) | ("col", (hid, out))
         alias_map: dict[str, str] = {}
+        items: list[Column] = []
         for i, item in enumerate(sel.items):
             if isinstance(item.expr, Star):
                 specs.append(("star", item.expr))
                 continue
             name = _item_name(item, i)
             h = f"__s{i}"
-            qdf = qdf.withColumn(h, self._compile(item.expr, df))
+            items.append(self._compile(item.expr, df).alias(h))
             specs.append(("col", (h, name)))
             alias_map.setdefault(name.lower(), h)
+        qdf = df.select(self._col("*"), *items) if items else df
         prev = self._qualify_aliases
         self._qualify_aliases = alias_map
         try:
@@ -858,7 +874,8 @@ class Planner:
             if stream and _axis(spec.size) == "time":
                 df = self._ensure_watermark(df, window_leaf, spec)
             df, win_group, win_out = window_grouping(
-                df, spec, self._leaf_time_col(window_leaf))
+                df, spec, self._leaf_time_col(window_leaf),
+                col=self._col, lit=self._lit)
             if spec.partition is not None:
                 p = spec.partition
                 group_exprs.append(p)
@@ -960,7 +977,7 @@ class Planner:
                 # AFTER grouping/HAVING (ANSI order) over the
                 # aggregated frame — deferred below.  Hidden unique
                 # name: two unaliased same-function items must not
-                # overwrite each other's withColumn
+                # collide in the select that adds them
                 h = f"__win{i}"
                 win_specs.append((h, item.expr))
                 out_specs.append((self._col(h), name, False))
@@ -1028,8 +1045,10 @@ class Planner:
         if win_specs or sel.qualify is not None:
             post = _PostAggContext(self, group_exprs, g_names,
                                    win_agg_cols, res)
-            for h, wexpr in win_specs:
-                res = res.withColumn(h, post.compile(wexpr))
+            if win_specs:
+                res = res.select(self._col("*"),
+                                 *[post.compile(wexpr).alias(h)
+                                   for h, wexpr in win_specs])
             if sel.qualify is not None:
                 # QUALIFY over an aggregating query: evaluated after
                 # grouping/HAVING and the deferred window items, before
@@ -1037,14 +1056,20 @@ class Planner:
                 # resolve to the column holding each output.
                 post.alias_map = lower_names
                 try:
-                    res = res.withColumn(
-                        "__qual", post.compile(sel.qualify))
+                    pred = post.compile(sel.qualify)
                 finally:
                     post.alias_map = None
-                res = res.filter(self._col("__qual"))
+                res = res.withColumn("__qual", pred) \
+                    .filter(self._col("__qual"))
         if order_specs:
             res = res.orderBy(*[_sorted_col(c, o)
                                 for c, o in order_specs])
+        if not group_cols and sel.qualify is None \
+                and len(agg_exprs) == len(out_specs) \
+                and all(named for _, _, named in out_specs):
+            # a global aggregate of plain items: its columns are the
+            # outputs, in order, so a final select would be a no-op
+            return res
         return res.select(*[c if named else c.alias(out)
                             for c, out, named in out_specs])
 
@@ -1520,10 +1545,83 @@ class Planner:
             raise PlanError(
                 f"TABLESAMPLE column {colname!r} not in relation "
                 f"{rel.binding!r} ({', '.join(df.columns)})")
-        from .llm_ops.assemble import md5_id_hash
         return df.filter(
-            md5_id_hash(self._col(f"{rel.binding}.{real}"), 42)
+            self._md5_hash(self._col(f"{rel.binding}.{real}"), 42)
             % 1000 < permille)
+
+    def _plan_from(self, rel, where, snapshot: bool):
+        """A FROM clause and the WHERE conjuncts its joins take over:
+        ``(frame, rest of WHERE or None)``.
+
+        A comma (or CROSS JOIN) list with WHERE conjuncts between its
+        relations is planned as keyed joins, in the order Catalyst's
+        ``ReorderJoin`` picks for a cross product under a filter:
+        start from the first relation, then take the first remaining
+        one that a conjunct ties to the relations joined so far (the
+        first remaining one if none is tied, as a cross join).  Each
+        join's ON is its equalities between one relation's columns
+        and the other's.  Non-equi, OR'd and single-relation
+        conjuncts stay in the returned WHERE, and the optimizer
+        pushes them down or into the joins as before.  The optimized
+        plan is the one Spark SQL gives the same text (a cross product
+        under one filter there), apart from the order of conjuncts
+        inside a join condition; the plan built is keyed joins, not a
+        cross product the optimizer must turn into them.  Windowed
+        co-trigger joins, and a WHERE with a nondeterministic
+        conjunct (which Catalyst never reorders under), plan as
+        written."""
+        units: list = []
+        node = rel
+        while isinstance(node, Join) and node.kind == "cross" \
+                and node.on is None and node.using is None:
+            units.insert(0, node.right)
+            node = node.left
+        units.insert(0, node)
+        if where is None or len(units) < 2 \
+                or any(self._has_cowin(u, snapshot) for u in units) \
+                or _nondeterministic(where):
+            return self._plan_relation(rel, snapshot), where
+        owner = {leaf.binding.lower(): i for i, u in enumerate(units)
+                 for leaf in relation_leaves(u)}
+
+        def owners(e) -> Optional[set]:
+            """The units ``e`` reads, None if it reads a column bound
+            outside them."""
+            got = {owner.get(x.binding) for x in walk_expr(e)
+                   if isinstance(x, Col)}
+            return None if None in got else got
+
+        def keyed(c) -> bool:
+            """An equality between one unit's columns and another's."""
+            if not (isinstance(c, BinOp) and c.op == "="):
+                return False
+            l, r = owners(c.left), owners(c.right)
+            return l is not None and r is not None \
+                and len(l) == len(r) == 1 and l != r
+
+        conjuncts = list(_conjuncts(where))
+        ties = [(c, owners(c)) for c in conjuncts]
+        ties = [(c, u) for c, u in ties if u is not None and len(u) > 1]
+        df = self._plan_relation(units[0], snapshot)
+        joined, rest, used = {0}, list(range(1, len(units))), set()
+        while rest:
+            nxt = next((r for r in rest
+                        if any(r in u and u <= joined | {r}
+                               for _, u in ties)), rest[0])
+            rest.remove(nxt)
+            joined.add(nxt)
+            right = self._plan_relation(units[nxt], snapshot)
+            on = [c for c, u in ties
+                  if nxt in u and u <= joined and keyed(c)]
+            if on:
+                used.update(id(c) for c in on)
+                df = df.join(right, on=[self._compile(c, None) for c in on],
+                             how="inner")
+            else:
+                df = df.crossJoin(right)
+        kept = [c for c in conjuncts if id(c) not in used]
+        return df, functools.reduce(
+            lambda a, b: BinOp("and", a, b), kept) if kept else None
 
     def _plan_relation(self, rel, snapshot: bool = False) -> DataFrame:
         if isinstance(rel, TableRef):
@@ -1827,7 +1925,8 @@ class Planner:
         join of test/parserTest.scala:54 — SURVEY.md §2.9/§7.3(2))."""
         if not self._is_stream(rel):
             return last_window_filter(df, rel.window,
-                                      self._leaf_time_col(rel))
+                                      self._leaf_time_col(rel),
+                                      col=self._col, lit=self._lit)
         from .streaming.windows import _axis, duration_str
         spec = rel.window
         if _axis(spec.size) != "time":
@@ -1835,10 +1934,11 @@ class Planner:
                 "streaming windowed joins support time-axis windows only "
                 "(count/delta windows have no streaming join primitive; "
                 "run in batch mode or aggregate with count_window_agg)")
-        tcol = self._leaf_time_col(rel)
-        if tcol is None:
+        tname = self._leaf_time_col(rel)
+        if tname is None:
             raise PlanError("time window needs `on <col>` or stream "
                             "event_time_col metadata")
+        tcol = self._col(tname)
         if spec.every is not None:
             win = F.window(tcol, duration_str(spec.size),
                            duration_str(spec.every))
@@ -1868,9 +1968,8 @@ class Planner:
             raise PlanError("cap hint is batch-only (row_number over "
                             "an unbounded stream is not supported)")
         g, i = self._resolve_hint_cols(df, (gcol, idcol), "cap")
-        from .llm_ops.assemble import md5_id_hash
-        w = Window.partitionBy(g).orderBy(md5_id_hash(self._col(i), 42),
-                                          self._col(i))
+        ic = self._col(i)
+        w = Window.partitionBy(g).orderBy(self._md5_hash(ic, 42), ic)
         rank = "__cap_rank__"
         return (df.withColumn(rank, F.row_number().over(w))
                   .filter(self._col(rank) <= k).drop(rank))
@@ -1897,9 +1996,8 @@ class Planner:
         filtered; oracles must spell the exclusion explicitly since
         DuckDB's concat skips NULL args instead of propagating)."""
         (idc,) = self._resolve_hint_cols(df, (idcol,), "sample")
-        from .llm_ops.assemble import md5_id_hash
         return df.filter(
-            md5_id_hash(self._col(idc), 42) % 1000 < permille)
+            self._md5_hash(self._col(idc), 42) % 1000 < permille)
 
     def _apply_bm25_hint(self, df: DataFrame, textcol: str,
                          idcol: str, terms: str, k: int) -> DataFrame:
@@ -2096,7 +2194,7 @@ class Planner:
                 "stream with QUALIFY on a running count)")
         idc, wc = self._resolve_hint_cols(df, (idcol, wcol),
                                           "priority_sample")
-        from .llm_ops.assemble import dlt_priority, md5_id_hash
+        from .llm_ops.assemble import dlt_priority
         w = self._col(wc).cast("double")
         # collision-free bookkeeping name — withColumn silently
         # REPLACES a same-named user column (the __tb_* lesson)
@@ -2106,7 +2204,7 @@ class Planner:
         base = (df.filter(w.isNotNull() & (w > 0)
                           & self._col(idc).isNotNull())
                   .withColumn(pri, dlt_priority(idc, wc, 42,
-                                                md5_id_hash)))
+                                                self._md5_hash)))
         if stratcol is None:
             return base.orderBy(pri, self._col(idc)).limit(k).drop(pri)
         from pyspark.sql import Window
@@ -2136,20 +2234,21 @@ class Planner:
         its production default.
 
         Scale shape: the running sum is distributed — range-bucket on
-        the id hash, collect only per-bucket token subtotals
-        (<= parallelism+2 longs), rebase with broadcast offsets, prune
-        whole buckets past the budget before the per-bucket window
-        runs.  Note the subtotal collect executes the child plan at
-        PLAN time (documented in assemble.token_budget_filter)."""
+        the id hash, fold the per-bucket token subtotals (at most
+        parallelism+3 rows) into prefix offsets inside the plan,
+        rebase with the broadcast offsets, prune whole buckets past the
+        budget before the per-bucket window runs.  Building the plan
+        runs no job (assemble.token_budget_filter)."""
         if df.isStreaming:
             raise PlanError("token_budget hint is batch-only (a "
                             "running total over an unbounded stream "
                             "has no prefix)")
         idc, tokc = self._resolve_hint_cols(df, (idcol, tokcol),
                                             "token_budget")
-        from .llm_ops.assemble import md5_id_hash, token_budget_filter
+        from .llm_ops.assemble import token_budget_filter
         return token_budget_filter(df, idc, tokc, budget,
-                                   seed=42, id_hash=md5_id_hash)
+                                   seed=42, id_hash=self._md5_hash,
+                                   col=self._col, lit=self._lit)
 
     def _apply_mixture_hint(self, df: DataFrame, domcol: str,
                             idcol: str, tokcol: str,
@@ -2209,13 +2308,13 @@ class Planner:
                 raise PlanError("mixture hint needs at least one "
                                 "'domain=weight' entry")
         from .llm_ops.assemble import (domain_mixture_filter,
-                                       md5_id_hash,
                                        temperature_scaled_weights)
         if temperature is not None:
             weights = temperature_scaled_weights(weights,
                                                  float(temperature))
         return domain_mixture_filter(df, d, i, t, weights, seed=42,
-                                     id_hash=md5_id_hash)
+                                     id_hash=self._md5_hash,
+                                     col=self._col, lit=self._lit)
 
     def _mixture_weights_from_relation(self, name: str) -> dict:
         """mixture(domain, id, tokens, weights_rel): target shares
@@ -3171,6 +3270,15 @@ _NONDETERMINISTIC_FUNCS = frozenset({
     "input_file_name", "input_file_block_start",
     "input_file_block_length", "reflect", "java_method", "try_reflect",
 })
+
+
+def _conjuncts(e):
+    """The AND-ed parts of ``e``, left to right."""
+    if isinstance(e, BinOp) and e.op == "and":
+        yield from _conjuncts(e.left)
+        yield from _conjuncts(e.right)
+    else:
+        yield e
 
 
 def _nondeterministic(e) -> bool:

@@ -15,12 +15,27 @@ conf, read once per process, so it only takes effect when set here at
 build time — ``FsqlEngine`` cannot set it on a caller's session.
 ``spark.ui.showConsoleProgress=false`` keeps the ``[Stage N:>`` bar off
 stderr lines that scripts parse.
+
+Beside the confs, ``get_session`` imports
+``org.apache.spark.api.python.PythonUtils`` into the gateway's JVM
+view.  PySpark turns every list of columns it hands the JVM (each
+``select``, ``groupBy``, ``agg``, window spec or ``coalesce``) into a
+Scala Seq through ``PythonUtils``, looked up by that bare name each
+time.  Without a single-type import the JVM side resolves a bare name
+by trying the view's star-import packages in turn until one loads
+(about 0.09 ms a lookup against 0.045 ms imported, on 4 cores; several
+hundred lookups per pass of the catalog's statements).  The import
+changes no name's meaning: PySpark's own star import of
+``org.apache.spark.api.python.*`` already resolves ``PythonUtils`` to
+that same class, so every user of the gateway sees the class it saw
+before, found without the failed attempts.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import java_import
 from pyspark.sql import SparkSession
 
 
@@ -52,4 +67,6 @@ def get_session(app_name: str = "flink-dsl-spark",
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    java_import(spark._jvm, "org.apache.spark.api.python.PythonUtils")
+    return spark

@@ -39,14 +39,28 @@ table's rows.  With ``partitioned on k`` the row_number
 partitions by key and parallelizes directly.  Global MAX lookups
 (snapshot windows, trigger high-water marks) use a scalar aggregate
 broadcast-joined back, not a whole-table window.
+
+Plan-build shape: every Dataset call re-runs the analyzer over the
+plan built so far, so each stage here is ONE call.  A stage that adds
+columns is one ``select`` of the columns it keeps (``df["*"]``, the
+input frame's resolved columns, or ``col("*")``) plus its new ones —
+never a ``withColumn`` chain ending in a ``drop``.  Window keys that
+need no row-level work (``__win``, ``__win_no``) are not columns at
+all: ``window_grouping`` returns them as grouping expressions.  Column
+arithmetic takes Python scalars (``pos / every``), which PySpark sends
+inside the operator's one py4j call; the remaining literals and column
+references come from the ``lit``/``col`` builders the planner passes
+in, its per-engine handle memos.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (BooleanType, DataType, DateType, NumericType,
+                               TimestampNTZType, TimestampType)
 from pyspark.sql.window import Window as W
 
 from ..ast_nodes import Policy, WindowSpec
@@ -74,12 +88,6 @@ def _axis(p: Policy) -> str:
     return "count"
 
 
-def _unit_seconds(p: Policy) -> float:
-    mult = {"microsec": 1e-6, "milisec": 1e-3, "sec": 1.0,
-            "min": 60.0, "h": 3600.0, "d": 86400.0}
-    return p.value * mult[p.unit]
-
-
 def _check_every_axis(axis: str, every: Optional[Policy]) -> None:
     """The slide must be measured on the same axis as the extent
     (a `[size 1 h every 10]` mixing time rows is a user error, not a
@@ -98,11 +106,11 @@ def _check_every_axis(axis: str, every: Optional[Policy]) -> None:
                         "numeric step (optionally `on` the same column)")
 
 
-def _partition_cols(spec: WindowSpec) -> list[Column]:
+def _partition_cols(spec: WindowSpec, col) -> list[Column]:
     if spec.partition is None:
         return []
     c = spec.partition
-    return [F.col(f"{c.binding}.{c.name}" if c.binding else c.name)]
+    return [col(f"{c.binding}.{c.name}" if c.binding else c.name)]
 
 
 def _order_col(spec: WindowSpec, time_col: Optional[Column]) -> Column:
@@ -116,109 +124,134 @@ def _order_col(spec: WindowSpec, time_col: Optional[Column]) -> Column:
     return time_col
 
 
+def _column_type(df: DataFrame, name: str) -> Optional[DataType]:
+    """The type of column ``name`` (``binding.column`` or ``column``),
+    read from ``df.schema``, which PySpark keeps per frame: no plan is
+    built to ask.  None when no field, or fields of different types,
+    carry the unqualified name (a join of two relations that both have
+    it); _range_bucket then probes with a select."""
+    leaf = name.rsplit(".", 1)[-1].lower()
+    types = {f.dataType for f in df.schema.fields
+             if f.name.lower() == leaf}
+    return types.pop() if len(types) == 1 else None
+
+
 # --------------------------------------------------------------------------
 # distributed total-order helpers (batch only)
 # --------------------------------------------------------------------------
 
-def _order_as_double(df: DataFrame, order: Column) -> Optional[Column]:
-    """``order`` as a double whose sort order matches the column's, or
-    None when no such cast exists.  Numeric / timestamp / date / boolean
-    casts are monotone; strings are NOT (lexicographic "10" < "9" but
-    numeric 10 > 9), and complex types don't cast at all — those fall
-    back to the one-bucket (single-task row_number) path, which is slow
-    but correct for any orderable type."""
-    from pyspark.sql.types import (BooleanType, DateType, NumericType,
-                                   TimestampNTZType, TimestampType)
-    dt = df.select(order.alias("__o")).schema[0].dataType
-    if isinstance(dt, TimestampNTZType):
+def _order_as_double(order: Column, dtype: DataType) -> Optional[Column]:
+    """``order`` (of type ``dtype``) as a double whose sort order
+    matches the column's, or None when no such cast exists.  Numeric /
+    timestamp / date / boolean casts are monotone; strings are NOT
+    (lexicographic "10" < "9" but numeric 10 > 9), and complex types
+    don't cast at all — those fall back to the one-bucket (single-task
+    row_number) path, which is slow but correct for any orderable
+    type."""
+    if isinstance(dtype, TimestampNTZType):
         # TIMESTAMP_NTZ has no direct double cast; hop through LTZ
         # (session TZ is UTC under the engine, and any fixed zone
         # preserves order)
         return order.cast("timestamp").cast("double")
-    if isinstance(dt, (NumericType, TimestampType, DateType, BooleanType)):
+    if isinstance(dtype, (NumericType, TimestampType, DateType,
+                          BooleanType)):
         return order.cast("double")
     return None
 
 
-def _range_bucket(df: DataFrame, order: Column, buckets: int, out: str,
-                  known_range: tuple[float, float] | None = None
-                  ) -> DataFrame:
-    """``df`` plus an integer column ``out`` holding a range bucket of
-    ``order``: bucket ids are non-decreasing along the column's sort
-    order and equal values share a bucket.  NULLs -> 0 (sort first),
-    NaN -> buckets+2 (sorts last in Spark), everything else via
-    ``width_bucket`` over the non-NaN min/max.  One bucket when the
-    cast to double is not order-preserving or the range is empty or
-    degenerate (NaN rows still go to the top bucket).
+def _range_bucket(df: DataFrame, order: Column, buckets: int,
+                  dtype: Optional[DataType] = None,
+                  known_range: tuple[float, float] | None = None, *,
+                  col=F.col, lit=F.lit) -> tuple[DataFrame, Column]:
+    """A range bucket of ``order``, as ``(frame, bucket)``: the caller
+    selects ``bucket`` from ``frame`` in its own stage and lists only
+    ``df``'s columns beside it.  Bucket ids are non-decreasing along
+    the column's sort order and equal values share a bucket.  NULLs
+    -> 0 (sort first), NaN -> buckets+2 (sorts last in Spark),
+    everything else via ``width_bucket`` over the non-NaN min/max.
+    One bucket when the cast to double is not order-preserving or the
+    range is empty or degenerate (NaN rows still go to the top
+    bucket).  ``dtype`` is ``order``'s type; when None it is probed
+    with a select.
 
     The min/max is a scalar aggregate broadcast cross-joined back, the
-    ``_with_global_max`` shape: it runs inside the query, so building
-    the plan launches no job, and the single-partition step it adds
-    carries one partial-aggregate row per input partition.
+    ``_with_global_max`` shape: ``frame`` is ``df`` plus the two
+    ``__rb_mn``/``__rb_mx`` columns.  It runs inside the query, so
+    building the plan launches no job, and the single-partition step
+    it adds carries one partial-aggregate row per input partition.
 
     ``known_range``: static (lo, hi) bounds covering every possible
     value of ``order``.  Callers whose order key is a seeded hash know
     its codomain (xxhash64: full int64; md5-60bit: [0, 2^60)); with it
-    the bounds are literals and the min/max pass is not planned at
-    all.  Its boundaries differ from the observed-range ones, but every
-    consumer only needs a monotone bucketing, so results are
-    unchanged."""
-    num = _order_as_double(df, order) if buckets > 1 else None
+    the bounds are literals, the min/max pass is not planned at all
+    and ``frame`` is ``df``.  Its boundaries differ from the
+    observed-range ones, but every consumer only needs a monotone
+    bucketing, so results are unchanged."""
+    if buckets <= 1:
+        return df, lit(1)
+    if dtype is None:
+        dtype = df.select(order).schema[0].dataType
+    num = _order_as_double(order, dtype)
     if num is None:
-        return df.withColumn(out, F.lit(1))
+        return df, lit(1)
+    nan = F.isnan(num)
     if known_range is None:
-        safe = F.when(F.isnan(num), F.lit(None)).otherwise(num)
+        safe = F.when(nan, None).otherwise(num)
         rng = df.select(F.min(safe).alias("__rb_mn"),
                         F.max(safe).alias("__rb_mx"))
-        d = df.crossJoin(F.broadcast(rng))
-        mn, mx = F.col("__rb_mn"), F.col("__rb_mx")
+        df = df.crossJoin(F.broadcast(rng))
+        mn, mx = col("__rb_mn"), col("__rb_mx")
     else:
-        d = df
-        mn, mx = (F.lit(float(v)) for v in known_range)
-    base = F.when(mn.isNull() | (mn == mx), F.lit(1)).otherwise(
-        F.coalesce(F.width_bucket(num, mn, mx, F.lit(buckets)),
-                   F.lit(0)))        # nulls sort first
-    d = d.withColumn(out, F.when(F.isnan(num), F.lit(buckets + 2))
-                          .otherwise(base))
-    return d if known_range is not None else d.drop("__rb_mn", "__rb_mx")
+        mn, mx = (lit(float(v)) for v in known_range)
+    # ifnull: two-argument coalesce (the optimizer rewrites it into
+    # one), sent without the Java list coalesce's varargs need
+    base = F.when(mn.isNull() | (mn == mx), 1).otherwise(
+        F.ifnull(F.width_bucket(num, mn, mx, lit(buckets)),
+                 lit(0)))            # nulls sort first
+    return df, F.when(nan, buckets + 2).otherwise(base)
 
 
-def _lazy_prefix_offsets(d: DataFrame, bkt_col: str, measure,
+def _lazy_prefix_offsets(d: DataFrame, bkt_col: str, measure: Column,
                          off_name: str,
-                         total_name: str | None = None) -> DataFrame:
+                         total_name: str | None = None, *,
+                         col=F.col, lit=F.lit) -> DataFrame:
     """LAZY per-bucket prefix offsets (r14 shape, shared by
     token_budget_filter / shard_corpus / _global_index):
     ``off(b) = sum of measure over buckets < b``, built inside the plan
     as bucket aggregate -> cumulative window -> (caller broadcasts it
-    back).  The window runs over at most buckets+3 aggregated rows on
-    one task (NULL bucket 0, width_bucket 1..buckets+1, NaN bucket
-    buckets+2) — the corpus itself is touched only by the
-    partial-aggregated sum.  The first bucket (empty window frame)
-    coalesces to 0, identical to the removed eager driver-collect
-    form.  With ``total_name`` the same fold also exposes the
-    table-wide sum as a column (an unbounded frame over the identical
-    tiny window — zero extra passes; r15, closing the last eager
-    collect in _global_index).  The plan-quality suite pins this exact
-    shape (_assert_single_partition_only_over_bucket_agg)."""
-    wo = W.orderBy(bkt_col).rowsBetween(W.unboundedPreceding, -1)
-    cols = [F.col(bkt_col),
-            F.coalesce(F.sum("__lpo_m").over(wo),
-                       F.lit(0)).alias(off_name)]
+    back), in one ``agg``: the window sums the per-bucket aggregate,
+    as ``sum(count(*)) over (order by b)`` does in SQL.  The window
+    runs over at most buckets+3 aggregated rows on one task (NULL
+    bucket 0, width_bucket 1..buckets+1, NaN bucket buckets+2) — the
+    corpus itself is touched only by the partial-aggregated sum.  The
+    first bucket (empty window frame) coalesces to 0, identical to the
+    removed eager driver-collect form.  With ``total_name`` the same
+    fold also exposes the table-wide sum as a column (an unbounded
+    frame over the identical tiny window — zero extra passes; r15,
+    closing the last eager collect in _global_index).  The
+    plan-quality suite pins this exact shape
+    (_assert_single_partition_only_over_bucket_agg)."""
+    b = col(bkt_col)
+    by_bkt = W.orderBy(b)
+    wo = by_bkt.rowsBetween(W.unboundedPreceding, -1)
+    # ifnull: two-argument coalesce, as in _range_bucket
+    cols = [F.ifnull(F.sum(measure).over(wo), lit(0)).alias(off_name)]
     if total_name is not None:
-        wa = W.orderBy(bkt_col).rowsBetween(W.unboundedPreceding,
-                                            W.unboundedFollowing)
-        cols.append(F.sum("__lpo_m").over(wa).alias(total_name))
-    return (d.groupBy(bkt_col)
-             .agg(measure.alias("__lpo_m"))
-             .select(*cols))
+        wa = by_bkt.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        cols.append(F.sum(measure).over(wa).alias(total_name))
+    return d.groupBy(b).agg(*cols)
 
 
 def _global_index(df: DataFrame, order: Column,
                   idx_name: str = "__idx",
                   buckets: Optional[int] = None,
                   known_range: tuple[float, float] | None = None,
-                  total_name: str | None = None) -> DataFrame:
-    """Total-order row numbering without a single-partition sort.
+                  total_name: str | None = None, *,
+                  dtype: Optional[DataType] = None,
+                  col=F.col, lit=F.lit) -> DataFrame:
+    """Total-order row numbering without a single-partition sort:
+    ``df``'s columns, then ``total_name`` (if asked), then
+    ``idx_name``.
 
     Three distributed phases, all inside the plan (building it runs no
     job):
@@ -242,20 +275,24 @@ def _global_index(df: DataFrame, order: Column,
     so callers needing "last N of the total order" filter in-plan
     instead of forcing an eager counting pass.
     """
-    spark = df.sparkSession
     if buckets is None:
-        buckets = spark.sparkContext.defaultParallelism
-    df = _range_bucket(df, order, buckets, "__bkt", known_range=known_range)
-    off_df = _lazy_prefix_offsets(df, "__bkt", F.count(F.lit(1)),
-                                  "__off", total_name=total_name)
-    lrn = F.row_number().over(W.partitionBy("__bkt").orderBy(order))
-    return (df.join(F.broadcast(off_df), "__bkt")
-              .withColumn(idx_name, (F.col("__off") + lrn).cast("long"))
-              .drop("__bkt", "__off"))
+        buckets = df.sparkSession.sparkContext.defaultParallelism
+    d, bkt = _range_bucket(df, order, buckets, dtype, known_range,
+                           col=col, lit=lit)
+    kept = df["*"]
+    d = d.select(kept, bkt.alias("__bkt"))
+    off_df = _lazy_prefix_offsets(d, "__bkt", F.count(lit(1)), "__off",
+                                  total_name, col=col, lit=lit)
+    lrn = F.row_number().over(W.partitionBy(col("__bkt")).orderBy(order))
+    total = [col(total_name)] if total_name is not None else []
+    return (d.join(F.broadcast(off_df), "__bkt")
+             .select(kept, *total,
+                     (col("__off") + lrn).cast("long").alias(idx_name)))
 
 
 def _latest_session_distributed(df: DataFrame, time_col: Column,
-                                gap: Column) -> DataFrame:
+                                gap: Column, dtype: Optional[DataType],
+                                col, lit) -> DataFrame:
     """Rows of the latest gap-delimited run of a total time order,
     without a single-partition Window over the rows.
 
@@ -268,27 +305,29 @@ def _latest_session_distributed(df: DataFrame, time_col: Column,
     a scalar max over session-start rows.  Every pass is in-plan and
     column-pruned; none moves corpus rows through one task."""
     buckets = df.sparkSession.sparkContext.defaultParallelism
-    d = _range_bucket(df, time_col, buckets, "__bkt")
-    bprev = (d.groupBy("__bkt").agg(F.max(time_col).alias("__bm"))
-              .select("__bkt", F.lag("__bm").over(W.orderBy("__bkt"))
-                                 .alias("__prev_bmax")))
-    w = W.partitionBy("__bkt").orderBy(time_col)
+    d, bkt = _range_bucket(df, time_col, buckets, dtype, col=col, lit=lit)
+    kept = df["*"]
+    d = d.select(kept, bkt.alias("__bkt"))
+    b = col("__bkt")
+    bprev = (d.groupBy(b).agg(F.max(time_col).alias("__bm"))
+              .select(b, F.lag(col("__bm")).over(W.orderBy(b))
+                          .alias("__prev_bmax")))
+    w = W.partitionBy(b).orderBy(time_col)
+    prev = F.coalesce(F.lag(time_col).over(w), col("__prev_bmax"))
     d = (d.join(F.broadcast(bprev), "__bkt")
-          .withColumn("__prev", F.coalesce(F.lag(time_col).over(w),
-                                           F.col("__prev_bmax"))))
-    new_sess = F.col("__prev").isNull() | (time_col > F.col("__prev") + gap)
-    d = d.withColumn("__ns", new_sess)
-    start = d.filter("__ns").select(F.max(time_col).alias("__start"))
+          .select(kept, prev.alias("__prev")))
+    new_sess = col("__prev").isNull() | (time_col > col("__prev") + gap)
+    start = d.filter(new_sess).select(F.max(time_col).alias("__start"))
     return (d.crossJoin(F.broadcast(start))
-             .filter(time_col >= F.col("__start"))
-             .drop("__bkt", "__prev_bmax", "__prev", "__ns", "__start"))
+             .filter(time_col >= col("__start"))
+             .select(kept))
 
 
-def _with_global_max(df: DataFrame, col: Column, out_name: str) -> DataFrame:
-    """Attach the table-wide max of ``col`` as a column via a scalar
+def _with_global_max(df: DataFrame, c: Column, out_name: str) -> DataFrame:
+    """Attach the table-wide max of ``c`` as a column via a scalar
     aggregate + broadcast cross join (two-phase, distributed) instead of
     a single-partition whole-table Window."""
-    mx = df.select(F.max(col).alias(out_name))
+    mx = df.select(F.max(c).alias(out_name))
     return df.crossJoin(F.broadcast(mx))
 
 
@@ -297,7 +336,11 @@ def _with_global_max(df: DataFrame, col: Column, out_name: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def last_window_filter(df: DataFrame, spec: WindowSpec,
-                       time_col: Optional[Column]) -> DataFrame:
+                       time_col: Optional[str], *,
+                       col=F.col, lit=F.lit) -> DataFrame:
+    """``df``'s rows of the latest window, with ``df``'s columns.
+    ``time_col`` is the event-time column's name; ``col``/``lit``
+    build column and literal handles (the planner passes its memos)."""
     if df.isStreaming:
         raise PlanError(
             "snapshot (non-aggregating) window queries are batch-emulation "
@@ -305,66 +348,69 @@ def last_window_filter(df: DataFrame, spec: WindowSpec,
             "aggregate over the window or run in batch mode")
     size = spec.size
     axis = _axis(size)
-    parts = _partition_cols(spec)
+    parts = _partition_cols(spec, col)
+    tc = col(time_col) if time_col is not None else None
 
     if spec.kind == "session":
         # "the latest session" as a snapshot: rows of the most recent
         # gap-delimited run (per partition key if given)
-        if axis != "time" or time_col is None:
+        if axis != "time" or tc is None:
             raise PlanError("session window needs a time gap and an "
                             "event-time column")
         gap = F.expr(f"INTERVAL {duration_str(size)}")
         if parts:
-            w = W.partitionBy(*parts).orderBy(time_col)
-            prev = F.lag(time_col).over(w)
-            new_sess = (prev.isNull() |
-                        (time_col > prev + gap)).cast("int")
+            w = W.partitionBy(*parts).orderBy(tc)
+            prev = F.lag(tc).over(w)
+            new_sess = (prev.isNull() | (tc > prev + gap)).cast("int")
             run = F.sum(new_sess).over(
-                W.partitionBy(*parts).orderBy(time_col)
+                W.partitionBy(*parts).orderBy(tc)
                 .rowsBetween(W.unboundedPreceding, W.currentRow))
-            return (df.withColumn("__run", run)
-                      .withColumn("__mxrun",
-                                  F.max("__run").over(W.partitionBy(*parts)))
-                      .filter(F.col("__run") == F.col("__mxrun"))
-                      .drop("__run", "__mxrun"))
-        return _latest_session_distributed(df, time_col, gap)
+            d = df.select(col("*"), run.alias("__run"))
+            d = d.select(col("*"), F.max(col("__run"))
+                         .over(W.partitionBy(*parts)).alias("__mxrun"))
+            return (d.filter(col("__run") == col("__mxrun"))
+                     .select(df["*"]))
+        return _latest_session_distributed(
+            df, tc, gap, _column_type(df, time_col), col, lit)
 
     if axis == "count":
-        order = _order_col(spec, time_col)
+        order = _order_col(spec, tc)
         if parts:
             w = W.partitionBy(*parts).orderBy(order.desc())
-            return (df.withColumn("__rn", F.row_number().over(w))
-                      .filter(F.col("__rn") <= size.value)
-                      .drop("__rn"))
+            return (df.select(col("*"), F.row_number().over(w)
+                              .alias("__rn"))
+                      .filter(col("__rn") <= size.value)
+                      .select(df["*"]))
         # last N of a total order: ascending distributed index + the
         # in-plan total (one lazy fold serves both — no eager count)
-        df = _global_index(df, order, "__rn", total_name="__rn_total")
-        return (df.filter(F.col("__rn") > F.col("__rn_total")
-                          - size.value)
-                  .drop("__rn", "__rn_total"))
+        d = _global_index(df, order, "__rn", total_name="__rn_total",
+                          dtype=_column_type(df, time_col),
+                          col=col, lit=lit)
+        return (d.filter(col("__rn") > col("__rn_total") - size.value)
+                 .select(df["*"]))
 
     if axis == "time":
-        if time_col is None:
+        if tc is None:
             raise PlanError("time window needs `on <col>` or stream "
                             "event_time_col metadata")
         span = F.expr(f"INTERVAL {duration_str(size)}")
         if parts:
-            mx = F.max(time_col).over(W.partitionBy(*parts))
-            df = df.withColumn("__mx", mx)
+            d = df.select(col("*"), F.max(tc).over(W.partitionBy(*parts))
+                          .alias("__mx"))
         else:
-            df = _with_global_max(df, time_col, "__mx")
-        return df.filter(time_col > F.col("__mx") - span).drop("__mx")
+            d = _with_global_max(df, tc, "__mx")
+        return d.filter(tc > col("__mx") - span).select(df["*"])
 
     # delta axis: numeric column, extent = last `value` units of the column
     c = size.on_col
-    axis_col = F.col(f"{c.binding}.{c.name}" if c.binding else c.name)
+    axis_col = col(f"{c.binding}.{c.name}" if c.binding else c.name)
     if parts:
-        mx = F.max(axis_col).over(W.partitionBy(*parts))
-        df = df.withColumn("__mx", mx)
+        d = df.select(col("*"), F.max(axis_col)
+                      .over(W.partitionBy(*parts)).alias("__mx"))
     else:
-        df = _with_global_max(df, axis_col, "__mx")
-    return (df.filter(axis_col > F.col("__mx") - F.lit(size.value))
-              .drop("__mx"))
+        d = _with_global_max(df, axis_col, "__mx")
+    return (d.filter(axis_col > col("__mx") - size.value)
+             .select(df["*"]))
 
 
 # --------------------------------------------------------------------------
@@ -372,13 +418,18 @@ def last_window_filter(df: DataFrame, spec: WindowSpec,
 # --------------------------------------------------------------------------
 
 def window_grouping(df: DataFrame, spec: WindowSpec,
-                    time_col: Optional[Column]):
-    """Returns (df', group_cols, out_cols) where out_cols is a list of
-    (name, Column-over-agg-result) exposing window bounds."""
+                    time_col: Optional[str], *, col=F.col, lit=F.lit):
+    """Returns (df', group_cols, out_cols).  ``df'`` is ``df`` plus
+    the columns the grouping needs computed first (the count axis's
+    row index, a sliding window's exploded trigger); ``group_cols``
+    are grouping expressions for the caller's ``groupBy``;
+    ``out_cols`` is a list of (name, Column-over-agg-result) exposing
+    window bounds.  ``time_col`` is the event-time column's name."""
     size, every = spec.size, spec.every
     axis = _axis(size)
-    parts = _partition_cols(spec)
+    parts = _partition_cols(spec, col)
     _check_every_axis(axis, every)
+    tc = col(time_col) if time_col is not None else None
 
     if spec.kind == "session":
         # gap-based session window (extension): merges rows whose
@@ -390,27 +441,25 @@ def window_grouping(df: DataFrame, spec: WindowSpec,
         if every is not None:
             raise PlanError("session windows take no `every` clause "
                             "(the gap defines the boundary)")
-        if time_col is None:
+        if tc is None:
             raise PlanError("session window needs `on <col>` or stream "
                             "event_time_col metadata")
-        win = F.session_window(time_col, duration_str(size))
-        df = df.withColumn("__win", win)
-        out = [("window_start", F.col("__win.start")),
-               ("window_end", F.col("__win.end"))]
-        return df, [F.col("__win")], out
+        win = F.session_window(tc, duration_str(size))
+        out = [("window_start", col("__win.start")),
+               ("window_end", col("__win.end"))]
+        return df, [win.alias("__win")], out
 
     if axis == "time":
-        if time_col is None:
+        if tc is None:
             raise PlanError("time window needs `on <col>` or stream "
                             "event_time_col metadata")
         if every is not None:
-            win = F.window(time_col, duration_str(size), duration_str(every))
+            win = F.window(tc, duration_str(size), duration_str(every))
         else:
-            win = F.window(time_col, duration_str(size))
-        df = df.withColumn("__win", win)
-        out = [("window_start", F.col("__win.start")),
-               ("window_end", F.col("__win.end"))]
-        return df, [F.col("__win")], out
+            win = F.window(tc, duration_str(size))
+        out = [("window_start", col("__win.start")),
+               ("window_end", col("__win.end"))]
+        return df, [win.alias("__win")], out
 
     if axis == "count":
         if df.isStreaming:
@@ -418,51 +467,44 @@ def window_grouping(df: DataFrame, spec: WindowSpec,
                 "count-based windows on a streaming relation need the "
                 "stateful operator: flink_dsl_spark.streaming.stateful."
                 "count_window_agg (row_number emulation is batch-only)")
-        order = _order_col(spec, time_col)
+        order = _order_col(spec, tc)
         n = size.value
-        if every is None:
-            # tumbling count window: groups of N consecutive rows —
-            # the total is never needed, so don't compute one
-            if parts:
-                w = W.partitionBy(*parts).orderBy(order)
-                df = df.withColumn("__idx", F.row_number().over(w))
-            else:
-                df = _global_index(df, order, "__idx")
-            df = df.withColumn(
-                "__win_no", F.floor((F.col("__idx") - 1) / F.lit(n)))
-            return df, [F.col("__win_no")], [("window_no", F.col("__win_no"))]
-        total = None
+        # the trigger high-water mark of a sliding window needs the
+        # table-wide row count: served in-plan by the same lazy
+        # offsets fold; a tumbling window never needs it
+        total = "__idx_total" if every is not None and not parts \
+            else None
         if parts:
             w = W.partitionBy(*parts).orderBy(order)
-            df = df.withColumn("__idx", F.row_number().over(w))
+            df = df.select(col("*"), F.row_number().over(w).alias("__idx"))
         else:
-            # the trigger high-water mark needs the table-wide row
-            # count: served in-plan by the same lazy offsets fold
-            df = _global_index(df, order, "__idx",
-                               total_name="__idx_total")
-            total = F.col("__idx_total")
-        m = every.value
-        df = _explode_triggers(df, F.col("__idx"), n, m, parts,
-                               integral=True, maxpos=total)
-        if total is not None:
-            df = df.drop("__idx_total")
-        return df, [F.col("__trigger")], [("trigger", F.col("__trigger"))]
+            df = _global_index(df, order, "__idx", total_name=total,
+                               dtype=_column_type(df, time_col),
+                               col=col, lit=lit)
+        if every is None:
+            # tumbling count window: groups of N consecutive rows
+            win_no = F.floor((col("__idx") - 1) / n).alias("__win_no")
+            return df, [win_no], [("window_no", col("__win_no"))]
+        df = _explode_triggers(df, col("__idx"), n, every.value, parts,
+                               maxpos=col(total) if total else None,
+                               col=col, lit=lit)
+        return df, [col("__trigger")], [("trigger", col("__trigger"))]
 
     # delta axis
     c = size.on_col
-    axis_col = F.col(f"{c.binding}.{c.name}" if c.binding else c.name)
+    axis_col = col(f"{c.binding}.{c.name}" if c.binding else c.name)
     v = size.value
     if every is None:
-        df = df.withColumn("__win_no", F.floor(axis_col / F.lit(v)))
-        return df, [F.col("__win_no")], [("window_no", F.col("__win_no"))]
-    m = every.value
-    df = _explode_triggers(df, axis_col, v, m, parts, integral=False)
-    return df, [F.col("__trigger")], [("trigger", F.col("__trigger"))]
+        win_no = F.floor(axis_col / v).alias("__win_no")
+        return df, [win_no], [("window_no", col("__win_no"))]
+    df = _explode_triggers(df, axis_col, v, every.value, parts,
+                           col=col, lit=lit)
+    return df, [col("__trigger")], [("trigger", col("__trigger"))]
 
 
 def _explode_triggers(df: DataFrame, pos: Column, size: int, every: int,
-                      parts: list[Column], integral: bool,
-                      maxpos=None) -> DataFrame:
+                      parts: list[Column], maxpos: Optional[Column] = None,
+                      *, col, lit) -> DataFrame:
     """Sliding windows on a count/numeric axis without a self-join.
 
     A window fires at every trigger T (multiple of ``every``) and covers
@@ -473,14 +515,14 @@ def _explode_triggers(df: DataFrame, pos: Column, size: int, every: int,
     beyond the aggregation's own).  Triggers that lie beyond the last seen
     position (per partition) have not fired yet and are dropped.
 
-    ``maxpos`` may be an int literal or an in-plan Column (r15: the
-    count axis hands over the lazy total column instead of an eagerly
-    collected count).
+    ``maxpos`` is an in-plan Column holding the last position (r15:
+    the count axis hands over the lazy total column instead of an
+    eagerly collected count); without it the mark is computed here.
+    The result is ``df`` plus ``__trigger`` (and ``__maxpos`` when the
+    mark was computed here).
     """
-    from pyspark.sql import Column as _Column
-    first = (F.ceil(pos / F.lit(every)) * F.lit(every)).cast("long")
-    last = (F.ceil((pos + F.lit(size)) / F.lit(every)) * F.lit(every)
-            - F.lit(every)).cast("long")
+    first = (F.ceil(pos / every) * every).cast("long")
+    last = (F.ceil((pos + size) / every) * every - every).cast("long")
     # every > size yields sampling windows: a row between two triggers'
     # extents belongs to NO window (first > last).  Guard the sequence —
     # an unguarded first > last raises Spark's "Illegal sequence
@@ -488,23 +530,21 @@ def _explode_triggers(df: DataFrame, pos: Column, size: int, every: int,
     # correct sampling semantics.
     triggers = F.when(
         first <= last,
-        F.sequence(first, last, F.lit(every).cast("long"))
+        F.sequence(first, last, lit(every).cast("long"))
     ).otherwise(F.array().cast("array<long>"))
     # The high-water mark must attach BEFORE the explode: in sampling
     # mode (every > size) rows whose trigger list is empty vanish at
     # explode, and a post-explode max would shrink to the last row that
     # kept a trigger, wrongly dropping the final fired window.  A known
-    # total (count axis) is a literal; per-key marks use a keyed window;
-    # a global mark uses a broadcast scalar — never a single-partition
-    # whole-table Window.
-    if maxpos is not None:
-        df = df.withColumn("__maxpos",
-                           maxpos if isinstance(maxpos, _Column)
-                           else F.lit(maxpos))
-    elif parts:
-        df = df.withColumn("__maxpos",
-                           F.max(pos).over(W.partitionBy(*parts)))
-    else:
-        df = _with_global_max(df, pos, "__maxpos")
-    df = df.withColumn("__trigger", F.explode(triggers))
-    return df.filter(F.col("__trigger") <= F.col("__maxpos")).drop("__maxpos")
+    # total (count axis) is a column already; per-key marks use a
+    # keyed window; a global mark uses a broadcast scalar — never a
+    # single-partition whole-table Window.
+    if maxpos is None:
+        if parts:
+            df = df.select(col("*"), F.max(pos).over(W.partitionBy(*parts))
+                           .alias("__maxpos"))
+        else:
+            df = _with_global_max(df, pos, "__maxpos")
+        maxpos = col("__maxpos")
+    df = df.select(col("*"), F.explode(triggers).alias("__trigger"))
+    return df.filter(col("__trigger") <= maxpos)

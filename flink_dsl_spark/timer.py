@@ -1,6 +1,8 @@
 """Phase timer (parity: fsql/timer.scala:3-16, used at
 fsql/parser.scala:414-423 to time the `parser` and `resolve` phases).
-We add the `plan` phase; timings feed bench.py."""
+We add the `plan` phase; timings feed bench.py.  ``count_py4j`` counts
+the JVM round trips a block of driver code makes, the unit the Python
+planner pays for (bench.py and the plan-build tests read it)."""
 
 from __future__ import annotations
 
@@ -26,3 +28,25 @@ class Timer:
 
     def reset(self):
         self.phases.clear()
+
+
+@contextmanager
+def count_py4j(spark):
+    """Collect the py4j commands the driver sends inside the block into
+    the yielded list.  Memory commands (``m``: deletes of
+    Python-collected JVM references) are skipped because the garbage
+    collector times them."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        del client.send_command

@@ -1,9 +1,10 @@
-import contextlib
-
 import duckdb
 import pytest
 
 from flink_dsl_spark import FsqlEngine, get_session
+# the py4j command counter lives in the package (bench.py reads it
+# too); the tests import it from here
+from flink_dsl_spark.timer import count_py4j  # noqa: F401
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -53,28 +54,6 @@ def drain_to_memory(df, output_mode="append"):
          .outputMode(output_mode).trigger(availableNow=True).start())
     assert q.awaitTermination(120), f"stream {name} did not finish"
     return name
-
-
-@contextlib.contextmanager
-def count_py4j(spark):
-    """Collect the py4j commands the driver sends inside the block into
-    the yielded list.  Memory commands (``m``: deletes of
-    Python-collected JVM references) are skipped because the garbage
-    collector times them."""
-    client = spark.sparkContext._gateway._gateway_client
-    sent = []
-    send = client.send_command
-
-    def counting(command, *args, **kwargs):
-        if not command.startswith("m"):
-            sent.append(command)
-        return send(command, *args, **kwargs)
-
-    client.send_command = counting
-    try:
-        yield sent
-    finally:
-        del client.send_command
 
 
 def normalize(pdf):

@@ -270,3 +270,46 @@ def test_stream_dir_shared_per_file(spark, monkeypatch, tmp_path):
             eng.sql(f"select event_id, user_id, value from {name}"))
         got = normalize(spark.table(sink).toPandas())
         assert got.equals(want), name
+
+
+def test_file_source_stream_restores_nano_timestamps(spark, tmp_path):
+    """A batch-mode ``create stream ... source file('<file>.parquet')``
+    restores a TIMESTAMP(NANOS) column the way ``register_parquet``
+    does: the same types and the same row (not the raw nano count
+    ``nanosAsLong`` reads as a long)."""
+    path = str(tmp_path / "one_ns.parquet")
+    pq.write_table(pa.table({
+        "ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns")),
+        "v": pa.array([1], pa.int64())}), path)
+    eng = FsqlEngine(spark)
+    try:
+        eng.register_parquet("ns_tab", path)
+        eng.sql(f"create stream ns_file source file('{path}')")
+        want = eng.catalog.get("ns_tab")
+        got = eng.catalog.get("ns_file")
+        assert got.dtypes == want.dtypes == [("ts", "timestamp"),
+                                              ("v", "bigint")]
+        assert got.collect() == want.collect()
+    finally:
+        eng.close()
+
+
+def test_close_removes_stream_dirs(spark, monkeypatch, tmp_path):
+    """``close()`` removes the symlink directory the engine made for a
+    single-file stream, and a stream drained before it still returned
+    every row of the file; the file itself stays."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ev = f"{SF}/events.parquet"
+    eng = FsqlEngine(spark)
+    eng.register_stream_parquet("ev_closing", ev)
+    (d,) = [p for p in tmp_path.iterdir()
+            if p.name.startswith("fsql_stream_")]
+    q = eng.start_sink(eng.sql("select event_id from ev_closing"),
+                       name="closing_sink")
+    assert q.awaitTermination(120)
+    eng.close()
+    assert not d.exists()
+    assert os.path.isfile(ev)
+    got = sorted(r[0] for r in spark.table("closing_sink").collect())
+    assert got == sorted(r[0] for r in spark.read.parquet(ev)
+                         .select("event_id").collect())
