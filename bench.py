@@ -224,6 +224,11 @@ def main():
     ambient = {"cold": _ambient_cores(snap0, snap1),
                "steady": _ambient_cores(snap1, snap2),
                "gate_cores": gate}
+    # a cold pass that ran against more than `gate` cores of ambient
+    # CPU is flagged instead, by the test that re-runs a steady pass
+    amb_cold = ambient["cold"]
+    ambient["cold_suspect"] = (gate > 0 and amb_cold is not None
+                               and amb_cold["ambient_cores"] > gate)
     steady_first = None
     amb_steady = ambient["steady"]
     # ambient_cores is biased slightly high (reparented bench children

@@ -1788,7 +1788,7 @@ class Planner:
             order_cols = None
             if isinstance(leaf, TableRef) and self.catalog.has(leaf.name):
                 et = self.catalog.meta(leaf.name).event_time_col
-                if et:
+                if et and et in self.catalog.columns(leaf.name):
                     order_cols = [et]
             out = count_window_agg(
                 base, keys, aggs, spec.size.value,

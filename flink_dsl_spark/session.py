@@ -29,6 +29,20 @@ changes no name's meaning: PySpark's own star import of
 ``org.apache.spark.api.python.*`` already resolves ``PythonUtils`` to
 that same class, so every user of the gateway sees the class it saw
 before, found without the failed attempts.
+
+``spark.python.daemon.module=flink_dsl_spark.worker_daemon`` starts the
+Python workers (pandas UDFs, the ``applyInPandasWithState`` passes of
+count/delta windows and streaming OVER) from a daemon that stops each
+task re-reading ``pyspark.zip``'s central directory: PySpark calls
+``importlib.invalidate_caches()`` per task, which on CPython before 3.13
+re-parses the archive once per zipimporter (about 100 ms of worker CPU
+per task, 4 cores).  The daemon keeps the parsed directory while the
+archive's mtime and size are unchanged and then runs ``pyspark.daemon``
+as is (see ``worker_daemon.py``).  The workers must import
+``flink_dsl_spark``, as the engine's Python UDFs already must: run from
+the repository root or put it on ``PYTHONPATH``.  This too is a static
+conf, so a caller's own session handed to ``FsqlEngine`` keeps
+PySpark's daemon.
 """
 
 from __future__ import annotations
@@ -66,6 +80,7 @@ def get_session(app_name: str = "flink-dsl-spark",
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "flink_dsl_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     java_import(spark._jvm, "org.apache.spark.api.python.PythonUtils")

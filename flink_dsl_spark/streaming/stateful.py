@@ -96,8 +96,8 @@ def count_window_agg(sdf: DataFrame,
     every : trigger period in rows (``every M``); None = tumbling
     order_col : processing-order column(s) (str or list of str) —
         recommended: event time plus a unique tiebreaker, which makes
-        window contents fully deterministic; NULLs sort last.  Ignored
-        unless every named column is in ``sdf``.
+        window contents fully deterministic; NULLs sort last.  A name
+        not in ``sdf`` raises ``PlanError``.
 
     Returns a streaming DataFrame (append output mode) with schema
     ``key_cols + [window_no] + [alias...]`` for tumbling windows, or
@@ -115,8 +115,13 @@ def count_window_agg(sdf: DataFrame,
         raise PlanError("window size/every must be positive")
     order_cols = ([order_col] if isinstance(order_col, str)
                   else list(order_col or []))
-    if not all(c in sdf.columns for c in order_cols):
-        order_cols = []
+    missing = [c for c in order_cols if c not in sdf.columns]
+    if missing:
+        # arrival order instead would make window contents
+        # nondeterministic
+        raise PlanError(
+            f"count_window_agg: order column(s) {missing} not in the "
+            f"input columns {sdf.columns}")
 
     agg_cols = [c for _f, c, _a in aggs]
     keyed, key_fields = _keyed_input(sdf, key_cols,

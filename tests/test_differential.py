@@ -1,12 +1,18 @@
 """Differential property testing: hypothesis-generated queries execute
 through the engine (parse -> resolve -> plan -> Catalyst) AND through
 DuckDB (same AST rendered to ANSI SQL by sqlgen), results compared
-order-insensitively.  The two paths share only the parser, so this
-cross-checks resolver+planner against an independent executor on
-hundreds of generated queries.  Quantified comparisons (``op ALL/ANY/
-SOME (subquery)``) carry their own oracle text instead, spelled with
-EXISTS / NOT EXISTS: sqlgen would otherwise check its own rendering,
-and DuckDB mis-answers some correlated ``= ALL`` forms.
+order-insensitively.  For queries the DataFrame planner compiles, the
+two paths share only the parser, so this cross-checks resolver+planner
+against an independent executor on hundreds of generated queries.  A
+query with an IN/EXISTS/scalar/quantified subquery or a LATERAL derived
+table is different: the planner hands it to ``Planner._plan_via_sql``,
+which renders it with the same sqlgen for Spark, as does WITH RECURSIVE.
+For those, sqlgen's rewrites are checked only against themselves, and
+the test cross-checks the two executors, not the translation.
+Quantified comparisons (``op ALL/ANY/SOME (subquery)``) carry their own
+oracle text instead, spelled with EXISTS / NOT EXISTS: sqlgen would
+otherwise check its own rendering on both sides, and DuckDB mis-answers
+some correlated ``= ALL`` forms.
 """
 
 import pandas as pd

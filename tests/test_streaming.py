@@ -798,3 +798,20 @@ def test_start_sink_concurrent_starts_keep_their_counts(spark, sdf):
         assert q.awaitTermination(120) is True
         assert {op["numShufflePartitions"]
                 for op in q.lastProgress["stateOperators"]} == {want}
+
+
+def test_count_window_rejects_missing_order_col(sdf):
+    # arrival order instead would make window contents nondeterministic
+    with pytest.raises(PlanError, match="nope"):
+        count_window_agg(sdf, ["user"], [("sum", "value", "sv")], size=4,
+                         order_col=["ts", "nope"])
+
+
+def test_fsql_count_window_without_event_time_column_plans(spark, sdf):
+    # the planner passes the registered event-time column only when the
+    # relation has it
+    eng = FsqlEngine(spark)
+    eng.register("ev_no_ts", sdf.drop("ts"), event_time_col="ts")
+    out = eng.sql("select user, sum(value) as sv from ev_no_ts [size 4] "
+                  "group by user")
+    assert out.isStreaming
